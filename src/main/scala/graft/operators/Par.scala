@@ -14,30 +14,52 @@ package graft.operators
   *
   * Threads inherit the caller's job group / description (SparkContext
   * local properties are an InheritableThreadLocal), so a bench timeout
-  * or driver cancelJobGroup still reaches every branch's jobs.
+  * or `SparkContext.cancelJobGroup` still reaches every branch's jobs,
+  * and a tracer that attributes jobs to spans by job group sees them
+  * all.
+  * Each call also tags its branches' jobs with one fresh job tag: the
+  * first failure cancels the siblings' running jobs through that tag
+  * (not through a job group, which would displace the caller's).
   *
-  * All branches are ALWAYS joined before returning — an index write
-  * must not commit its manifest while a sibling relation job is still
-  * in flight — and the first failure rethrows after the join, so the
-  * commit-marker discipline (manifest written last, only on full
-  * success) is preserved exactly.
+  * All branches are joined before a non-fatal failure rethrows — an
+  * index write must not commit its manifest while a sibling relation
+  * job is still in flight — so the commit-marker discipline (manifest
+  * written last, only on full success) is preserved exactly. A
+  * `VirtualMachineError` rethrows at once: the JVM is in no state to
+  * wait on the rest.
   */
 object Par {
 
-  /** Run every thunk concurrently; rethrow the first failure after all
-    * have settled. Degenerates to inline execution for 0/1 thunks. */
+  /** Run every thunk concurrently; on the first failure cancel the
+    * siblings' jobs, and rethrow it once all have settled (at once if
+    * it is a `VirtualMachineError`). Degenerates to inline execution
+    * for 0/1 thunks. */
   def jobs(thunks: (() => Unit)*): Unit = {
     if (thunks.lengthCompare(1) <= 0) { thunks.foreach(_.apply()); return }
+    val sc = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).map(_.sparkContext)
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
     val firstErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val threads = thunks.zipWithIndex.map { case (f, i) =>
-      val t = new Thread(
-        () => try f() catch { case e: Throwable => firstErr.compareAndSet(null, e) },
-        s"graft-par-$i")
+    val settled = new java.util.concurrent.LinkedBlockingQueue[Option[Throwable]]()
+    thunks.zipWithIndex.foreach { case (f, i) =>
+      val t = new Thread(() => {
+        val outcome =
+          try { sc.foreach(_.addJobTag(tag)); f(); None }
+          catch {
+            case e: Throwable =>
+              if (firstErr.compareAndSet(null, e))
+                sc.foreach(_.cancelJobsWithTag(tag, s"sibling Par.jobs branch failed: $e"))
+              Some(e)
+          }
+        settled.put(outcome)
+      }, s"graft-par-$i")
       t.setDaemon(true)
       t.start()
-      t
     }
-    threads.foreach(_.join())
+    for (_ <- thunks.indices) settled.take() match {
+      case Some(e: VirtualMachineError) => throw e
+      case _ => ()
+    }
     val e = firstErr.get()
     if (e != null) throw e
   }

@@ -97,15 +97,17 @@ object GraftExtensions {
     }
   )
 
+  /** Prefixed so it does not replace Spark's built-in `hll_sketch_agg`
+    * (a DataSketches binary sketch, a different function). */
   val hllSketchAggDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hll_sketch_agg"),
-    new ExpressionInfo(classOf[HllSketchAgg].getName, "hll_sketch_agg"),
+    FunctionIdentifier("graft_hll_sketch_agg"),
+    new ExpressionInfo(classOf[HllSketchAgg].getName, "graft_hll_sketch_agg"),
     (children: Seq[Expression]) => {
-      require(children.length == 2, "hll_sketch_agg takes exactly 2 arguments (key, p)")
+      require(children.length == 2, "graft_hll_sketch_agg takes exactly 2 arguments (key, p)")
       val p = children(1) match {
         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
         case other => throw new IllegalArgumentException(
-          s"hll_sketch_agg: p must be an integer literal, got $other")
+          s"graft_hll_sketch_agg: p must be an integer literal, got $other")
       }
       HllSketchAgg(children.head, p)
     }

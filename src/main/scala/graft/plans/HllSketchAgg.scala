@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * back to the relational form and reuses the one estimate
   * implementation.
   *
-  * Registered as `hll_sketch_agg(key, p)` by [[GraftExtensions]]; `p`
+  * Registered as `graft_hll_sketch_agg(key, p)` by [[GraftExtensions]]; `p`
   * must be a foldable integer in [4, 20].
   */
 case class HllSketchAgg(
@@ -46,14 +46,14 @@ case class HllSketchAgg(
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "hll_sketch_agg"
+  override def prettyName: String = "graft_hll_sketch_agg"
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (p < 4 || p > 20)
-      TypeCheckResult.TypeCheckFailure(s"hll_sketch_agg: p must be in [4, 20], got $p")
+      TypeCheckResult.TypeCheckFailure(s"graft_hll_sketch_agg: p must be in [4, 20], got $p")
     else if (child.dataType != StringType)
       TypeCheckResult.TypeCheckFailure(
-        s"hll_sketch_agg requires a string key (cast upstream), got ${child.dataType.simpleString}")
+        s"graft_hll_sketch_agg requires a string key (cast upstream), got ${child.dataType.simpleString}")
     else TypeCheckResult.TypeCheckSuccess
 
   override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)

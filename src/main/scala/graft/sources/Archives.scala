@@ -256,7 +256,7 @@ object Archives {
             // then the raw LZMA stream; general-purpose bit 1 declares an
             // end-of-stream marker (size then comes from the marker, not
             // the directory). Decoded by synthesizing an .lzma alone
-            // header for the in-repo decoder, like the 7z LZMA coder.
+            // header for [[Xz.decompressAlone]].
             require(comp.length >= 9, s"zip: truncated LZMA entry header in '$name'")
             val propSize = (comp(2) & 0xff) | ((comp(3) & 0xff) << 8)
             require(propSize == 5, s"zip: LZMA properties size $propSize != 5 in '$name'")
@@ -420,11 +420,9 @@ object Archives {
 
   // -------------------------------------------------------------- auto
 
-  /** Magic dispatch: zip (PK), gzip (unwrap, recurse once — covers
-    * `.tar.gz`), else tar (validated by its own header checks). */
-  /** Magic-sniffed walk: zip, or tar under any of the five wrappers
-    * the dump ecosystem ships (gzip via the JDK, zstd/bzip2/xz/lz4 via
-    * the in-repo decoders — `tar.zst`, `tar.bz2`, `tar.xz` and
+  /** Magic-sniffed walk: zip, 7z, ar and cpio directly, or tar under
+    * any of the wrappers the dump ecosystem ships (gzip, zstd, bzip2,
+    * xz, lz4, framed snappy, .Z — `tar.zst`, `tar.bz2`, `tar.xz` and
     * `tar.lz4` are all routine in release/dump distribution). */
   def autoEntries(p: Array[Byte]): Seq[(String, Array[Byte])] = {
     require(p.length >= 4, "payload too short for any archive")

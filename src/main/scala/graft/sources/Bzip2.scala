@@ -1,364 +1,24 @@
 package graft.sources
 
-/** bzip2 stream decoder, pure JVM and from scratch — the format the
-  * long-lived encyclopedia/wiki dump ecosystem still distributes in
-  * (`*-pages-articles.xml.bz2`). The JDK has no bzip2; this tier plus
-  * [[Zstd]] and the JDK's gzip covers the three wrappers a crawl-scale
-  * corpus actually arrives in.
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
+
+/** bzip2 stream decoding — the format the long-lived encyclopedia/wiki
+  * dump ecosystem still distributes in (`*-pages-articles.xml.bz2`).
   *
-  * Decode-complete per the published format (the bzip2 manual and the
-  * widely mirrored format description; there is no RFC):
-  *  - stream header `BZh1`–`BZh9` (100k–900k block size), multi-stream
-  *    concatenation (pbzip2 output), byte-aligned between streams only;
-  *  - per block: 48-bit magic, block CRC, deprecated randomized mode
-  *    refused, 24-bit BWT origin pointer;
-  *  - sparse symbol map (16+16×16 bitmap), 2–6 Huffman groups with
-  *    MTF-encoded selectors switching every 50 symbols, delta-coded
-  *    code lengths, canonical Huffman (length then symbol order);
-  *  - RUNA/RUNB bijective-base-2 zero runs, move-to-front decode,
-  *    inverse BWT via the counting-sort successor vector, final RLE1
-  *    (4 equal bytes + count);
-  *  - block CRCs and the combined stream CRC are VERIFIED (CRC-32,
-  *    polynomial 0x04C11DB7, MSB-first — not the zlib reflection).
-  *
-  * Validation: `Bzip2Spec` pins byte-exact output against system-bzip2
-  * compressions of regenerable payloads (`tools/gen_bzip2_fixtures.py`)
-  * across levels -1/-3/-5/-9, multi-block and all entropy paths.
-  * Structural violations and CRC mismatches throw; callers' tiers
-  * quarantine under `keepCorrupt`.
-  */
+  * Decoded by commons-compress 1.28 (on the Spark classpath): `BZh1`–
+  * `BZh9` streams, multi-stream concatenation (pbzip2 output), the
+  * deprecated randomized blocks Hadoop's java writer still emits, and
+  * every block CRC plus the combined stream CRC verified; bytes after
+  * the last stream that do not start another one refuse. The wrapper
+  * adds the [[MaxOutput]] cap and refusals as
+  * `IllegalArgumentException`. `Bzip2Spec` pins byte-exact output
+  * against system-bzip2 compressions (`tools/gen_bzip2_fixtures.py`). */
 object Bzip2 {
 
   /** Hard cap on total decompressed output — corrupt-header safety. */
   val MaxOutput: Int = 1 << 30
 
-  private final class Bits(p: Array[Byte]) {
-    var pos: Long = 0 // absolute bit index, MSB-first within bytes
-    def read(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val b = pos + i
-        require(b < p.length.toLong * 8, "bzip2: truncated stream")
-        val bit = (p((b >> 3).toInt) >> (7 - (b & 7)).toInt) & 1
-        v = (v << 1) | bit
-        i += 1
-      }
-      pos += n
-      v
-    }
-    def readLong(n: Int): Long = {
-      val hi = read(n - 24).toLong
-      val lo = read(24).toLong
-      (hi << 24) | lo
-    }
-    def alignByte(): Unit = pos = (pos + 7) & ~7L
-    def atEnd: Boolean = { alignByte(); pos >= p.length.toLong * 8 }
-  }
-
-  // bzip2 CRC-32: 0x04C11DB7, MSB-first, init/final 0xFFFFFFFF
-  private val CrcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) { c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1; k += 1 }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  def decompress(p: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val bits = new Bits(p)
-    var firstStream = true
-    while (!bits.atEnd) {
-      // stream header (byte-aligned)
-      require(bits.read(8) == 'B' && bits.read(8) == 'Z' && bits.read(8) == 'h',
-        if (firstStream) "bzip2: bad stream magic" else "bzip2: trailing garbage after stream")
-      firstStream = false
-      val level = bits.read(8) - '0'
-      require(level >= 1 && level <= 9, "bzip2: bad block-size level")
-      val blockSize = level * 100000
-
-      var streamCrc = 0
-      var done = false
-      while (!done) {
-        val magic = bits.readLong(48)
-        if (magic == 0x177245385090L) {
-          val footerCrc = bits.readLong(32).toInt
-          require(footerCrc == streamCrc,
-            f"bzip2: stream CRC mismatch (0x$footerCrc%08x != 0x$streamCrc%08x)")
-          done = true
-        } else {
-          require(magic == 0x314159265359L, f"bzip2: bad block magic 0x$magic%012x")
-          val declaredCrc = bits.readLong(32).toInt
-          val blockBytes = decodeBlock(bits, blockSize)
-          var crc = 0xffffffff
-          var i = 0
-          while (i < blockBytes.length) {
-            crc = (crc << 8) ^ CrcTable(((crc >>> 24) ^ (blockBytes(i) & 0xff)) & 0xff)
-            i += 1
-          }
-          crc = ~crc
-          require(crc == declaredCrc,
-            f"bzip2: block CRC mismatch (0x$crc%08x != 0x$declaredCrc%08x)")
-          out.write(blockBytes, 0, blockBytes.length)
-          require(out.size() <= MaxOutput, "bzip2: output cap exceeded")
-          streamCrc = ((streamCrc << 1) | (streamCrc >>> 31)) ^ declaredCrc
-        }
-      }
-    }
-    out.toByteArray
-  }
-
-  /** The randomized-block schedule of the original bzip2 (RNUMS,
-    * 512 entries) — extracted at dev time from the public Hadoop
-    * BZip2Constants on the Spark classpath
-    * (`tools/extract_bz2_rand_table.java`), identical to the table in
-    * the public bzip2 sources since 0.9.0. */
-  private val RNums: Array[Int] = Array(
-    619, 720, 127, 481, 931, 816, 813, 233, 566, 247, 985, 724, 205, 454, 863, 491,
-    741, 242, 949, 214, 733, 859, 335, 708, 621, 574, 73, 654, 730, 472, 419, 436,
-    278, 496, 867, 210, 399, 680, 480, 51, 878, 465, 811, 169, 869, 675, 611, 697,
-    867, 561, 862, 687, 507, 283, 482, 129, 807, 591, 733, 623, 150, 238, 59, 379,
-    684, 877, 625, 169, 643, 105, 170, 607, 520, 932, 727, 476, 693, 425, 174, 647,
-    73, 122, 335, 530, 442, 853, 695, 249, 445, 515, 909, 545, 703, 919, 874, 474,
-    882, 500, 594, 612, 641, 801, 220, 162, 819, 984, 589, 513, 495, 799, 161, 604,
-    958, 533, 221, 400, 386, 867, 600, 782, 382, 596, 414, 171, 516, 375, 682, 485,
-    911, 276, 98, 553, 163, 354, 666, 933, 424, 341, 533, 870, 227, 730, 475, 186,
-    263, 647, 537, 686, 600, 224, 469, 68, 770, 919, 190, 373, 294, 822, 808, 206,
-    184, 943, 795, 384, 383, 461, 404, 758, 839, 887, 715, 67, 618, 276, 204, 918,
-    873, 777, 604, 560, 951, 160, 578, 722, 79, 804, 96, 409, 713, 940, 652, 934,
-    970, 447, 318, 353, 859, 672, 112, 785, 645, 863, 803, 350, 139, 93, 354, 99,
-    820, 908, 609, 772, 154, 274, 580, 184, 79, 626, 630, 742, 653, 282, 762, 623,
-    680, 81, 927, 626, 789, 125, 411, 521, 938, 300, 821, 78, 343, 175, 128, 250,
-    170, 774, 972, 275, 999, 639, 495, 78, 352, 126, 857, 956, 358, 619, 580, 124,
-    737, 594, 701, 612, 669, 112, 134, 694, 363, 992, 809, 743, 168, 974, 944, 375,
-    748, 52, 600, 747, 642, 182, 862, 81, 344, 805, 988, 739, 511, 655, 814, 334,
-    249, 515, 897, 955, 664, 981, 649, 113, 974, 459, 893, 228, 433, 837, 553, 268,
-    926, 240, 102, 654, 459, 51, 686, 754, 806, 760, 493, 403, 415, 394, 687, 700,
-    946, 670, 656, 610, 738, 392, 760, 799, 887, 653, 978, 321, 576, 617, 626, 502,
-    894, 679, 243, 440, 680, 879, 194, 572, 640, 724, 926, 56, 204, 700, 707, 151,
-    457, 449, 797, 195, 791, 558, 945, 679, 297, 59, 87, 824, 713, 663, 412, 693,
-    342, 606, 134, 108, 571, 364, 631, 212, 174, 643, 304, 329, 343, 97, 430, 751,
-    497, 314, 983, 374, 822, 928, 140, 206, 73, 263, 980, 736, 876, 478, 430, 305,
-    170, 514, 364, 692, 829, 82, 855, 953, 676, 246, 369, 970, 294, 750, 807, 827,
-    150, 790, 288, 923, 804, 378, 215, 828, 592, 281, 565, 555, 710, 82, 896, 831,
-    547, 261, 524, 462, 293, 465, 502, 56, 661, 821, 976, 991, 658, 869, 905, 758,
-    745, 193, 768, 550, 608, 933, 378, 286, 215, 979, 792, 961, 61, 688, 793, 644,
-    986, 403, 106, 366, 905, 644, 372, 567, 466, 434, 645, 210, 389, 550, 919, 135,
-    780, 773, 635, 389, 707, 100, 626, 958, 165, 504, 920, 176, 193, 713, 857, 265,
-    203, 50, 668, 108, 645, 990, 626, 197, 510, 357, 358, 850, 858, 364, 936, 638
-  )
-
-  private def decodeBlock(bits: Bits, blockSize: Int): Array[Byte] = {
-    // deprecated "randomised" blocks (bzip2 0.9.0's repetitive-input
-    // guard) still occur in the wild: Hadoop's Ant-derived java writer
-    // emits them for highly repetitive buffers (SequenceFile length
-    // blocks are the canonical trigger). De-randomize per the original
-    // bzip2 semantics: XOR bit 0 at positions scheduled by RNums.
-    val randomized = bits.read(1) == 1
-    val origPtr = bits.read(24)
-
-    // sparse symbol map
-    val used16 = bits.read(16)
-    val symbols = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var g = 0
-    while (g < 16) {
-      if ((used16 & (0x8000 >> g)) != 0) {
-        val m = bits.read(16)
-        var j = 0
-        while (j < 16) {
-          if ((m & (0x8000 >> j)) != 0) symbols += g * 16 + j
-          j += 1
-        }
-      }
-      g += 1
-    }
-    val nSyms = symbols.length
-    require(nSyms > 0, "bzip2: empty symbol map")
-    val alphaSize = nSyms + 2 // RUNA, RUNB, MTF 1..nSyms-1, EOB
-
-    val nGroups = bits.read(3)
-    require(nGroups >= 2 && nGroups <= 6, s"bzip2: $nGroups Huffman groups")
-    val nSelectors = bits.read(15)
-    require(nSelectors > 0, "bzip2: no selectors")
-
-    // selectors, MTF over group ids
-    val groupMtf = Array.tabulate(nGroups)(identity)
-    val selectors = new Array[Int](nSelectors)
-    var s = 0
-    while (s < nSelectors) {
-      var j = 0
-      while (bits.read(1) == 1) { j += 1; require(j < nGroups, "bzip2: selector overflow") }
-      val v = groupMtf(j)
-      while (j > 0) { groupMtf(j) = groupMtf(j - 1); j -= 1 }
-      groupMtf(0) = v
-      selectors(s) = v
-      s += 1
-    }
-
-    // delta-coded lengths, then canonical tables per group
-    final case class Huf(minLen: Int, maxLen: Int, startCode: Array[Int],
-        startIdx: Array[Int], count: Array[Int], perm: Array[Int])
-    val tables = Array.tabulate(nGroups) { _ =>
-      val len = new Array[Int](alphaSize)
-      var cur = bits.read(5)
-      var a = 0
-      while (a < alphaSize) {
-        var loop = true
-        while (loop) {
-          require(cur >= 1 && cur <= 20, s"bzip2: code length $cur")
-          if (bits.read(1) == 0) loop = false
-          else if (bits.read(1) == 0) cur += 1
-          else cur -= 1
-        }
-        len(a) = cur
-        a += 1
-      }
-      val minLen = len.min
-      val maxLen = len.max
-      val count = new Array[Int](maxLen + 2)
-      len.foreach(l => count(l) += 1)
-      val perm = new Array[Int](alphaSize)
-      var pp = 0
-      var l = minLen
-      while (l <= maxLen) {
-        var sym = 0
-        while (sym < alphaSize) {
-          if (len(sym) == l) { perm(pp) = sym; pp += 1 }
-          sym += 1
-        }
-        l += 1
-      }
-      val startCode = new Array[Int](maxLen + 2)
-      val startIdx = new Array[Int](maxLen + 2)
-      var code = 0
-      var idx = 0
-      l = minLen
-      while (l <= maxLen) {
-        startCode(l) = code
-        startIdx(l) = idx
-        code = (code + count(l)) << 1
-        idx += count(l)
-        l += 1
-      }
-      Huf(minLen, maxLen, startCode, startIdx, count, perm)
-    }
-
-    // symbol stream: RUNA/RUNB runs + MTF + EOB
-    val mtf = symbols.toArray.clone()
-    val bwt = new Array[Byte](blockSize)
-    var n = 0
-    var run = 0L
-    var runBit = 0
-    var groupPos = 0
-    var selIdx = -1
-    var table: Huf = null
-
-    def nextSym(): Int = {
-      if (groupPos == 0) {
-        selIdx += 1
-        require(selIdx < nSelectors, "bzip2: selectors exhausted")
-        table = tables(selectors(selIdx))
-        groupPos = 50
-      }
-      groupPos -= 1
-      var l = table.minLen
-      var v = bits.read(l)
-      while (v - table.startCode(l) >= table.count(l)) {
-        v = (v << 1) | bits.read(1)
-        l += 1
-        require(l <= table.maxLen, "bzip2: invalid Huffman code")
-      }
-      table.perm(table.startIdx(l) + (v - table.startCode(l)))
-    }
-
-    def flushRun(): Unit = {
-      require(run <= blockSize - n, "bzip2: run overruns block")
-      val b = mtf(0).toByte
-      var i = 0L
-      while (i < run) { bwt(n) = b; n += 1; i += 1 }
-      run = 0; runBit = 0
-    }
-
-    var eob = false
-    while (!eob) {
-      val sym = nextSym()
-      // A 900k block needs at most ~21 run bits; bound BEFORE the shift
-      // so corrupt input can't wrap the Long shift (mod 64) into a
-      // negative `run` that slips past flushRun's overrun guard.
-      if (sym <= 1) require(runBit <= 24, "bzip2: run length overflows block")
-      if (sym == 0) { run += 1L << runBit; runBit += 1 } // RUNA
-      else if (sym == 1) { run += 2L << runBit; runBit += 1 } // RUNB
-      else {
-        flushRun()
-        if (sym == alphaSize - 1) eob = true
-        else {
-          // MTF index sym-1
-          var j = sym - 1
-          val v = mtf(j)
-          while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-          mtf(0) = v
-          require(n < blockSize, "bzip2: block overruns")
-          bwt(n) = v.toByte
-          n += 1
-        }
-      }
-    }
-    require(origPtr < n, "bzip2: origin pointer out of range")
-
-    // inverse BWT: counting-sort successor vector
-    val freq = new Array[Int](256)
-    var i = 0
-    while (i < n) { freq(bwt(i) & 0xff) += 1; i += 1 }
-    val base = new Array[Int](256)
-    var total = 0
-    i = 0
-    while (i < 256) { base(i) = total; total += freq(i); i += 1 }
-    val next = new Array[Int](n)
-    i = 0
-    while (i < n) {
-      val c = bwt(i) & 0xff
-      next(base(c)) = i
-      base(c) += 1
-      i += 1
-    }
-
-    // walk + final RLE1 (4 equal bytes then a count byte of extras);
-    // randomized blocks de-randomize every BWT-walk byte (run-count
-    // bytes included) before the RLE1 logic, like the reference
-    val out = new java.io.ByteArrayOutputStream(n)
-    var pos = next(origPtr)
-    var prev = -1
-    var same = 0
-    var rNToGo = 0
-    var rNTPos = 0
-    i = 0
-    while (i < n) {
-      var b = bwt(pos) & 0xff
-      if (randomized) {
-        if (rNToGo == 0) { rNToGo = RNums(rNTPos); rNTPos = (rNTPos + 1) & 511 }
-        rNToGo -= 1
-        if (rNToGo == 1) b ^= 1
-      }
-      pos = next(pos)
-      i += 1
-      if (same == 4) {
-        // b is the repeat count, not data
-        var k = 0
-        while (k < b) { out.write(prev); k += 1 }
-        same = 0
-        prev = -1
-      } else {
-        if (b == prev) same += 1 else { same = 1; prev = b }
-        out.write(b)
-      }
-    }
-    require(same != 4, "bzip2: RLE1 run truncated at block end")
-    out.toByteArray
-  }
+  def decompress(p: Array[Byte]): Array[Byte] =
+    Streams.drain("bzip2", MaxOutput)(
+      new BZip2CompressorInputStream(new java.io.ByteArrayInputStream(p), true))
 }

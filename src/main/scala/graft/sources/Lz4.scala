@@ -1,6 +1,6 @@
 package graft.sources
 
-/** LZ4 decoder — pure JVM, from scratch against the two PUBLIC specs
+/** LZ4 decoder, from scratch against the two PUBLIC specs
   * (`lz4_Block_format.md`, `lz4_Frame_format.md`, lz4.github.io):
   *
   *  - **block format**: token = 4-bit literal length | 4-bit match
@@ -10,16 +10,24 @@ package graft.sources
   *    header checksum (`(xxh32 >> 8) & 0xff`), optional content size,
   *    optional dictionary id (refused by name — dict frames need the
   *    dictionary), per-block `B.Checksum` and trailing `C.Checksum`
-  *    xxHash32 verification, block-INdependent and block-DEPENDENT
-  *    (64 KiB carried history) modes, uncompressed blocks (high bit
-  *    of the block size), EndMark, skippable frames
-  *    (`0x184D2A50..5F`), and concatenated frames;
+  *    verification, block-INdependent and block-DEPENDENT (64 KiB
+  *    carried history) modes, uncompressed blocks (high bit of the
+  *    block size), EndMark, skippable frames (`0x184D2A50..5F`), and
+  *    concatenated frames;
   *  - **legacy frame** (magic `0x184C2102`, `lz4 -l`): 8 MiB blocks,
   *    ends at EOF or at a following magic.
   *
-  * xxHash32 is implemented from its public description (the xxHash
-  * spec repo) — both checksum legs verified against fixtures the
-  * system `lz4` CLI (v1.9.4) produced, byte-exact (`Lz4Spec`).
+  * Why this stays from scratch while xz, zstd, bzip2, .Z and 7z decode
+  * through the classpath libraries: commons-compress's
+  * `FramedLZ4CompressorInputStream` is the only classpath reader of
+  * block-dependent frames, and it decodes the `DecodeBench` lz4
+  * fixtures about 9x (HC frame) and 70x (block-dependent frame) slower
+  * than this walk; it also ignores the dictionary-id flag instead of
+  * refusing the frame. lz4-java's frame reader refuses block-dependent
+  * and legacy frames, and its block decoder cannot reach into a
+  * previous block. xxHash32 is lz4-java's. The fixtures the system
+  * `lz4` CLI (v1.9.4) produced pin both checksum legs byte-exact
+  * (`Lz4Spec`).
   *
   * Why LZ4 matters at 100 TB: it is the fast-path codec of the data
   * infrastructure the corpus transits — Hadoop/Spark shuffle, Kafka,
@@ -31,64 +39,20 @@ package graft.sources
   * (`cir_duplicate_detector/utils.py` read paths); compressed-dump
   * ingest is part of this repo's 100 TB surface beyond it.
   *
-  * Corruption contract (same as [[Zstd]]/[[Bzip2]]/[[Xz]]): strict
-  * structure, verified checksums, every refusal an exception —
-  * truncations and bit flips terminate (RobustnessSpec sweep). */
+  * Corruption contract: strict structure, verified checksums, every
+  * refusal an exception — truncations and bit flips terminate
+  * (RobustnessSpec sweep). */
 object Lz4 {
 
   final val FrameMagic  = 0x184d2204
   final val LegacyMagic = 0x184c2102
 
-  // ----------------------------------------------------------- xxh32
+  /** xxHash32 over `p[off, off+len)` with `seed` — lz4-java's
+    * implementation (the frame format's header, block and content
+    * checksums). */
+  def xxh32(p: Array[Byte], off: Int, len: Int, seed: Int): Int = Xxh32.hash(p, off, len, seed)
 
-  private final val P1 = 0x9e3779b1 // 2654435761
-  private final val P2 = 0x85ebca77 // 2246822519
-  private final val P3 = 0xc2b2ae3d // 3266489917
-  private final val P4 = 0x27d4eb2f //  668265263
-  private final val P5 = 0x165667b1 //  374761393
-
-  /** xxHash32 over `p[off, off+len)` with `seed` — public algorithm
-    * (Yann Collet's xxHash spec). The stripe loop reads 32-bit words
-    * through a little-endian heap ByteBuffer (JIT-intrinsified single
-    * load instead of four byte reads — the checksum leg is on the
-    * decode hot path for every frame). */
-  def xxh32(p: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    require(off >= 0 && len >= 0 && off + len <= p.length, "xxh32: bad range")
-    val bb = java.nio.ByteBuffer.wrap(p).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    @inline def le32(i: Int): Int = bb.getInt(i)
-    var i = off
-    val end = off + len
-    var h =
-      if (len >= 16) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        val limit = end - 16
-        while (i <= limit) {
-          v1 = Integer.rotateLeft(v1 + le32(i) * P2, 13) * P1
-          v2 = Integer.rotateLeft(v2 + le32(i + 4) * P2, 13) * P1
-          v3 = Integer.rotateLeft(v3 + le32(i + 8) * P2, 13) * P1
-          v4 = Integer.rotateLeft(v4 + le32(i + 12) * P2, 13) * P1
-          i += 16
-        }
-        Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
-          Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
-      } else seed + P5
-    h += len
-    while (i + 4 <= end) {
-      h = Integer.rotateLeft(h + le32(i) * P3, 17) * P4
-      i += 4
-    }
-    while (i < end) {
-      h = Integer.rotateLeft(h + (p(i) & 0xff) * P5, 11) * P1
-      i += 1
-    }
-    h ^= h >>> 15; h *= P2
-    h ^= h >>> 13; h *= P3
-    h ^= h >>> 16
-    h
-  }
+  private val Xxh32 = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
 
   // ----------------------------------------------------------- block
 

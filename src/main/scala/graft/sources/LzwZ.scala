@@ -1,137 +1,28 @@
 package graft.sources
 
-/** Unix `compress` (.Z, LZW) decoder — pure JVM, from scratch against
-  * the public format (magic `1f 9d`, flags byte = block-mode bit +
-  * maxbits 9..16, little-endian bit-packed codes growing 9→maxbits
-  * with the table) including the two historical quirks every real .Z
-  * depends on:
-  *
-  *  - **8-code group padding**: the writer flushes a FULL
-  *    `nbits`-byte group at every width change and CLEAR, so the
-  *    reader must skip to the next group boundary — RELATIVE to the
-  *    last change point, not the stream start (gzip's unlzw mirrors
-  *    this with its `resetbuf` that zeroes the bit position at each
-  *    change);
-  *  - **the CLEAR slot-256 scratch entry**: the reference reader sets
-  *    `free_ent = 256` after CLEAR and does NOT reset `oldcode`, so
-  *    its first post-clear add lands in slot 256 (never referenced as
-  *    data in block mode) and real table slots realign at 257 exactly
-  *    like the writer.
-  *
-  * Validation: every fixture in `LzwZSpec` is proven valid by a
-  * system-`uncompress` round trip first (`tools/gen_lzw_z_fixtures
-  * .py` asserts it at generation time), then pinned byte-exact here —
-  * width growth to 16 bits, a 12-bit table-saturation stream, CLEAR
-  * resets, non-block-mode files, and the KwKwK case.
-  *
-  * Why at 100 TB: `.Z` is the wrapper of the pre-gzip internet —
-  * usenet archives, old FTP mirrors, legacy institutional dumps all
-  * carry `.tar.Z`. [[Archives.autoEntries]] routes the magic like the
-  * other five wrappers.
-  *
-  * Corruption contract as everywhere: strict structure, loud
-  * refusals, truncations terminate (RobustnessSpec). */
-object LzwZ {
+import org.apache.commons.compress.compressors.z.ZCompressorInputStream
 
-  private final val Clear = 256
+/** Unix `compress` (.Z, LZW) decoding — the wrapper of the pre-gzip
+  * internet: usenet archives, old FTP mirrors and legacy institutional
+  * dumps all carry `.tar.Z`. [[Archives.autoEntries]] routes the magic
+  * like the other wrappers.
+  *
+  * Decoded by commons-compress 1.28 (`ZCompressorInputStream`): codes
+  * growing 9→maxbits with the 8-code group padding at every width
+  * change, CLEAR resets in block mode, and pre-1985 non-block-mode
+  * files. The wrapper adds the header check (magic, maxbits 9..16 as
+  * compress(1) writes them, so no larger table is ever allocated), the
+  * [[MaxOutput]] cap, and refusals as `IllegalArgumentException`.
+  * `LzwZSpec` pins byte-exact output against fixtures each proven by a
+  * system-`uncompress` round trip (`tools/gen_lzw_z_fixtures.py`). */
+object LzwZ {
 
   def decompress(p: Array[Byte]): Array[Byte] = {
     require(p.length >= 3 && (p(0) & 0xff) == 0x1f && (p(1) & 0xff) == 0x9d,
       "lzw: bad .Z magic")
-    val flags = p(2) & 0xff
-    val maxbits = flags & 0x1f
+    val maxbits = p(2) & 0x1f
     require(maxbits >= 9 && maxbits <= 16, s"lzw: maxbits $maxbits out of range (9..16)")
-    require((flags & 0x60) == 0, "lzw: reserved flag bits set")
-    val blockMode = (flags & 0x80) != 0
-    val maxmax = 1 << maxbits
-
-    val totalBits = (p.length - 3).toLong * 8
-    var bitPos = 0L
-    var groupStart = 0L // bit offset of the last width-change boundary
-    var nbits = 9
-
-    def readCode(): Int = {
-      if (bitPos + nbits > totalBits) -1
-      else {
-        val byteOff = 3 + (bitPos >>> 3).toInt
-        val shift = (bitPos & 7).toInt
-        var acc = ((p(byteOff) & 0xff) >>> shift).toLong
-        var got = 8 - shift
-        var k = 1
-        while (got < nbits) {
-          acc |= (p(byteOff + k) & 0xff).toLong << got
-          got += 8; k += 1
-        }
-        bitPos += nbits
-        (acc & ((1L << nbits) - 1)).toInt
-      }
-    }
-
-    def alignGroup(): Unit = {
-      val groupBits = nbits.toLong * 8
-      val rem = (bitPos - groupStart) % groupBits
-      if (rem != 0) bitPos += groupBits - rem
-      groupStart = bitPos
-    }
-
-    val prefix = new Array[Int](maxmax)
-    val suffix = new Array[Byte](maxmax)
-    var i = 0
-    while (i < 256) { suffix(i) = i.toByte; i += 1 }
-    var freeEnt = if (blockMode) 257 else 256
-    var oldCode = -1
-    var finChar = 0
-    val out = new java.io.ByteArrayOutputStream(math.max(p.length * 3, 1 << 10))
-    val stack = new Array[Byte](maxmax + 2)
-
-    var done = false
-    while (!done) {
-      // reader-side width bump, checked before each code like unlzw
-      if (freeEnt > (1 << nbits) - 1 && nbits < maxbits) {
-        alignGroup()
-        nbits += 1
-      }
-      val code = readCode()
-      if (code < 0) done = true
-      else if (blockMode && code == Clear) {
-        // reference semantics: free_ent back to 256 (the next add is a
-        // scratch entry in the CLEAR slot), oldcode NOT reset
-        freeEnt = 256
-        alignGroup()
-        nbits = 9
-      } else if (oldCode == -1) {
-        require(code < 256, s"lzw: first code $code is not a literal")
-        finChar = code
-        oldCode = code
-        out.write(code)
-      } else {
-        val inCode = code
-        var cur = code
-        var sp = 0
-        if (code >= freeEnt) {
-          // KwKwK: only the exactly-next code is legal
-          require(code == freeEnt, s"lzw: code $code beyond table end $freeEnt")
-          stack(sp) = finChar.toByte; sp += 1
-          cur = oldCode
-        }
-        while (cur >= 256) {
-          require(sp < stack.length - 1, "lzw: phrase stack overflow (corrupt table)")
-          stack(sp) = suffix(cur); sp += 1
-          cur = prefix(cur)
-        }
-        finChar = cur & 0xff
-        stack(sp) = finChar.toByte; sp += 1
-        while (sp > 0) { sp -= 1; out.write(stack(sp) & 0xff) }
-        require(out.size <= MaxOutput, "lzw: output cap exceeded")
-        if (freeEnt < maxmax) {
-          prefix(freeEnt) = oldCode
-          suffix(freeEnt) = finChar.toByte
-          freeEnt += 1
-        }
-        oldCode = inCode
-      }
-    }
-    out.toByteArray
+    Streams.drain("lzw", MaxOutput)(new ZCompressorInputStream(new java.io.ByteArrayInputStream(p)))
   }
 
   /** Hard cap on decompressed output — corrupt-header safety. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Dataset
 /** MediaWiki XML dump ingest (`*-pages-articles.xml.bz2`) — the
   * encyclopedia corpus every LLM data pipeline carries, distributed as
   * bzip2-compressed XML export (the public `mediawiki` export-0.x
-  * schema). Rides the in-repo decompression tiers: bz2 via [[Bzip2]],
+  * schema). Rides the decompression tiers: bz2 via [[Bzip2]],
   * gzip via the JDK, zstd via [[Zstd]], plain XML as-is — magic-sniffed
   * per file, the same transparency contract as [[Warc.parseWarc]].
   *

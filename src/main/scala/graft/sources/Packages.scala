@@ -1,34 +1,32 @@
 package graft.sources
 
-/** Software-package containers — `ar` (the Debian `.deb` outer shell)
-  * and `cpio` (the RPM payload format, also initramfs) — pure JVM per
-  * the public formats. Distro packages are a routine corpus source
-  * for code/text datasets (source files, docs, changelogs ship in
-  * every `data.tar.*`), and both containers are trivial-but-fiddly
-  * 1970s layouts the big dump tools still emit:
+import org.apache.commons.compress.archivers.{ArchiveEntry, ArchiveInputStream}
+import org.apache.commons.compress.archivers.ar.ArArchiveInputStream
+import org.apache.commons.compress.archivers.cpio.CpioArchiveInputStream
+
+/** Software-package containers — `ar` (the Debian `.deb` outer shell),
+  * `cpio` (the RPM payload format, also initramfs) and the RPM outer
+  * framing. Distro packages are a routine corpus source for code/text
+  * datasets (source files, docs, changelogs ship in every
+  * `data.tar.*`):
   *
-  *  - **ar** (common/GNU): global magic `!<arch>\n`, 60-byte ASCII
-  *    headers (name/mtime/uid/gid/mode/size + `` `\n`` terminator),
-  *    2-byte data alignment; GNU long-name table (`//` entry,
-  *    `/offset` references) and name/`/`-termination quirks; BSD
-  *    `#1/len` inline long names. A `.deb` is exactly
+  *  - **ar** and **cpio** are read by commons-compress 1.28 (on the
+  *    Spark classpath): ar with GNU (`//` table, `/offset`) and BSD
+  *    (`#1/len`) long names; the ASCII cpio variants `newc` (070701),
+  *    `crc` (070702, payload byte-sum checksum verified) and `odc`
+  *    (070707), ending at `TRAILER!!!`. The wrapper adds the magic
+  *    sniff, the entry filter (regular files only; the GNU symbol
+  *    table skipped), a short-read check on every entry, and refusals
+  *    as `IllegalArgumentException`. A `.deb` is exactly
   *    `debian-binary` + `control.tar.*` + `data.tar.*` inside ar —
-  *    [[Archives.autoEntries]] recursion unpacks the inner tars with
-  *    the in-repo wrapper decoders.
-  *  - **cpio**: the three ASCII variants — `newc` (070701, 110-byte
-  *    hex headers, 4-byte alignment), `crc` (070702, same + payload
-  *    checksum VERIFIED — a plain 32-bit byte sum per the spec) and
-  *    `odc` (070707, octal fields, no alignment) — ending at
-  *    `TRAILER!!!`. Directories skipped, hard-link duplicates (size
-  *    0 with nlink > 1) surfaced as empty like GNU cpio does.
+  *    [[Archives.autoEntries]] recursion unpacks the inner tars.
+  *  - **rpm**: lead, signature and main headers per the public rpmlib
+  *    layout, then the compressed cpio payload.
   *
   * Golden validation: `PackagesSpec` writes REAL archives with
   * commons-compress's ArArchiveOutputStream / CpioArchiveOutputStream
-  * (newc, odc and crc formats) and pins our readers byte-exact,
-  * including a full `.deb`-shaped chain (ar → data.tar.zst → text).
-  *
-  * Corruption contract as everywhere: strict structure, loud
-  * refusals, truncations terminate. */
+  * (newc, odc and crc formats) and pins the entries byte-exact,
+  * including a full `.deb`-shaped chain (ar → data.tar.zst → text). */
 object Packages {
 
   // ---------------------------------------------------------------- ar
@@ -41,41 +39,7 @@ object Packages {
   /** All regular entries of an ar archive (GNU + BSD name quirks). */
   def arEntries(p: Array[Byte]): Seq[(String, Array[Byte])] = {
     require(isAr(p), "ar: bad global magic")
-    var at = 8
-    var longNames: Array[Byte] = Array.emptyByteArray
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-    while (at + 60 <= p.length) {
-      val rawName = new String(p, at, 16, "US-ASCII")
-      val sizeStr = new String(p, at + 48, 10, "US-ASCII").trim
-      require(p(at + 58) == '`' && p(at + 59) == '\n', s"ar: bad header terminator at $at")
-      require(sizeStr.nonEmpty && sizeStr.forall(_.isDigit), s"ar: bad size field '$sizeStr'")
-      val size = sizeStr.toLong
-      require(size >= 0 && at + 60 + size <= p.length, "ar: entry truncated")
-      var dataAt = at + 60
-      var dataLen = size.toInt
-      val trimmed = rawName.trim
-      var name: String = null
-      if (trimmed == "//") {
-        longNames = java.util.Arrays.copyOfRange(p, dataAt, dataAt + dataLen)
-      } else if (trimmed.startsWith("#1/")) { // BSD: name inline before data
-        val n = trimmed.substring(3).toInt
-        require(n >= 0 && n <= dataLen, "ar: BSD long name overruns entry")
-        name = new String(p, dataAt, n, "US-ASCII").takeWhile(_ != 0)
-        dataAt += n; dataLen -= n
-      } else if (trimmed.startsWith("/") && trimmed.length > 1 && trimmed.drop(1).forall(_.isDigit)) {
-        val off = trimmed.drop(1).toInt // GNU long-name table reference
-        require(off >= 0 && off < longNames.length, "ar: long-name offset out of range")
-        var e = off
-        while (e < longNames.length && longNames(e) != '\n' && longNames(e) != 0) e += 1
-        name = new String(longNames, off, e - off, "US-ASCII").stripSuffix("/")
-      } else if (trimmed != "/") { // "/" = GNU symbol table, skip
-        name = trimmed.stripSuffix("/") // GNU terminates names with '/'
-      }
-      if (name != null && name.nonEmpty)
-        out += ((name, java.util.Arrays.copyOfRange(p, dataAt, dataAt + dataLen)))
-      at += 60 + size.toInt + (size.toInt & 1) // 2-byte alignment
-    }
-    out.toSeq
+    read("ar", new ArArchiveInputStream(new java.io.ByteArrayInputStream(p)))(_.getName.nonEmpty)
   }
 
   // -------------------------------------------------------------- cpio
@@ -90,68 +54,28 @@ object Packages {
     * odc), with crc-format payload checksums verified. */
   def cpioEntries(p: Array[Byte]): Seq[(String, Array[Byte])] = {
     require(isCpio(p), "cpio: bad magic (only ASCII newc/crc/odc)")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-    var at = 0
-    var done = false
-    while (!done) {
-      require(at + 6 <= p.length, "cpio: truncated header magic")
-      val magic = new String(p, at, 6, "US-ASCII")
-      if (magic == "070701" || magic == "070702") {
-        require(at + 110 <= p.length, "cpio: truncated newc header")
-        @inline def hex(field: Int): Long = {
-          val s = new String(p, at + 6 + field * 8, 8, "US-ASCII")
-          require(s.forall(c => c.isDigit || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')),
-            s"cpio: bad hex field '$s'")
-          java.lang.Long.parseLong(s, 16)
-        }
-        val mode = hex(1)
-        val fileSize = hex(6)
-        val nameSize = hex(11)
-        val check = hex(12)
-        var q = at + 110
-        require(nameSize >= 1 && q + nameSize <= p.length, "cpio: truncated name")
-        val name = new String(p, q, nameSize.toInt - 1, "US-ASCII")
-        q += nameSize.toInt
-        q += (4 - ((q - at) % 4)) % 4 // header+name padded to 4 relative to entry start... (absolute: entries start 4-aligned)
-        if (name == "TRAILER!!!") done = true
-        else {
-          require(fileSize >= 0 && q + fileSize <= p.length, s"cpio: entry '$name' truncated")
-          val data = java.util.Arrays.copyOfRange(p, q, (q + fileSize).toInt)
-          if (magic == "070702") {
-            var sum = 0L
-            data.foreach(b => sum += (b & 0xff))
-            require((sum & 0xffffffffL) == check, s"cpio: checksum mismatch for '$name'")
-          }
-          if ((mode & 0xf000L) == 0x8000L) out += ((name, data)) // regular files only
-          q += fileSize.toInt
-          q += (4 - ((q - at) % 4)) % 4
-          at = q
-        }
-      } else { // odc 070707: octal fields, no alignment
-        require(at + 76 <= p.length, "cpio: truncated odc header")
-        @inline def oct(off: Int, len: Int): Long = {
-          val s = new String(p, at + off, len, "US-ASCII")
-          require(s.forall(c => c >= '0' && c <= '7'), s"cpio: bad octal field '$s'")
-          java.lang.Long.parseLong(s, 8)
-        }
-        val mode = oct(18, 6)
-        val nameSize = oct(59, 6)
-        val fileSize = oct(65, 11)
-        var q = at + 76
-        require(nameSize >= 1 && q + nameSize <= p.length, "cpio: truncated odc name")
-        val name = new String(p, q, nameSize.toInt - 1, "US-ASCII")
-        q += nameSize.toInt
-        if (name == "TRAILER!!!") done = true
-        else {
-          require(fileSize >= 0 && q + fileSize <= p.length, s"cpio: entry '$name' truncated")
-          if ((mode & 0xf000L) == 0x8000L)
-            out += ((name, java.util.Arrays.copyOfRange(p, q, (q + fileSize).toInt)))
-          at = (q + fileSize).toInt
-        }
-      }
-    }
-    out.toSeq
+    read("cpio", new CpioArchiveInputStream(new java.io.ByteArrayInputStream(p)))(_.isRegularFile)
   }
+
+  /** Every entry `keep` accepts, each read in full (a library stream
+    * checks entry checksums on the entry's last byte). */
+  private def read[E <: ArchiveEntry](codec: String, in: ArchiveInputStream[E])(
+      keep: E => Boolean): Seq[(String, Array[Byte])] =
+    Streams.refusing(codec) {
+      try {
+        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
+        var e = in.getNextEntry
+        while (e != null) {
+          if (keep(e)) {
+            val data = in.readAllBytes()
+            require(data.length == e.getSize, s"$codec: entry '${e.getName}' truncated")
+            out += ((e.getName, data))
+          }
+          e = in.getNextEntry
+        }
+        out.toSeq
+      } finally in.close()
+    }
 
   // --------------------------------------------------------------- rpm
 

@@ -24,7 +24,7 @@ import org.apache.spark.sql.Dataset
   *    negative first bytes.
   *
   * Codec coverage is THE point: every wrapper a SequenceFile ships
-  * with routes to an in-repo from-scratch decoder or the JDK —
+  * with routes to a `graft.sources` decoder or the JDK —
   * DefaultCodec (zlib), GzipCodec (JDK), BZip2Codec ([[Bzip2]]),
   * SnappyCodec ([[Snappy.decodeHadoop]]-framed chunks), Lz4Codec
   * (Hadoop block framing over raw [[Lz4.decodeBlock]] blocks),

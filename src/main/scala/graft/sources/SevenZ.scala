@@ -1,37 +1,31 @@
 package graft.sources
 
+import org.apache.commons.compress.archivers.sevenz.{SevenZFile => LibSevenZFile}
+import org.apache.commons.compress.PasswordRequiredException
+import org.apache.commons.compress.utils.SeekableInMemoryByteChannel
 import org.apache.spark.sql.Dataset
 
-/** 7z archive reader — pure JVM, from scratch against the PUBLIC
-  * format specification (7zFormat.txt, shipped with every 7-Zip
-  * distribution; LZMA SDK is public domain):
+/** 7z archive reading — a top-three dump container in the wild: wiki
+  * mirrors, dataset releases, scraped-forum archives.
   *
-  *  - signature header (magic + version + CRC32-guarded start
-  *    header), next-header CRC verified;
-  *  - ENCODED headers (kEncodedHeader 0x17 — the form real 7-Zip
-  *    writes): the header itself is an LZMA-compressed folder,
-  *    decoded with the in-repo LZMA machinery, then parsed;
-  *  - the property-ID tree: PackInfo / UnpackInfo (folders = coder
-  *    graphs with bind pairs) / SubStreamsInfo (per-folder substream
-  *    splits, sizes, CRCs) / FilesInfo (UTF-16LE names, empty-stream
-  *    and empty-file bit vectors, kDummy padding);
-  *  - 7z variable-length numbers (lead-byte mask encoding);
-  *  - coders: Copy, LZMA (props → synthesized alone-header decode),
-  *    LZMA2 ([[Xz.lzma2Raw]]), BZip2, Deflate, and the delta/BCJ
-  *    filter chain (shared converters with the xz block filters);
-  *    AES-256 and BCJ2 refuse BY NAME;
-  *  - every declared CRC (header, folder, substream) verified.
+  * Decoded by commons-compress 1.28's `SevenZFile` (on the Spark
+  * classpath; LZMA/LZMA2 and the delta/BCJ filters through xz-java):
+  * plain and LZMA-encoded headers, solid folders split into
+  * substreams, empty files and directories, and every declared CRC
+  * (start header, next header, substream) verified. The wrapper adds
+  * the [[Xz.MaxOutput]] cap per entry (a declared size over it refuses
+  * before decoding), a decoder memory limit of the same size, entries
+  * read in archive order (directories skipped, empty files kept as
+  * zero-byte payloads), and refusals as `IllegalArgumentException` that
+  * name what is missing: AES-256 (no password support), BCJ2
+  * (multi-stream coders) and unknown coders.
   *
-  * Golden validation: `SevenZSpec` writes REAL .7z archives with
-  * commons-compress's SevenZOutputFile (on the Spark classpath;
-  * LZMA/LZMA2 via xz-java) across the coder matrix and pins our
-  * reader byte-exact; refusal paths use AES-encrypted fixtures.
-  *
-  * Why at 100 TB: 7z is a top-three dump container in the wild —
-  * wiki mirrors, dataset releases, scraped-forum archives. The read
+  * Golden validation: `SevenZSpec` writes real archives with
+  * commons-compress's `SevenZOutputFile` across the coder matrix, plus
+  * an encoded-header re-mux, and pins the entries byte-exact. The read
   * grain is one archive per task (map-only flatMap), the
-  * [[Archives.entries]] contract; [[Archives.autoEntries]] routes
-  * the magic. */
+  * [[Archives.entries]] contract; [[Archives.autoEntries]] routes the
+  * magic. */
 object SevenZ {
 
   final val Magic: Array[Byte] = Array('7', 'z', 0xbc, 0xaf, 0x27, 0x1c).map(_.toByte)
@@ -39,457 +33,42 @@ object SevenZ {
   def isSevenZ(p: Array[Byte]): Boolean =
     p.length >= 32 && (0 until 6).forall(i => p(i) == Magic(i))
 
-  // ------------------------------------------------------------ model
-
-  private final case class Coder(id: Array[Byte], nIn: Int, nOut: Int, props: Array[Byte])
-  private final case class Folder(coders: Seq[Coder], bindPairs: Seq[(Long, Long)],
-                                  packedIndices: Seq[Long], unpackSizes: Seq[Long],
-                                  var crc: Option[Int])
-  private final case class StreamsInfo(packPos: Long, packSizes: Seq[Long],
-                                       folders: Seq[Folder],
-                                       numUnpack: Seq[Int], subSizes: Seq[Seq[Long]],
-                                       subCrcs: Seq[Option[Int]])
-
-  private final class Reader(val p: Array[Byte], var at: Int, val end: Int) {
-    def u8(): Int = { require(at < end, "7z: truncated header"); val v = p(at) & 0xff; at += 1; v }
-    def u32(): Int = {
-      require(at + 4 <= end, "7z: truncated u32")
-      val v = (p(at) & 0xff) | ((p(at + 1) & 0xff) << 8) | ((p(at + 2) & 0xff) << 16) | ((p(at + 3) & 0xff) << 24)
-      at += 4; v
-    }
-    def u64(): Long = {
-      require(at + 8 <= end, "7z: truncated u64")
-      var v = 0L
-      var i = 0
-      while (i < 8) { v |= (p(at + i) & 0xffL) << (8 * i); i += 1 }
-      at += 8; v
-    }
-    /** 7z variable-length number. */
-    def num(): Long = {
-      val first = u8()
-      var mask = 0x80
-      var value = 0L
-      var i = 0
-      while (i < 8) {
-        if ((first & mask) == 0) {
-          value |= (first & (mask - 1)).toLong << (8 * i)
-          return value
-        }
-        value |= (u8() & 0xffL) << (8 * i)
-        mask >>= 1
-        i += 1
-      }
-      value
-    }
-    def bytes(n: Int): Array[Byte] = {
-      require(n >= 0 && at + n <= end, "7z: truncated byte run")
-      val b = java.util.Arrays.copyOfRange(p, at, at + n); at += n; b
-    }
-    def skip(n: Long): Unit = {
-      require(n >= 0 && at + n <= end, "7z: skip past end")
-      at += n.toInt
-    }
-    /** Bit vector, MSB first. */
-    def bits(n: Int): Array[Boolean] = {
-      val out = new Array[Boolean](n)
-      var b = 0
-      var mask = 0
-      var i = 0
-      while (i < n) {
-        if (mask == 0) { b = u8(); mask = 0x80 }
-        out(i) = (b & mask) != 0
-        mask >>= 1
-        i += 1
-      }
-      out
-    }
-    def boolsAllDefined(n: Int): Array[Boolean] =
-      if (u8() != 0) Array.fill(n)(true) else bits(n)
-  }
-
-  // ------------------------------------------------- header structures
-
-  private def parseStreamsInfo(r: Reader): StreamsInfo = {
-    var packPos = 0L
-    var packSizes: Seq[Long] = Seq.empty
-    var folders: Seq[Folder] = Seq.empty
-    var numUnpack: Seq[Int] = Seq.empty
-    var subSizes: Seq[Seq[Long]] = Seq.empty
-    var subCrcs: Seq[Option[Int]] = Seq.empty
-
-    var id = r.num()
-    while (id != 0x00) {
-      id match {
-        case 0x06 => // PackInfo
-          packPos = r.num()
-          val n = r.num().toInt
-          require(n >= 0 && n < (1 << 24), "7z: implausible pack stream count")
-          var pid = r.num()
-          while (pid != 0x00) {
-            pid match {
-              case 0x09 => packSizes = Seq.fill(n)(r.num())
-              case 0x0a => val d = r.boolsAllDefined(n); d.foreach(if (_) r.u32())
-              case other => throw new IllegalArgumentException(s"7z: unknown PackInfo prop $other")
-            }
-            pid = r.num()
-          }
-        case 0x07 => // UnpackInfo
-          require(r.num() == 0x0b, "7z: UnpackInfo must start with kFolder")
-          val nFolders = r.num().toInt
-          require(nFolders >= 0 && nFolders < (1 << 20), "7z: implausible folder count")
-          require(r.u8() == 0, "7z: external folder definitions unsupported")
-          folders = (0 until nFolders).map { _ =>
-            val nCoders = r.num().toInt
-            require(nCoders >= 1 && nCoders <= 8, s"7z: implausible coder count $nCoders")
-            val coders = (0 until nCoders).map { _ =>
-              val flags = r.u8()
-              val idSize = flags & 0x0f
-              val cid = r.bytes(idSize)
-              var (nIn, nOut) = (1, 1)
-              if ((flags & 0x10) != 0) { nIn = r.num().toInt; nOut = r.num().toInt }
-              val props = if ((flags & 0x20) != 0) r.bytes(r.num().toInt) else Array.emptyByteArray
-              require((flags & 0x80) == 0, "7z: reserved coder flag set")
-              Coder(cid, nIn, nOut, props)
-            }
-            val totalIn = coders.map(_.nIn).sum
-            val totalOut = coders.map(_.nOut).sum
-            val nBind = totalOut - 1
-            val binds = (0 until nBind).map(_ => (r.num(), r.num()))
-            val nPacked = totalIn - nBind
-            val packed =
-              if (nPacked == 1) {
-                // the single unbound in-stream
-                val bound = binds.map(_._1).toSet
-                Seq((0L until totalIn.toLong).find(i => !bound.contains(i)).get)
-              } else (0 until nPacked).map(_ => r.num())
-            Folder(coders, binds, packed, Seq.empty, None)
-          }
-          require(r.num() == 0x0c, "7z: missing kCodersUnpackSize")
-          folders = folders.map { f =>
-            val sizes = f.coders.flatMap(c => Seq.fill(c.nOut)(r.num()))
-            f.copy(unpackSizes = sizes)
-          }
-          var uid = r.num()
-          while (uid != 0x00) {
-            uid match {
-              case 0x0a =>
-                val d = r.boolsAllDefined(folders.size)
-                folders.zip(d).foreach { case (f, has) => if (has) f.crc = Some(r.u32()) }
-              case other => throw new IllegalArgumentException(s"7z: unknown UnpackInfo prop $other")
-            }
-            uid = r.num()
-          }
-        case 0x08 => // SubStreamsInfo
-          var sid = r.num()
-          var counts: Seq[Int] = Seq.fill(folders.size)(1)
-          if (sid == 0x0d) {
-            counts = folders.map(_ => r.num().toInt)
-            sid = r.num()
-          }
-          numUnpack = counts
-          var sizes: Seq[Seq[Long]] = Seq.empty
-          if (sid == 0x09) {
-            sizes = folders.zip(counts).map { case (f, n) =>
-              val folderSize = folderOutputSize(f)
-              if (n == 0) Seq.empty
-              else {
-                val head = (0 until n - 1).map(_ => r.num())
-                head :+ (folderSize - head.sum)
-              }
-            }
-            sid = r.num()
-          } else {
-            sizes = folders.zip(counts).map { case (f, n) =>
-              require(n == 1, "7z: substream sizes missing for split folder")
-              Seq(folderOutputSize(f))
-            }
-          }
-          subSizes = sizes
-          if (sid == 0x0a) {
-            // digests for streams WITHOUT a folder-level crc shortcut
-            val needs = folders.zip(counts).flatMap { case (f, n) =>
-              if (n == 1 && f.crc.isDefined) Seq.empty else Seq.fill(n)(true)
-            }
-            val defined = r.boolsAllDefined(needs.size)
-            val it = defined.iterator
-            val got = needs.map(_ => if (it.next()) Some(r.u32()) else None)
-            // re-inflate to the full substream list (folder-crc singles fill in)
-            val full = scala.collection.mutable.ArrayBuffer.empty[Option[Int]]
-            var gi = 0
-            folders.zip(counts).foreach { case (f, n) =>
-              if (n == 1 && f.crc.isDefined) full += f.crc
-              else (0 until n).foreach { _ => full += got(gi); gi += 1 }
-            }
-            subCrcs = full.toSeq
-            sid = r.num()
-          }
-          require(sid == 0x00, s"7z: unknown SubStreamsInfo prop $sid")
-        case other => throw new IllegalArgumentException(s"7z: unknown StreamsInfo prop $other")
-      }
-      id = r.num()
-    }
-    if (numUnpack.isEmpty) {
-      numUnpack = Seq.fill(folders.size)(1)
-      subSizes = folders.map(f => Seq(folderOutputSize(f)))
-    }
-    if (subCrcs.isEmpty) subCrcs = folders.zip(numUnpack).flatMap { case (f, n) =>
-      if (n == 1) Seq(f.crc) else Seq.fill(n)(Option.empty[Int])
-    }
-    StreamsInfo(packPos, packSizes, folders, numUnpack, subSizes, subCrcs)
-  }
-
-  /** The folder's final output size = the unbound out-stream's size. */
-  private def folderOutputSize(f: Folder): Long = {
-    val boundOuts = f.bindPairs.map(_._2).toSet
-    var outIdx = 0L
-    var k = 0
-    var result = -1L
-    f.coders.foreach { c =>
-      (0 until c.nOut).foreach { _ =>
-        if (!boundOuts.contains(outIdx)) result = f.unpackSizes(k)
-        outIdx += 1; k += 1
-      }
-    }
-    require(result >= 0, "7z: folder has no unbound output")
-    result
-  }
-
-  // ------------------------------------------------------ folder decode
-
-  private def methodName(id: Array[Byte]): String =
-    id.map(b => f"${b & 0xff}%02x").mkString
-
-  /** Decode one folder given its packed byte slices (in packed-stream
-    * order). Supports linear chains of 1-in/1-out coders. */
-  private def decodeFolder(f: Folder, packed: Seq[Array[Byte]]): Array[Byte] = {
-    require(f.coders.forall(c => c.nIn == 1 && c.nOut == 1),
-      "7z: multi-stream coders (BCJ2) unsupported — refused by name")
-    // in/out stream indices are both 0..nCoders-1 for 1-1 coders
-    val nc = f.coders.size
-    val boundIn = f.bindPairs.map { case (in, out) => in.toInt -> out.toInt }.toMap
-    // packed stream k feeds in-stream packedIndices(k)
-    val packedFor = f.packedIndices.zipWithIndex.map { case (in, k) => in.toInt -> k }.toMap
-    val memo = new Array[Array[Byte]](nc)
-    def outOf(coderIdx: Int): Array[Byte] = {
-      if (memo(coderIdx) != null) memo(coderIdx) else {
-        val c = f.coders(coderIdx)
-        val input: Array[Byte] = boundIn.get(coderIdx) match {
-          case Some(srcOut) => outOf(srcOut)
-          case None =>
-            val k = packedFor.getOrElse(coderIdx,
-              throw new IllegalArgumentException("7z: coder input neither bound nor packed"))
-            packed(k)
-        }
-        val expect = f.unpackSizes(coderIdx)
-        require(expect <= (1 << 30), "7z: folder output exceeds 1 GiB in-memory cap")
-        val out = decodeCoder(c, input, expect)
-        require(out.length.toLong == expect,
-          s"7z: coder ${methodName(c.id)} produced ${out.length}, declared $expect")
-        memo(coderIdx) = out
-        out
-      }
-    }
-    val boundOuts = f.bindPairs.map(_._2.toInt).toSet
-    val finalIdx = (0 until nc).find(i => !boundOuts.contains(i)).get
-    outOf(finalIdx)
-  }
-
-  private def decodeCoder(c: Coder, in: Array[Byte], expect: Long): Array[Byte] = {
-    val id = c.id.map(_ & 0xff)
-    id.toSeq match {
-      case Seq(0x00) => in // Copy
-      case Seq(0x21) => // LZMA2
-        require(c.props.length <= 1, "7z: bad LZMA2 props")
-        Xz.lzma2Raw(in, 0, in.length)
-      case Seq(0x03, 0x01, 0x01) => // LZMA: synthesize an alone header
-        require(c.props.length == 5, "7z: LZMA coder needs 5 props bytes")
-        val hdr = new Array[Byte](13)
-        System.arraycopy(c.props, 0, hdr, 0, 5)
-        var i = 0
-        while (i < 8) { hdr(5 + i) = ((expect >>> (8 * i)) & 0xff).toByte; i += 1 }
-        Xz.decompressAlone(hdr ++ in)
-      case Seq(0x04, 0x01, 0x08) => // Deflate (raw)
-        val inf = new java.util.zip.Inflater(true)
-        inf.setInput(in)
-        val buf = new Array[Byte](math.min(expect, 1 << 20).toInt + 1)
-        val o = new java.io.ByteArrayOutputStream(math.min(expect, 1 << 24).toInt)
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          if (n == 0 && !inf.finished())
-            throw new IllegalArgumentException("7z: truncated deflate stream")
-          o.write(buf, 0, n)
-        }
-        inf.end()
-        o.toByteArray
-      case Seq(0x04, 0x02, 0x02) => Bzip2.decompress(in) // BZip2
-      case Seq(0x03) => // Delta filter (in place over the chained input)
-        val out = in.clone()
-        Xz.blockFilterDecode(0x03, c.props, out)
-        out
-      case Seq(0x03, 0x03, 0x01, 0x03) => // BCJ x86
-        val out = in.clone()
-        Xz.blockFilterDecode(0x04, c.props, out)
-        out
-      case Seq(0x03, 0x03, 0x02, 0x05) => // PPC
-        val out = in.clone(); Xz.blockFilterDecode(0x05, c.props, out); out
-      case Seq(0x03, 0x03, 0x05, 0x01) => // ARM
-        val out = in.clone(); Xz.blockFilterDecode(0x07, c.props, out); out
-      case Seq(0x03, 0x03, 0x07, 0x01) => // ARM-Thumb
-        val out = in.clone(); Xz.blockFilterDecode(0x08, c.props, out); out
-      case Seq(0x03, 0x03, 0x08, 0x05) => // SPARC
-        val out = in.clone(); Xz.blockFilterDecode(0x09, c.props, out); out
-      case Seq(0x0a) => // ARM64 (7z 21.01+)
-        val out = in.clone(); Xz.blockFilterDecode(0x0a, c.props, out); out
-      case Seq(0x06, 0xf1, 0x07, 0x01) =>
-        throw new IllegalArgumentException("7z: AES-256 encrypted archive refused (no password support)")
-      case Seq(0x03, 0x03, 0x01, 0x1b) =>
-        throw new IllegalArgumentException("7z: BCJ2 coder unsupported — refused by name")
-      case _ =>
-        throw new IllegalArgumentException(s"7z: coder ${methodName(c.id)} unsupported (refused by name)")
-    }
-  }
-
-  // ------------------------------------------------------------- files
-
   /** Extract all entries (name -> bytes); directories skipped, empty
     * files yielded as zero-byte payloads. Every declared CRC verified. */
   def extract(p: Array[Byte]): Seq[(String, Array[Byte])] = {
     require(isSevenZ(p), "7z: bad signature magic")
-    val startCrc = {
-      val c = new java.util.zip.CRC32(); c.update(p, 12, 20); c.getValue.toInt
-    }
-    val declaredStartCrc = (p(8) & 0xff) | ((p(9) & 0xff) << 8) | ((p(10) & 0xff) << 16) | ((p(11) & 0xff) << 24)
-    require(startCrc == declaredStartCrc, "7z: start header CRC mismatch")
-    val r0 = new Reader(p, 12, 32)
-    val nhOfs = r0.u64(); val nhSize = r0.u64(); val nhCrc = r0.u32()
-    require(nhOfs >= 0 && nhSize >= 0 && 32 + nhOfs + nhSize <= p.length, "7z: next header out of range")
-    var hdr = java.util.Arrays.copyOfRange(p, (32 + nhOfs).toInt, (32 + nhOfs + nhSize).toInt)
-    val hc = new java.util.zip.CRC32(); hc.update(hdr)
-    require(hc.getValue.toInt == nhCrc, "7z: next header CRC mismatch")
-    if (hdr.isEmpty) return Seq.empty
-
-    var r = new Reader(hdr, 0, hdr.length)
-    var id = r.num()
-    if (id == 0x17) { // kEncodedHeader: the header is itself a folder
-      val si = parseStreamsInfo(r)
-      require(si.folders.size == 1, "7z: encoded header must be one folder")
-      val packs = packSlices(p, si)
-      hdr = decodeFolder(si.folders.head, packs.head)
-      si.folders.head.crc.foreach { want =>
-        val c = new java.util.zip.CRC32(); c.update(hdr)
-        require(c.getValue.toInt == want, "7z: encoded header CRC mismatch")
-      }
-      r = new Reader(hdr, 0, hdr.length)
-      id = r.num()
-    }
-    require(id == 0x01, s"7z: expected kHeader, got $id")
-
-    var streams: Option[StreamsInfo] = None
-    var names: Seq[String] = Seq.empty
-    var emptyStream: Array[Boolean] = Array.emptyBooleanArray
-    var emptyFile: Array[Boolean] = Array.emptyBooleanArray
-    var numFiles = 0
-
-    id = r.num()
-    while (id != 0x00) {
-      id match {
-        case 0x04 => // kMainStreamsInfo
-          streams = Some(parseStreamsInfo(r))
-        case 0x05 => // kFilesInfo
-          numFiles = r.num().toInt
-          require(numFiles >= 0 && numFiles < (1 << 24), "7z: implausible file count")
-          emptyStream = Array.fill(numFiles)(false)
-          var pid = r.num()
-          while (pid != 0x00) {
-            val size = r.num()
-            val next = r.at + size.toInt
-            pid match {
-              case 0x0e => emptyStream = r.bits(numFiles)
-              case 0x0f => emptyFile = r.bits(emptyStream.count(identity))
-              case 0x11 =>
-                require(r.u8() == 0, "7z: external names unsupported")
-                val sb = new StringBuilder
-                val acc = scala.collection.mutable.ArrayBuffer.empty[String]
-                while (r.at < next) {
-                  val lo = r.u8(); val hi = r.u8()
-                  val ch = (lo | (hi << 8)).toChar
-                  if (ch == '\u0000') { acc += sb.toString; sb.clear() }
-                  else sb.append(ch)
-                }
-                names = acc.toSeq
-              case _ => () // times, attributes, dummy padding: skip
+    try {
+      val z = LibSevenZFile.builder()
+        .setSeekableByteChannel(new SeekableInMemoryByteChannel(p))
+        .setMaxMemoryLimitKiB((Xz.MaxOutput >> 10) + 1024)
+        .get()
+      try {
+        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
+        var e = z.getNextEntry
+        while (e != null) {
+          if (!e.isDirectory) {
+            require(e.getSize <= Xz.MaxOutput, s"7z: entry size ${e.getSize} > cap")
+            val b = new Array[Byte](e.getSize.toInt) // the entry CRC is checked on its last byte
+            var n = 0
+            while (n < b.length) {
+              val r = z.read(b, n, b.length - n)
+              require(r > 0, s"7z: entry '${e.getName}' truncated")
+              n += r
             }
-            require(next >= r.at && next <= r.end, "7z: files property overruns")
-            r.at = next
-            pid = r.num()
+            out += ((Option(e.getName).getOrElse(s"entry_${out.size}"), b))
           }
-          require(names.isEmpty || names.size == numFiles, "7z: name count mismatch")
-        case other => throw new IllegalArgumentException(s"7z: unknown header prop $other")
-      }
-      id = r.num()
-    }
-
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-    val subs: Seq[Array[Byte]] = streams match {
-      case None => Seq.empty
-      case Some(si) =>
-        val packs = packSlices(p, si)
-        si.folders.zipWithIndex.flatMap { case (f, fi) =>
-          val whole = decodeFolder(f, packs(fi))
-          if (si.numUnpack(fi) == 1 && f.crc.isDefined) {
-            val c = new java.util.zip.CRC32(); c.update(whole)
-            require(c.getValue.toInt == f.crc.get, "7z: folder CRC mismatch")
-          }
-          var off = 0L
-          si.subSizes(fi).map { sz =>
-            require(off + sz <= whole.length, "7z: substream overruns folder")
-            val b = java.util.Arrays.copyOfRange(whole, off.toInt, (off + sz).toInt)
-            off += sz
-            b
-          }
+          e = z.getNextEntry
         }
-    }
-    // substream CRCs
-    streams.foreach { si =>
-      si.subCrcs.zip(subs).foreach {
-        case (Some(want), b) =>
-          val c = new java.util.zip.CRC32(); c.update(b)
-          require(c.getValue.toInt == want, "7z: substream CRC mismatch")
-        case _ => ()
-      }
-    }
-    var sub = 0
-    var emptyIdx = 0
-    (0 until numFiles).foreach { i =>
-      val name = if (names.nonEmpty) names(i) else s"entry_$i"
-      if (emptyStream(i)) {
-        val isFile = emptyIdx < emptyFile.length && emptyFile(emptyIdx)
-        emptyIdx += 1
-        if (isFile) out += ((name, Array.emptyByteArray)) // else: directory, skip
-      } else {
-        require(sub < subs.size, "7z: more files than substreams")
-        out += ((name, subs(sub)))
-        sub += 1
-      }
-    }
-    out.toSeq
-  }
-
-  /** Slice the pack area into per-folder packed-stream byte arrays. */
-  private def packSlices(p: Array[Byte], si: StreamsInfo): Seq[Seq[Array[Byte]]] = {
-    var off = 32 + si.packPos
-    val all = si.packSizes.map { sz =>
-      require(off + sz <= p.length, "7z: packed stream out of range")
-      val b = java.util.Arrays.copyOfRange(p, off.toInt, (off + sz).toInt)
-      off += sz
-      b
-    }
-    var k = 0
-    si.folders.map { f =>
-      val n = f.packedIndices.size
-      val slice = all.slice(k, k + n)
-      k += n
-      slice
+        out.toSeq
+      } finally z.close()
+    } catch {
+      case e: PasswordRequiredException =>
+        throw new IllegalArgumentException("7z: AES-256 encrypted archive refused (no password support)", e)
+      case e: java.io.IOException if String.valueOf(e.getMessage).startsWith("Multi input/output") =>
+        throw new IllegalArgumentException("7z: multi-stream coders (BCJ2) unsupported — refused by name", e)
+      case e: java.io.IOException if String.valueOf(e.getMessage).startsWith("Unsupported compression method") =>
+        throw new IllegalArgumentException(s"7z: coder unsupported, refused by name (${e.getMessage})", e)
+      case e: java.io.IOException => throw new IllegalArgumentException(s"7z: ${e.getMessage}", e)
     }
   }
 

@@ -1,800 +1,63 @@
 package graft.sources
 
-/** xz / LZMA2 stream decoder, pure JVM and from scratch — the third
-  * and last archive wrapper the dump ecosystem ships beside gzip (JDK)
-  * and [[Bzip2]]/[[Zstd]] (this repo): release tarballs, kernel
-  * sources, many institutional dumps are `.tar.xz`. Formats per the
-  * public specifications (the .xz file format spec and 7-Zip's LZMA
-  * specification document):
+import org.tukaani.xz.{BasicArrayCache, LZMAInputStream, XZInputStream}
+
+/** xz and `.lzma` ("alone") decoding — release tarballs, kernel
+  * sources and many institutional dumps are `.tar.xz`.
   *
-  *  - xz container: stream header (magic + flags + CRC32), block
-  *    headers (variable-length integers, filter flags, header CRC32
-  *    verified), block padding, per-block CHECK VERIFIED (CRC32,
-  *    CRC64/ECMA-182, or SHA-256 — all three implemented), index walk,
-  *    stream footer, multi-stream concatenation with 4-byte padding;
-  *  - LZMA2: chunked wrapper — uncompressed chunks, compressed chunks
-  *    with state/props/dict reset control bits, per-chunk range-coder
-  *    re-init, exact packed/unpacked size accounting;
-  *  - LZMA proper: binary range decoder (11-bit adaptive
-  *    probabilities), the 12-state machine, literal decoding with
-  *    (lc,lp) contexts incl. matched-literal mode, match/rep/shortrep
-  *    branches, length coders (choice/choice2 + low/mid/high trees),
-  *    distance decoding (slot trees per length class, reverse bit-tree
-  *    SpecPos range, direct bits + 4 align bits), the four rep
-  *    distances.
-  *
-  * Filter chains (up to 4 filters, last = LZMA2) decode natively:
-  * the delta filter and the x86 / ARM / ARM-Thumb / ARM64 / PowerPC /
-  * SPARC branch converters (xz file format §5.3) run in reverse
-  * listed order over each block's LZMA2 output — distro packages and
-  * kernel/firmware dumps routinely ship `--x86`- or `--arm64`-
-  * filtered. IA64 and RISC-V converters refuse by name. Validation:
-  * `XzSpec` pins byte-exact output against system-xz compressions
-  * (levels 1/3/6/9/9e, all three check types, forced multi-block,
-  * every supported filter chain) of regenerable payloads
+  * Decoded by xz-java 1.10 (on the Spark classpath): the xz container
+  * with all three check types verified (CRC32, CRC64, SHA-256),
+  * multi-block and multi-stream input with stream padding, and every
+  * filter chain the format defines (delta and the x86 / ARM /
+  * ARM-Thumb / ARM64 / PowerPC / SPARC / IA-64 / RISC-V branch
+  * converters before LZMA2). The wrapper adds what the library lacks:
+  * the [[MaxOutput]] cap on decoded bytes, a window memory limit of
+  * the same size (a dictionary larger than the output cap can never be
+  * used, so the header is refused before anything is allocated), the
+  * declared-size check of the alone header, refusals as
+  * `IllegalArgumentException`, and xz-java's array cache: without it
+  * every decode allocates the whole dictionary (64 MiB for an `xz -9`
+  * stream, even for one byte of output). `XzSpec` pins
+  * byte-exact output against system-xz compressions
   * (`tools/gen_xz_fixtures.py`). */
 object Xz {
 
   /** Hard cap on total decompressed output — corrupt-header safety. */
   val MaxOutput: Int = 1 << 30
 
-  // ------------------------------------------------------------ crc64
+  /** xz-java memory limit in KiB: a [[MaxOutput]]-sized window plus
+    * the coder state. */
+  private val MemoryLimitKiB = (MaxOutput >> 10) + 1024
 
-  private val Crc64Table: Array[Long] = {
-    val poly = 0xC96C5795D7870F42L // ECMA-182, reflected
-    val t = new Array[Long](256)
-    var i = 0
-    while (i < 256) {
-      var c = i.toLong
-      var k = 0
-      while (k < 8) { c = if ((c & 1L) != 0) (c >>> 1) ^ poly else c >>> 1; k += 1 }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private def crc64(b: Array[Byte], from: Int, until: Int): Long = {
-    var c = ~0L
-    var i = from
-    while (i < until) { c = (c >>> 8) ^ Crc64Table(((c ^ b(i)) & 0xff).toInt); i += 1 }
-    ~c
-  }
-
-  private def crc32(b: Array[Byte], from: Int, until: Int): Long = {
-    val c = new java.util.zip.CRC32()
-    c.update(b, from, until - from)
-    c.getValue
-  }
-
-  // ------------------------------------------------------------- vli
-
-  /** xz variable-length integer: 7 bits/byte LE, high bit continues. */
-  private def vli(p: Array[Byte], at: Int): (Long, Int) = {
-    var v = 0L
-    var i = 0
-    var done = false
-    while (!done) {
-      require(i < 9 && at + i < p.length, "xz: bad multibyte integer")
-      val b = p(at + i) & 0xff
-      v |= (b & 0x7fL) << (7 * i)
-      i += 1
-      if ((b & 0x80) == 0) done = true
-    }
-    (v, i)
-  }
-
-  private def u32le(p: Array[Byte], i: Int): Long =
-    ((p(i) & 0xffL)) | ((p(i + 1) & 0xffL) << 8) | ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-
-  // ------------------------------------------------------ range decoder
-
-  private final class RangeDec(p: Array[Byte], var pos: Int, val limit: Int) {
-    var range: Int = -1 // 0xFFFFFFFF
-    var code: Int = 0
-    require(p(pos) == 0, "lzma: range coder must start with a zero byte")
-    pos += 1
-    var i = 0
-    while (i < 4) { code = (code << 8) | (p(pos) & 0xff); pos += 1; i += 1 }
-
-    private def normalize(): Unit =
-      if ((range & 0xFF000000) == 0) {
-        range <<= 8
-        code = (code << 8) | (if (pos < limit) { val b = p(pos) & 0xff; pos += 1; b } else 0)
-      }
-
-    def decodeBit(probs: Array[Short], idx: Int): Int = {
-      val v = probs(idx) & 0xffff
-      val bound = (range >>> 11) * v
-      // unsigned compare code < bound
-      if ((code ^ Int.MinValue) < (bound ^ Int.MinValue)) {
-        probs(idx) = (v + ((2048 - v) >>> 5)).toShort
-        range = bound
-        normalize()
-        0
-      } else {
-        probs(idx) = (v - (v >>> 5)).toShort
-        range -= bound
-        code -= bound
-        normalize()
-        1
-      }
-    }
-
-    def decodeDirect(n: Int): Int = {
-      var res = 0
-      var i = n
-      while (i > 0) {
-        range = range >>> 1
-        code -= range
-        val t = 0 - (code >>> 31) // 0 or -1
-        code += range & t
-        require(code != range, "lzma: corrupted direct bits")
-        normalize()
-        res = (res << 1) + t + 1
-        i -= 1
-      }
-      res
-    }
-
-    def bitTree(probs: Array[Short], base: Int, n: Int): Int = {
-      var m = 1
-      var i = 0
-      while (i < n) { m = (m << 1) | decodeBit(probs, base + m); i += 1 }
-      m - (1 << n)
-    }
-
-    def bitTreeReverse(probs: Array[Short], base: Int, n: Int): Int = {
-      var m = 1
-      var sym = 0
-      var i = 0
-      while (i < n) {
-        val b = decodeBit(probs, base + m)
-        m = (m << 1) | b
-        sym |= b << i
-        i += 1
-      }
-      sym
-    }
-
-    def finishedClean: Boolean = code == 0
-  }
-
-  // ------------------------------------------------------- lzma state
-
-  /** Growable decode buffer (shared by the LZMA2 and alone paths). */
-  private final class Grow(var arr: Array[Byte], var len: Int) {
-    def ensure(n: Int): Unit = {
-      require(len.toLong + n <= MaxOutput, "lzma: output cap exceeded")
-      if (len + n > arr.length) {
-        var cap = math.max(arr.length, 64)
-        while (cap < len + n) cap <<= 1
-        arr = java.util.Arrays.copyOf(arr, cap)
-      }
+  /** xz-java's array cache for the alone decoder. xz-java 1.10's
+    * `LZMAInputStream`, unlike its LZMA2 path, never clears the
+    * dictionary's last byte, which it reads as the first literal's
+    * context; a reused dictionary would misdecode, so it is cleared
+    * here. */
+  private object AloneArrays extends BasicArrayCache {
+    override def getByteArray(size: Int, fillWithZeros: Boolean): Array[Byte] = {
+      val b = super.getByteArray(size, fillWithZeros)
+      if (size > 0) b(size - 1) = 0
+      b
     }
   }
 
-  private final class Lzma(var lc: Int, var lp: Int, var pb: Int) {
-    var state = 0
-    var rep0 = 0
-    var rep1 = 0
-    var rep2 = 0
-    var rep3 = 0
-    // probability arrays, all init 1024
-    var lit: Array[Short] = _
-    val isMatch = init(12 << 4)
-    val isRep = init(12)
-    val isRepG0 = init(12)
-    val isRepG1 = init(12)
-    val isRepG2 = init(12)
-    val isRep0Long = init(12 << 4)
-    val posSlot = init(4 * 64)
-    val specPos = init(115)
-    val align = init(16)
-    // length coders: [choice, choice2, low 16*8, mid 16*8, high 256]
-    val lenProbs = init(2 + 16 * 8 + 16 * 8 + 256)
-    val repLenProbs = init(2 + 16 * 8 + 16 * 8 + 256)
-    resetState()
-
-    private def init(n: Int): Array[Short] = Array.fill(n)(1024.toShort)
-
-    def setProps(props: Int): Unit = {
-      require(props < 9 * 5 * 5, s"lzma: bad props byte $props")
-      lc = props % 9
-      lp = (props / 9) % 5
-      pb = props / 45
-      require(lc + lp <= 4, s"lzma: lc+lp too large ($lc+$lp)") // xz restriction
-    }
-
-    def resetState(): Unit = {
-      state = 0
-      rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      def re(a: Array[Short]): Unit = java.util.Arrays.fill(a, 1024.toShort)
-      re(isMatch); re(isRep); re(isRepG0); re(isRepG1); re(isRepG2); re(isRep0Long)
-      re(posSlot); re(specPos); re(align); re(lenProbs); re(repLenProbs)
-      lit = Array.fill(0x300 << (lc + lp))(1024.toShort)
-    }
-
-    private def decodeLen(rc: RangeDec, probs: Array[Short], posState: Int): Int =
-      if (rc.decodeBit(probs, 0) == 0) 2 + rc.bitTree(probs, 2 + (posState << 3), 3)
-      else if (rc.decodeBit(probs, 1) == 0) 10 + rc.bitTree(probs, 2 + 128 + (posState << 3), 3)
-      else 18 + rc.bitTree(probs, 2 + 256, 8)
-
-    /** Decode into `g` until `g.len == until`, or — when `until` is
-      * negative — until the end-of-stream marker (the `.lzma` alone
-      * format's unknown-size mode). Returns true iff the marker ended
-      * the stream. `dictStart` bounds match reach and anchors the
-      * position contexts. */
-    def run(rc: RangeDec, g: Grow, until: Long, dictStart: Int): Boolean = {
-      val pbMask = (1 << pb) - 1
-      val lpMask = (1 << lp) - 1
-      var marker = false
-      while (!marker && (until < 0 || g.len < until)) {
-        val pos = g.len
-        val posState = (pos - dictStart) & pbMask
-        if (rc.decodeBit(isMatch, (state << 4) + posState) == 0) {
-          // literal
-          val prevByte = if (pos > dictStart) g.arr(pos - 1) & 0xff else 0
-          val litState = ((((pos - dictStart) & lpMask) << lc) + (prevByte >> (8 - lc))) * 0x300
-          var symbol = 1
-          if (state >= 7) {
-            var matchByte = g.arr(pos - rep0 - 1) & 0xff
-            var break = false
-            while (!break && symbol < 0x100) {
-              val matchBit = (matchByte >> 7) & 1
-              matchByte = (matchByte << 1) & 0xff
-              val bit = rc.decodeBit(lit, litState + ((1 + matchBit) << 8) + symbol)
-              symbol = (symbol << 1) | bit
-              if (matchBit != bit) {
-                while (symbol < 0x100) symbol = (symbol << 1) | rc.decodeBit(lit, litState + symbol)
-                break = true
-              }
-            }
-          }
-          while (symbol < 0x100) symbol = (symbol << 1) | rc.decodeBit(lit, litState + symbol)
-          g.ensure(1)
-          g.arr(pos) = (symbol - 0x100).toByte
-          g.len += 1
-          state = if (state < 4) 0 else if (state < 10) state - 3 else state - 6
-        } else {
-          var len = 0
-          if (rc.decodeBit(isRep, state) == 1) {
-            // rep match
-            require(pos > dictStart, "lzma: rep match at dictionary start")
-            if (rc.decodeBit(isRepG0, state) == 0) {
-              if (rc.decodeBit(isRep0Long, (state << 4) + posState) == 0) {
-                // short rep: one byte at rep0
-                state = if (state < 7) 9 else 11
-                g.ensure(1)
-                g.arr(pos) = g.arr(pos - rep0 - 1)
-                g.len += 1
-                len = -1 // handled
-              }
-            } else {
-              val dist =
-                if (rc.decodeBit(isRepG1, state) == 0) rep1
-                else if (rc.decodeBit(isRepG2, state) == 0) { val d = rep2; rep2 = rep1; d }
-                else { val d = rep3; rep3 = rep2; rep2 = rep1; d }
-              rep1 = rep0
-              rep0 = dist
-            }
-            if (len == 0) {
-              len = decodeLen(rc, repLenProbs, posState)
-              state = if (state < 7) 8 else 11
-            } else len = 0 // short rep already emitted
-          } else {
-            // new match
-            rep3 = rep2; rep2 = rep1; rep1 = rep0
-            len = decodeLen(rc, lenProbs, posState)
-            state = if (state < 7) 7 else 10
-            val lenToPosState = math.min(len - 2, 3)
-            val slot = rc.bitTree(posSlot, lenToPosState << 6, 6)
-            if (slot < 4) rep0 = slot
-            else {
-              val numDirect = (slot >> 1) - 1
-              var dist = (2 | (slot & 1)) << numDirect
-              if (slot < 14)
-                dist += rc.bitTreeReverse(specPos, dist - slot, numDirect)
-              else {
-                dist += rc.decodeDirect(numDirect - 4) << 4
-                dist += rc.bitTreeReverse(align, 0, 4)
-              }
-              rep0 = dist
-              if (rep0 == -1) {
-                require(until < 0, "lzma: end marker inside sized chunk")
-                marker = true
-              }
-            }
-          }
-          if (!marker && len > 0) {
-            require(rep0 >= 0 && rep0 < pos - dictStart,
-              s"lzma: distance ${rep0 + 1} beyond dictionary")
-            require(until < 0 || pos + len <= until, "lzma: match overruns chunk")
-            g.ensure(len)
-            var i = 0
-            while (i < len) { g.arr(pos + i) = g.arr(pos - rep0 - 1 + i); i += 1 }
-            g.len += len
-          }
-        }
-      }
-      marker
-    }
-  }
-
-  // ------------------------------------------------------------ lzma2
-
-  /** Decode one LZMA2 chunk sequence into a growing buffer; returns
-    * (bytes produced, input bytes consumed incl. the 0x00 end mark). */
-  // ------------------------------------------------- delta/BCJ filters
-
-  /** Non-last filters of a block's chain (xz file format §5.3): the
-    * delta filter and the branch-call-jump (BCJ) executable filters,
-    * decoded IN PLACE over the block's LZMA2 output, in reverse of
-    * their listed (encode) order. Algorithms per the public .xz file
-    * format spec and the public-domain LZMA-SDK branch converters they
-    * normatively reference; every one validated byte-exact against
-    * system xz in `XzSpec`. IA64 and RISC-V convertors refuse by name
-    * (rare; silent mis-decode would corrupt text). */
-  private object BlockFilters {
-
-    @inline private def test86MsByte(b: Int): Boolean = b == 0 || b == 0xff
-
-    /** Is `fid` a supported non-last filter? */
-    def supported(fid: Long): Boolean =
-      fid == 0x03L || fid == 0x04L || fid == 0x05L || fid == 0x07L ||
-        fid == 0x08L || fid == 0x09L || fid == 0x0aL
-
-    def name(fid: Long): String = fid match {
-      case 0x03 => "delta"; case 0x04 => "x86";     case 0x05 => "powerpc"
-      case 0x06 => "ia64";  case 0x07 => "arm";     case 0x08 => "armthumb"
-      case 0x09 => "sparc"; case 0x0a => "arm64";   case 0x0b => "riscv"
-      case f => f"0x$f%x"
-    }
-
-    /** Decode one filter over `buf` in place. `props` from the block
-      * header: delta takes 1 byte (distance-1); BCJ takes 0 or 4 bytes
-      * (little-endian start offset). */
-    def decode(fid: Long, props: Array[Byte], buf: Array[Byte]): Unit = fid match {
-      case 0x03 =>
-        require(props.length == 1, "xz: delta filter needs exactly 1 props byte")
-        val dist = (props(0) & 0xff) + 1
-        var i = dist
-        while (i < buf.length) { buf(i) = (buf(i) + buf(i - dist)).toByte; i += 1 }
-      case _ =>
-        require(props.isEmpty || props.length == 4,
-          s"xz: ${name(fid)} filter props must be 0 or 4 bytes")
-        val start =
-          if (props.isEmpty) 0
-          else (props(0) & 0xff) | ((props(1) & 0xff) << 8) |
-            ((props(2) & 0xff) << 16) | ((props(3) & 0xff) << 24)
-        fid match {
-          case 0x04 => x86(buf, start)
-          case 0x05 => powerpc(buf, start)
-          case 0x07 => arm(buf, start)
-          case 0x08 => armThumb(buf, start)
-          case 0x09 => sparc(buf, start)
-          case 0x0a => arm64(buf, start)
-          case f => throw new IllegalArgumentException(
-            s"xz: filter ${name(f)} unsupported (refused by name)")
-        }
-    }
-
-    /** x86 E8/E9 rel32 converter (decode direction): a CALL/JMP whose
-      * displacement field top byte is 00/FF converts from absolute
-      * back to relative; a 3-bit mask of recently-seen E8/E9 bytes
-      * guards against converting displacement bytes that are
-      * themselves E8/E9 (the format's documented heuristic). */
-    private def x86(buf: Array[Byte], nowPos: Int): Unit = {
-      val allowed = Array(true, true, true, false, true, false, false, false)
-      val bitNum = Array(0, 1, 2, 2, 3, 3, 3, 3)
-      if (buf.length <= 4) return
-      var prevMask = 0
-      var prevPos = -1L
-      val limit = buf.length - 4
-      var i = 0
-      while (i < limit) {
-        if ((buf(i) & 0xfe) != 0xe8) i += 1
-        else {
-          val d = i - prevPos
-          var skip = false
-          if (d > 3) prevMask = 0
-          else {
-            prevMask = (prevMask << (d.toInt - 1)) & 7
-            if (prevMask != 0) {
-              val b = buf(i + 4 - bitNum(prevMask)) & 0xff
-              if (!allowed(prevMask) || test86MsByte(b)) {
-                prevPos = i
-                prevMask = ((prevMask << 1) & 7) | 1
-                skip = true
-              }
-            }
-          }
-          if (!skip) {
-            prevPos = i
-            if (test86MsByte(buf(i + 4) & 0xff)) {
-              var src = (buf(i + 1) & 0xff) | ((buf(i + 2) & 0xff) << 8) |
-                ((buf(i + 3) & 0xff) << 16) | ((buf(i + 4) & 0xff) << 24)
-              var dest = 0
-              var loop = true
-              while (loop) {
-                dest = src - (nowPos + i + 5)
-                if (prevMask == 0) loop = false
-                else {
-                  val j = bitNum(prevMask) * 8
-                  val b = (dest >>> (24 - j)) & 0xff
-                  if (!test86MsByte(b)) loop = false
-                  else src = dest ^ ((1 << (32 - j)) - 1)
-                }
-              }
-              dest &= 0x01ffffff
-              if ((dest & 0x01000000) != 0) dest |= 0xfe000000
-              buf(i + 1) = dest.toByte
-              buf(i + 2) = (dest >>> 8).toByte
-              buf(i + 3) = (dest >>> 16).toByte
-              buf(i + 4) = (dest >>> 24).toByte
-              i += 4
-            } else {
-              prevMask = ((prevMask << 1) & 7) | 1
-            }
-          }
-          i += 1
-        }
-      }
-    }
-
-    /** ARM BL converter (4-byte LE words, opcode byte 0xEB). */
-    private def arm(buf: Array[Byte], nowPos: Int): Unit = {
-      var i = 0
-      while (i + 4 <= buf.length) {
-        if ((buf(i + 3) & 0xff) == 0xeb) {
-          val src = (((buf(i + 2) & 0xff) << 16) | ((buf(i + 1) & 0xff) << 8) |
-            (buf(i) & 0xff)) << 2
-          val dest = (src - (nowPos + i + 8)) >>> 2
-          buf(i + 2) = (dest >>> 16).toByte
-          buf(i + 1) = (dest >>> 8).toByte
-          buf(i) = dest.toByte
-        }
-        i += 4
-      }
-    }
-
-    /** ARM-Thumb BL pair converter (2-byte alignment). */
-    private def armThumb(buf: Array[Byte], nowPos: Int): Unit = {
-      var i = 0
-      while (i + 4 <= buf.length) {
-        if ((buf(i + 1) & 0xf8) == 0xf0 && (buf(i + 3) & 0xf8) == 0xf8) {
-          val src = (((buf(i + 1) & 7) << 19) | ((buf(i) & 0xff) << 11) |
-            ((buf(i + 3) & 7) << 8) | (buf(i + 2) & 0xff)) << 1
-          val dest = (src - (nowPos + i + 4)) >>> 1
-          buf(i + 1) = (0xf0 | ((dest >>> 19) & 7)).toByte
-          buf(i) = (dest >>> 11).toByte
-          buf(i + 3) = (0xf8 | ((dest >>> 8) & 7)).toByte
-          buf(i + 2) = dest.toByte
-          i += 2
-        }
-        i += 2
-      }
-    }
-
-    /** PowerPC branch converter (4-byte BE words). */
-    private def powerpc(buf: Array[Byte], nowPos: Int): Unit = {
-      var i = 0
-      while (i + 4 <= buf.length) {
-        if ((buf(i) & 0xfc) == 0x48 && (buf(i + 3) & 3) == 1) {
-          val src = ((buf(i) & 3) << 24) | ((buf(i + 1) & 0xff) << 16) |
-            ((buf(i + 2) & 0xff) << 8) | (buf(i + 3) & 0xfc)
-          val dest = src - (nowPos + i)
-          buf(i) = (0x48 | ((dest >>> 24) & 3)).toByte
-          buf(i + 1) = (dest >>> 16).toByte
-          buf(i + 2) = (dest >>> 8).toByte
-          buf(i + 3) = ((dest & 0xfc) | 1).toByte
-        }
-        i += 4
-      }
-    }
-
-    /** SPARC CALL converter (4-byte BE words). */
-    private def sparc(buf: Array[Byte], nowPos: Int): Unit = {
-      var i = 0
-      while (i + 4 <= buf.length) {
-        val b0 = buf(i) & 0xff
-        val b1 = buf(i + 1) & 0xff
-        if ((b0 == 0x40 && (b1 & 0xc0) == 0) || (b0 == 0x7f && (b1 & 0xc0) == 0xc0)) {
-          var src = ((b0 << 24) | (b1 << 16) | ((buf(i + 2) & 0xff) << 8) |
-            (buf(i + 3) & 0xff)) << 2
-          var dest = src - (nowPos + i)
-          dest >>>= 2
-          dest = ((0x40000000 - (dest & 0x400000)) | 0x40000000 | (dest & 0x3fffff))
-          buf(i) = (dest >>> 24).toByte
-          buf(i + 1) = (dest >>> 16).toByte
-          buf(i + 2) = (dest >>> 8).toByte
-          buf(i + 3) = dest.toByte
-        }
-        i += 4
-      }
-    }
-
-    /** ARM64 BL + ADRP converter (4-byte LE words). */
-    private def arm64(buf: Array[Byte], nowPos: Int): Unit = {
-      var i = 0
-      while (i + 4 <= buf.length) {
-        val instr = (buf(i) & 0xff) | ((buf(i + 1) & 0xff) << 8) |
-          ((buf(i + 2) & 0xff) << 16) | ((buf(i + 3) & 0xff) << 24)
-        var out = 0
-        var changed = false
-        if ((instr >>> 26) == 0x25) { // BL: imm26
-          val pc = (nowPos + i) >>> 2
-          out = 0x94000000 | ((instr - pc) & 0x03ffffff)
-          changed = true
-        } else if ((instr & 0x9f000000) == 0x90000000) { // ADRP: imm21
-          val src = ((instr >>> 29) & 3) | ((instr >>> 3) & 0x001ffffc)
-          if (((src + 0x00020000) & 0x001c0000) == 0) { // ±512 MiB window only
-            val pc = (nowPos + i) >>> 12
-            val dest = src - pc
-            out = instr & 0x9000001f
-            out |= (dest & 3) << 29
-            out |= (dest & 0x0003fffc) << 3
-            out |= (0 - (dest & 0x00020000)) & 0x00e00000
-            changed = true
-          }
-        }
-        if (changed) {
-          buf(i) = out.toByte
-          buf(i + 1) = (out >>> 8).toByte
-          buf(i + 2) = (out >>> 16).toByte
-          buf(i + 3) = (out >>> 24).toByte
-        }
-        i += 4
-      }
-    }
-  }
-
-  private def lzma2(p: Array[Byte], from: Int, until: Int,
-      out: java.io.ByteArrayOutputStream, buf: Array[Byte], bufLen0: Int): (Int, Int) = {
-    val g = new Grow(buf, bufLen0)
-    var at = from
-    var dictStart = g.len
-    var lzma: Lzma = null
-    var needProps = true
-
-    def u16be(i: Int): Int = ((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)
-
-    var done = false
-    while (!done) {
-      require(at < until, "xz: LZMA2 payload truncated")
-      val c = p(at) & 0xff
-      at += 1
-      if (c == 0) done = true
-      else if (c <= 2) {
-        // uncompressed chunk; 0x01 also resets the dictionary
-        val size = u16be(at) + 1
-        at += 2
-        require(at + size <= until, "xz: uncompressed chunk truncated")
-        if (c == 1) dictStart = g.len
-        g.ensure(size)
-        System.arraycopy(p, at, g.arr, g.len, size)
-        g.len += size
-        at += size
-        if (lzma != null) lzma.resetState() // spec: uncompressed chunk resets state
-      } else {
-        require(c >= 0x80, s"xz: invalid LZMA2 control byte $c")
-        val unpacked = ((c & 0x1f) << 16) + u16be(at) + 1
-        val packed = u16be(at + 2) + 1
-        at += 4
-        val resetMode = (c >> 5) & 3
-        if (resetMode >= 2) {
-          require(at < until, "xz: props byte truncated")
-          if (lzma == null) lzma = new Lzma(0, 0, 0)
-          lzma.setProps(p(at) & 0xff)
-          at += 1
-          needProps = false
-        }
-        require(lzma != null && !needProps, "xz: LZMA2 chunk before props")
-        if (resetMode == 3) dictStart = g.len
-        if (resetMode >= 1) lzma.resetState()
-        require(at + packed <= until, "xz: compressed chunk truncated")
-        val rc = new RangeDec(p, at, at + packed)
-        val expect = g.len + unpacked
-        lzma.run(rc, g, expect, dictStart)
-        require(g.len == expect, "xz: chunk produced short output")
-        require(rc.pos == at + packed && rc.finishedClean,
-          s"xz: chunk size mismatch (consumed ${rc.pos - at} of $packed)")
-        at += packed
-      }
-    }
-    out.write(g.arr, bufLen0, g.len - bufLen0)
-    (g.len - bufLen0, at - from)
-  }
-
-  // --------------------------------------------------------- container
-
-  private val Magic = Array[Byte](0xFD.toByte, '7', 'z', 'X', 'Z', 0)
-
-  def decompress(p: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var at = 0
-    while (at < p.length) {
-      // stream padding between concatenated streams: zeros whose total
-      // length must be a multiple of 4 (xz file format §2.2) — the
-      // reference xz rejects misaligned padding, so must we.
-      if (p(at) == 0) {
-        val padFrom = at
-        while (at < p.length && p(at) == 0) at += 1
-        require((at - padFrom) % 4 == 0, "xz: stream padding not 4-aligned")
-      }
-      else {
-        require(at + 12 <= p.length && (0 until 6).forall(i => p(at + i) == Magic(i)),
-          "xz: bad stream magic")
-        val flagsAt = at + 6
-        require(p(flagsAt) == 0, "xz: reserved stream flag")
-        val checkType = p(flagsAt + 1) & 0xff
-        require(crc32(p, flagsAt, flagsAt + 2) == u32le(p, flagsAt + 2),
-          "xz: stream header CRC mismatch")
-        val checkSize = checkType match {
-          case 0x00 => 0
-          case 0x01 => 4 // CRC32
-          case 0x04 => 8 // CRC64
-          case 0x0a => 32 // SHA-256
-          case t => throw new IllegalArgumentException(s"xz: unsupported check type $t")
-        }
-        at += 12
-
-        var inIndex = false
-        while (!inIndex) {
-          val first = p(at) & 0xff
-          if (first == 0) inIndex = true // index indicator
-          else {
-            // block header
-            val hdrSize = (first + 1) * 4
-            val hdrEnd = at + hdrSize
-            require(crc32(p, at, hdrEnd - 4) == u32le(p, hdrEnd - 4),
-              "xz: block header CRC mismatch")
-            val flags = p(at + 1) & 0xff
-            val nFilters = (flags & 3) + 1
-            require((flags & 0x3c) == 0, "xz: reserved block flags")
-            var ha = at + 2
-            if ((flags & 0x40) != 0) ha += vli(p, ha)._2 // compressed size (informative)
-            if ((flags & 0x80) != 0) ha += vli(p, ha)._2 // uncompressed size
-            // filter chain: up to 4 filters, the LAST must be LZMA2;
-            // the preceding ones (delta / BCJ converters) are decoded
-            // in reverse order over the block's LZMA2 output
-            require(nFilters <= 4, s"xz: $nFilters-filter chains invalid")
-            val chain = Array.ofDim[(Long, Array[Byte])](nFilters)
-            var fi = 0
-            while (fi < nFilters) {
-              val (fid, fl) = vli(p, ha); ha += fl
-              val (propsSize, pl) = vli(p, ha); ha += pl
-              require(propsSize >= 0 && ha + propsSize <= hdrEnd - 4,
-                "xz: filter props overrun block header")
-              val props = java.util.Arrays.copyOfRange(p, ha, ha + propsSize.toInt)
-              ha += propsSize.toInt
-              if (fi == nFilters - 1)
-                require(fid == 0x21, f"xz: last filter 0x$fid%x must be LZMA2")
-              else
-                require(BlockFilters.supported(fid),
-                  s"xz: filter ${BlockFilters.name(fid)} unsupported (refused by name)")
-              chain(fi) = (fid, props)
-              fi += 1
-            }
-            require(chain(nFilters - 1)._2.length == 1, "xz: bad LZMA2 props size")
-            // LZMA2 props byte = dict size (bounds only; we keep the whole output)
-            // header padding between the filter fields and the CRC32
-            // must be all-zero (xz file format §3.1.6)
-            while (ha < hdrEnd - 4) {
-              require(p(ha) == 0, "xz: nonzero block header padding")
-              ha += 1
-            }
-
-            val dataFrom = hdrEnd
-            val before = out.size()
-            val (produced, consumed) =
-              if (nFilters == 1)
-                lzma2(p, dataFrom, p.length, out, new Array[Byte](64 * 1024), 0)
-              else {
-                // decode LZMA2 into a scratch, then undo the non-last
-                // filters in reverse listed order, in place
-                val tmp = new java.io.ByteArrayOutputStream()
-                val r = lzma2(p, dataFrom, p.length, tmp, new Array[Byte](64 * 1024), 0)
-                val block = tmp.toByteArray
-                var fj = nFilters - 2
-                while (fj >= 0) {
-                  BlockFilters.decode(chain(fj)._1, chain(fj)._2, block)
-                  fj -= 1
-                }
-                out.write(block, 0, block.length)
-                r
-              }
-            var dataEnd = dataFrom + consumed
-            // block padding to 4-byte multiple
-            while ((dataEnd - at) % 4 != 0) {
-              require(p(dataEnd) == 0, "xz: nonzero block padding")
-              dataEnd += 1
-            }
-            // verify the check over the DECODED bytes of this block
-            val decoded = out.toByteArray // (bounded by MaxOutput)
-            checkType match {
-              case 0x01 =>
-                require(crc32(decoded, before, decoded.length) == u32le(p, dataEnd),
-                  "xz: block CRC32 mismatch")
-              case 0x04 =>
-                var v = 0L
-                var i = 0
-                while (i < 8) { v |= (p(dataEnd + i) & 0xffL) << (8 * i); i += 1 }
-                require(crc64(decoded, before, decoded.length) == v,
-                  "xz: block CRC64 mismatch")
-              case 0x0a =>
-                val md = java.security.MessageDigest.getInstance("SHA-256")
-                md.update(decoded, before, decoded.length - before)
-                val got = md.digest()
-                require((0 until 32).forall(i => got(i) == p(dataEnd + i)),
-                  "xz: block SHA-256 mismatch")
-              case _ => ()
-            }
-            at = dataEnd + checkSize
-            require(produced == out.size() - before, "xz: block accounting drift")
-          }
-        }
-
-        // index: skip (structure-validated lightly), then footer
-        val idxStart = at
-        at += 1 // indicator
-        val (nRecs, nl) = vli(p, at); at += nl
-        var r = 0L
-        while (r < nRecs) {
-          at += vli(p, at)._2 // unpadded size
-          at += vli(p, at)._2 // uncompressed size
-          r += 1
-        }
-        while ((at - idxStart) % 4 != 0) {
-          require(p(at) == 0, "xz: nonzero index padding")
-          at += 1
-        }
-        require(crc32(p, idxStart, at) == u32le(p, at), "xz: index CRC mismatch")
-        at += 4
-        // footer: crc32(4) backwardSize(4) flags(2) "YZ"
-        require(crc32(p, at + 4, at + 10) == u32le(p, at), "xz: footer CRC mismatch")
-        require(p(at + 10) == 'Y' && p(at + 11) == 'Z', "xz: bad footer magic")
-        at += 12
-      }
-    }
-    out.toByteArray
-  }
+  def decompress(p: Array[Byte]): Array[Byte] =
+    Streams.drain("xz", MaxOutput)(
+      new XZInputStream(new java.io.ByteArrayInputStream(p), MemoryLimitKiB, BasicArrayCache.getInstance()))
 
   /** The `.lzma` "alone" format (13-byte header: props, dict size,
     * 64-bit uncompressed size with all-ones meaning unknown →
     * end-marker termination). No magic bytes exist for this format,
     * so routing is explicit, never sniffed. */
-  /** Raw LZMA2 chunk-stream decode — the 7z LZMA2 coder body is the
-    * same chunked format as an xz block body ([[SevenZ]] reuses it). */
-  private[sources] def lzma2Raw(p: Array[Byte], from: Int, until: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    lzma2(p, from, until, out, new Array[Byte](64 * 1024), 0)
-    out.toByteArray
-  }
-
-  /** The delta/BCJ converters, shared with [[SevenZ]]'s filter coders
-    * (same public algorithms, same ids as the xz filter table). */
-  private[sources] def blockFilterDecode(fid: Long, props: Array[Byte], buf: Array[Byte]): Unit =
-    BlockFilters.decode(fid, props, buf)
-
   def decompressAlone(p: Array[Byte]): Array[Byte] = {
-    require(p.length >= 18, "lzma: truncated alone header")
-    val lz = new Lzma(0, 0, 0)
-    lz.setProps(p(0) & 0xff)
-    lz.resetState()
+    require(p.length >= 13, "lzma: truncated alone header")
     var size = 0L
     var i = 0
     while (i < 8) { size |= (p(5 + i) & 0xffL) << (8 * i); i += 1 }
-    val rc = new RangeDec(p, 13, p.length)
-    val g = new Grow(new Array[Byte](64 * 1024), 0)
-    if (size == -1L) {
-      require(lz.run(rc, g, -1L, 0), "lzma: stream ended without the end marker")
-    } else {
-      require(size <= MaxOutput, s"lzma: declared size $size > cap")
-      lz.run(rc, g, size, 0)
-      require(g.len.toLong == size, "lzma: short stream")
-    }
-    require(rc.finishedClean, "lzma: range coder not finished clean")
-    java.util.Arrays.copyOf(g.arr, g.len)
+    require(size == -1L || (size >= 0 && size <= MaxOutput),
+      s"lzma: declared size ${java.lang.Long.toUnsignedString(size)} > cap")
+    Streams.drain("lzma", MaxOutput)(
+      new LZMAInputStream(new java.io.ByteArrayInputStream(p), MemoryLimitKiB, AloneArrays))
   }
 }

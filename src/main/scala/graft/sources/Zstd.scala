@@ -1,358 +1,38 @@
 package graft.sources
 
-/** Zstandard frame decoder (RFC 8878), pure JVM and from scratch — the
-  * compression format modern crawl dumps actually ship in (`.warc.zst`
-  * dump distribution replaced `.warc.gz` at the major crawl archives).
-  * The JDK has Deflate but no zstd; without this tier the engine could
-  * read every record of a 100 TB dump EXCEPT the way it's delivered.
+import com.github.luben.zstd.{ZstdDictDecompress, ZstdException, ZstdInputStream, Zstd => LibZstd}
+
+/** Zstandard (RFC 8878) decoding — the compression format modern crawl
+  * dumps actually ship in (`.warc.zst` replaced `.warc.gz` at the major
+  * crawl archives).
   *
-  * Decode-complete for the non-dictionary format:
-  *  - frames: magic, frame-header descriptor (content size 0/1/2/4/8,
-  *    single-segment, checksum flag), window descriptor, multi-frame
-  *    concatenation, skippable frames;
-  *  - blocks: raw / RLE / compressed, 3-byte headers, last-block bit;
-  *  - literals: raw / RLE / Huffman (1-stream and 4-stream with jump
-  *    table) / treeless (previous table reuse);
-  *  - Huffman: direct 4-bit weights and FSE-compressed weights (the
-  *    two-state interleaved stream), implicit last weight, canonical
-  *    table fill by ascending weight then symbol order;
-  *  - FSE: normalized-count reader (threshold descent, repeat-zero
-  *    flags, "less than one" probabilities), decode-table spread with
-  *    `step = (size>>1)+(size>>3)+3` and low-probability cells at the
-  *    high end;
-  *  - sequences: predefined / RLE / FSE-compressed / repeat modes for
-  *    LL/OF/ML, the backward bitstream (LL→OF→ML state init, offset→
-  *    ML→LL extra-bit reads, LL→ML→OF state updates), the three
-  *    repeat offsets including the litLength==0 rotation and the
-  *    `rep1 - 1` corner, overlapping match copies.
-  *
-  * Dictionary frames (RFC 8878 §5, `zstd --train`/`-D`) decode via
-  * [[parseDictionary]]/[[decompress(p:Array[Byte],dict:Zstd.Dict)*]]:
-  * entropy-table seeds, repcode seeds, and content-as-history; a frame
-  * declaring a dictionary id refuses without it. The 4-byte content
-  * checksum is skipped, not verified (frame integrity at corpus scale
-  * is [[graft.operators.Integrity]]'s Merkle tier's job; a wrong
-  * decode cannot slip through the golden specs, which pin byte-exact
-  * output against system-libzstd compressions — `tools/
-  * gen_zstd_fixtures.py`).
-  *
-  * Decoding is strict: structural violations throw (and the callers'
-  * `keepCorrupt` tiers quarantine); nothing silently truncates.
-  */
+  * Decoded by zstd-jni (libzstd, on the Spark classpath): every block
+  * and entropy mode, multi-frame concatenation, skippable frames, the
+  * content checksum (verified), and dictionary frames (RFC 8878 §5,
+  * `zstd --train` / `-D`) through [[parseDictionary]]. The wrapper
+  * walks the frame headers first and adds what the library lacks: a
+  * frame that declares a dictionary id refuses with "dictionary
+  * required" without a dictionary and "dictionary id mismatch" under
+  * the wrong one (libzstd reports both as one "Dictionary mismatch");
+  * a declared content size over [[MaxOutput]] refuses before anything
+  * is allocated; a truncated frame refuses before decoding starts; the
+  * decoded total is capped at [[MaxOutput]]. A frame whose window
+  * exceeds libzstd's default 128 MiB decoder limit (`zstd --long=28`
+  * and above) refuses. `ZstdSpec` pins byte-exact output against
+  * system-zstd compressions (`tools/gen_zstd_fixtures.py`).
+  * [[encodeRawFrames]] is the store-mode writer gates use to
+  * synthesize inputs. */
 object Zstd {
 
   private val Magic = 0xFD2FB528
   private val SkippableMin = 0x184D2A50
   private val SkippableMax = 0x184D2A5F
+  private val DictMagic = 0xEC30A437
 
-  /** Hard cap on a single frame's declared/accumulated output — local
-    * safety valve against corrupt headers (callers decode one archive
-    * member at a time; a 100 TB dump is many frames, not one). */
+  /** Hard cap on decoded output — local safety valve against corrupt
+    * headers (callers decode one archive member at a time; a 100 TB
+    * dump is many frames, not one). */
   val MaxOutput: Int = 1 << 30
-
-  // ------------------------------------------------------------ bit io
-
-  /** Forward bitstream, LSB-first within bytes (FSE table descriptions). */
-  private final class FwdBits(p: Array[Byte], from: Int, val to: Int) {
-    var pos: Int = from * 8 // absolute bit index
-    def read(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val b = pos + i
-        require(b < to * 8, "zstd: FSE description overruns")
-        if ((p(b >> 3) & (1 << (b & 7))) != 0) v |= 1 << i
-        i += 1
-      }
-      pos += n
-      v
-    }
-    def peek(n: Int): Int = { val saved = pos; val v = read(n); pos = saved; v }
-    def bytePos: Int = (pos + 7) >> 3
-  }
-
-  /** Backward bitstream (Huffman literals, FSE weight stream, sequence
-    * stream): a 1-bit sentinel tops the last byte; reads consume the
-    * most-significant remaining bits. `bitsLeft` may go negative —
-    * reads past the start zero-fill (the FSE weight loop's termination
-    * depends on observing the overdraw). */
-  private final class BackBits(p: Array[Byte], from: Int, until: Int) {
-    require(until > from, "zstd: empty bitstream")
-    private val last = p(until - 1) & 0xff
-    require(last != 0, "zstd: bitstream without sentinel")
-    private var pos: Long = // absolute bit index just ABOVE the payload
-      (until - from - 1).toLong * 8 + (31 - Integer.numberOfLeadingZeros(last))
-    def bitsLeft: Long = pos
-    def read(n: Int): Int = {
-      var v = 0L
-      var i = n - 1
-      while (i >= 0) {
-        val b = pos - (n - i)
-        if (b >= 0) {
-          val bit = (p(from + (b >> 3).toInt) >> (b & 7).toInt) & 1
-          v |= bit.toLong << i
-        }
-        i -= 1
-      }
-      pos -= n
-      v.toInt
-    }
-    def readLong(n: Int): Long = {
-      if (n <= 31) read(n).toLong & 0xffffffffL
-      else {
-        val hi = read(n - 16).toLong & 0xffffffffL
-        val lo = read(16).toLong & 0xffffL
-        (hi << 16) | lo
-      }
-    }
-  }
-
-  // ----------------------------------------------------------- fse
-
-  /** One FSE decode-table cell. */
-  private[sources] final case class FseCell(symbol: Int, nbBits: Int, newStateBase: Int)
-
-  private[sources] final class FseTable(val accuracyLog: Int, val cells: Array[FseCell])
-
-  /** Normalized-count reader (RFC 8878 §4.1.1). Returns (probs, accuracyLog);
-    * bits advances past the description (byte-aligned by the caller). */
-  private def readNCount(bits: FwdBits, maxAccuracy: Int): (Array[Int], Int) = {
-    val accuracyLog = bits.read(4) + 5
-    require(accuracyLog <= maxAccuracy, s"zstd: accuracy log $accuracyLog > $maxAccuracy")
-    val probs = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var remaining = (1 << accuracyLog) + 1
-    var threshold = 1 << accuracyLog
-    var nbBits = accuracyLog + 1
-    var prev0 = false
-    while (remaining > 1) {
-      if (prev0) {
-        var n0 = 0
-        var flags = bits.read(2)
-        while (flags == 3) { n0 += 3; flags = bits.read(2) }
-        n0 += flags
-        var i = 0
-        while (i < n0) { probs += 0; i += 1 }
-        prev0 = false
-      } else {
-        val max = (2 * threshold - 1) - remaining
-        val low = bits.peek(nbBits - 1)
-        val count =
-          if (low < max) { bits.read(nbBits - 1); low }
-          else {
-            val v = bits.read(nbBits)
-            if (v >= threshold) v - max else v
-          }
-        val prob = count - 1
-        remaining -= (if (prob < 0) -prob else prob)
-        probs += prob
-        prev0 = prob == 0
-        while (remaining < threshold && remaining > 1) { nbBits -= 1; threshold >>= 1 }
-      }
-      require(probs.length <= 256, "zstd: FSE description too long")
-    }
-    require(remaining == 1, "zstd: FSE counts don't sum to table size")
-    (probs.toArray, accuracyLog)
-  }
-
-  /** FSE_buildDTable: spread positive-probability symbols with the
-    * canonical step, park "less than one" symbols at the high end. */
-  private def buildFseTable(probs: Array[Int], accuracyLog: Int): FseTable = {
-    val size = 1 << accuracyLog
-    val symbols = new Array[Int](size)
-    var highThreshold = size - 1
-    var s = 0
-    while (s < probs.length) {
-      if (probs(s) == -1) { symbols(highThreshold) = s; highThreshold -= 1 }
-      s += 1
-    }
-    val step = (size >> 1) + (size >> 3) + 3
-    var pos = 0
-    s = 0
-    while (s < probs.length) {
-      var i = 0
-      while (i < probs(s)) {
-        symbols(pos) = s
-        pos = (pos + step) & (size - 1)
-        while (pos > highThreshold) pos = (pos + step) & (size - 1)
-        i += 1
-      }
-      s += 1
-    }
-    require(pos == 0, "zstd: FSE spread did not close")
-    val nextState = new Array[Int](probs.length)
-    s = 0
-    while (s < probs.length) { nextState(s) = math.abs(probs(s)); s += 1 }
-    val cells = new Array[FseCell](size)
-    var c = 0
-    while (c < size) {
-      val sym = symbols(c)
-      val ns = nextState(sym)
-      nextState(sym) += 1
-      val nb = accuracyLog - (31 - Integer.numberOfLeadingZeros(ns))
-      cells(c) = FseCell(sym, nb, (ns << nb) - size)
-      c += 1
-    }
-    new FseTable(accuracyLog, cells)
-  }
-
-  /** A single-symbol table (sequence-mode RLE): zero-bit self loop. */
-  private def rleTable(symbol: Int): FseTable =
-    new FseTable(0, Array(FseCell(symbol, 0, 0)))
-
-  // ----------------------------------------------------------- huffman
-
-  /** Huffman decode table: 2^maxBits entries of (symbol, nbBits). */
-  private[sources] final class HufTable(val maxBits: Int, val symbol: Array[Byte], val nbBits: Array[Byte])
-
-  private def buildHufTable(weights: Array[Int]): HufTable = {
-    var total = 0L
-    var i = 0
-    while (i < weights.length) { if (weights(i) > 0) total += 1L << (weights(i) - 1); i += 1 }
-    require(total > 1 && java.lang.Long.bitCount(total) == 1,
-      "zstd: Huffman weights don't fill a power-of-two table")
-    val maxBits = java.lang.Long.numberOfTrailingZeros(total).toInt
-    require(maxBits <= 11, s"zstd: Huffman depth $maxBits > 11")
-    val size = 1 << maxBits
-    val sym = new Array[Byte](size)
-    val nb = new Array[Byte](size)
-    var pos = 0
-    var w = 1
-    while (w <= maxBits) {
-      var s = 0
-      while (s < weights.length) {
-        if (weights(s) == w) {
-          val len = 1 << (w - 1)
-          val bitsFor = maxBits + 1 - w
-          var j = 0
-          while (j < len) { sym(pos + j) = s.toByte; nb(pos + j) = bitsFor.toByte; j += 1 }
-          pos += len
-        }
-        s += 1
-      }
-      w += 1
-    }
-    require(pos == size, "zstd: Huffman fill incomplete")
-    new HufTable(maxBits, sym, nb)
-  }
-
-  /** Huffman tree description → weights incl. the implicit last. */
-  private def readHufWeights(p: Array[Byte], at: Int): (Array[Int], Int) = {
-    val h = p(at) & 0xff
-    val (explicit, consumed) =
-      if (h >= 128) {
-        val n = h - 127
-        val w = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          val b = p(at + 1 + i / 2) & 0xff
-          w(i) = if (i % 2 == 0) b >> 4 else b & 0xf
-          i += 1
-        }
-        (w, 1 + (n + 1) / 2)
-      } else {
-        // FSE-compressed weight stream: h = compressed size
-        val bits = new FwdBits(p, at + 1, at + 1 + h)
-        val (probs, al) = readNCount(bits, 6)
-        val table = buildFseTable(probs, al)
-        val payloadFrom = bits.bytePos
-        val back = new BackBits(p, payloadFrom, at + 1 + h)
-        var s1 = back.read(table.accuracyLog)
-        var s2 = back.read(table.accuracyLog)
-        val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var done = false
-        while (!done) {
-          out += table.cells(s1).symbol
-          s1 = table.cells(s1).newStateBase + back.read(table.cells(s1).nbBits)
-          if (back.bitsLeft < 0) { out += table.cells(s2).symbol; done = true }
-          else {
-            out += table.cells(s2).symbol
-            s2 = table.cells(s2).newStateBase + back.read(table.cells(s2).nbBits)
-            if (back.bitsLeft < 0) { out += table.cells(s1).symbol; done = true }
-          }
-          require(out.length <= 255, "zstd: too many Huffman weights")
-        }
-        (out.toArray, 1 + h)
-      }
-    // implicit last weight: total must land exactly on a power of two
-    var total = 0L
-    var i = 0
-    while (i < explicit.length) {
-      require(explicit(i) <= 11, "zstd: Huffman weight > 11")
-      if (explicit(i) > 0) total += 1L << (explicit(i) - 1)
-      i += 1
-    }
-    require(total > 0, "zstd: Huffman weights all zero")
-    val maxBits = (64 - java.lang.Long.numberOfLeadingZeros(total)).toInt // next pow2 exponent
-    val missing = (1L << maxBits) - total
-    require(missing > 0 && java.lang.Long.bitCount(missing) == 1,
-      "zstd: implicit Huffman weight impossible")
-    val lastW = (java.lang.Long.numberOfTrailingZeros(missing) + 1).toInt
-    ((explicit :+ lastW), consumed)
-  }
-
-  // ----------------------------------------------------- seq code tables
-
-  private val LlBase = Array(
-    0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-    16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024, 2048, 4096,
-    8192, 16384, 32768, 65536)
-  private val LlBits = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-  private val MlBase = Array(
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18, 19, 20, 21, 22,
-    23, 24, 25, 26, 27, 28, 29, 30, 31, 32, 33, 34,
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027, 2051,
-    4099, 8195, 16387, 32771, 65539)
-  private val MlBits = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  private val LlDefault = Array(
-    4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1, 2, 2, 2, 2, 2, 2, 2, 2,
-    2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1)
-  private val MlDefault = Array(
-    1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    -1, -1, -1, -1, -1, -1, -1)
-  private val OfDefault = Array(
-    1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    -1, -1, -1, -1, -1)
-
-  private lazy val LlPredef = buildFseTable(LlDefault, 6)
-  private lazy val MlPredef = buildFseTable(MlDefault, 6)
-  private lazy val OfPredef = buildFseTable(OfDefault, 5)
-
-  // ------------------------------------------------------------ decode
-
-  /** Growable random-access output buffer — match copies read back into
-    * already-decoded bytes, which ByteArrayOutputStream can't do. */
-  private final class Buf {
-    var arr: Array[Byte] = new Array[Byte](64 * 1024)
-    var len: Int = 0
-    def ensure(n: Int): Unit =
-      if (len + n > arr.length) {
-        var cap = arr.length
-        while (cap < len + n) cap <<= 1
-        arr = java.util.Arrays.copyOf(arr, cap)
-      }
-    def write(b: Array[Byte], from: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(b, from, arr, len, n); len += n
-    }
-    def fill(b: Byte, n: Int): Unit = {
-      ensure(n); java.util.Arrays.fill(arr, len, len + n, b); len += n
-    }
-    /** Overlap-correct LZ match copy at distance `offset`. */
-    def matchCopy(offset: Int, n: Int): Unit = {
-      require(offset >= 1 && offset <= len, s"zstd: offset $offset beyond history $len")
-      ensure(n)
-      var i = 0
-      val src = len - offset
-      while (i < n) { arr(len + i) = arr(src + i); i += 1 }
-      len += n
-    }
-  }
 
   private def u32le(p: Array[Byte], i: Int): Int =
     (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) | ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
@@ -360,348 +40,56 @@ object Zstd {
   /** Decompress a (possibly multi-frame) zstd payload. */
   def decompress(p: Array[Byte]): Array[Byte] = decompress(p, null)
 
-  /** Decompress with an optional dictionary (RFC 8878 §5) — the framing
-    * CC-style shard tooling increasingly ships (`zstd --train` + `-D`).
-    * The dictionary seeds each frame with: initial history (matches may
-    * reach into the dictionary content), initial entropy tables (used
-    * by Treeless literals and Repeat FSE modes in the FIRST block), and
-    * initial repcodes. A frame that declares a Dictionary_ID refuses
-    * without the right dictionary; with one provided, the id must
-    * match. */
+  /** Decompress with an optional dictionary. A frame that declares a
+    * Dictionary_ID refuses without the right dictionary. */
   def decompress(p: Array[Byte], dict: Dict): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
     var at = 0
     while (at < p.length) {
       require(at + 4 <= p.length, "zstd: truncated magic")
       val magic = u32le(p, at)
-      if (magic >= SkippableMin && magic <= SkippableMax) {
-        require(at + 8 <= p.length, "zstd: truncated skippable frame")
-        val sz = u32le(p, at + 4)
-        at += 8 + sz
-        require(at <= p.length, "zstd: skippable frame overruns")
-      } else {
+      if (magic < SkippableMin || magic > SkippableMax) {
         require(magic == Magic, f"zstd: bad magic 0x$magic%08x")
-        at = decodeFrame(p, at + 4, out, dict)
+        checkHeader(p, at, dict)
       }
+      at += (try LibZstd.findFrameCompressedSize(p, at).toInt
+      catch {
+        case e: ZstdException =>
+          throw new IllegalArgumentException(s"zstd: frame at $at truncated or corrupt (${e.getMessage})", e)
+      })
     }
-    out.toByteArray
-  }
-
-  /** A parsed dictionary: entropy-table and repcode seeds + content. */
-  final class Dict private[sources] (
-      val id: Int,
-      private[sources] val hufTable: HufTable,
-      private[sources] val ofTable: FseTable,
-      private[sources] val mlTable: FseTable,
-      private[sources] val llTable: FseTable,
-      private[sources] val rep1: Int,
-      private[sources] val rep2: Int,
-      private[sources] val rep3: Int,
-      private[sources] val content: Array[Byte])
-
-  private val DictMagic = 0xEC30A437
-
-  /** Parse a `zstd --train` dictionary: magic, id, entropy tables
-    * (Huffman literals, then FSE offset/matchLength/litLength in that
-    * order, same descriptors as compressed blocks), three 4-byte
-    * repcodes, then raw content. */
-  def parseDictionary(d: Array[Byte]): Dict = {
-    require(d.length >= 8 && u32le(d, 0) == DictMagic, "zstd: bad dictionary magic")
-    val id = u32le(d, 4)
-    val (weights, hufConsumed) = readHufWeights(d, 8)
-    val huf = buildHufTable(weights)
-    var at = 8 + hufConsumed
-    def fse(maxLog: Int, maxSym: Int): FseTable = {
-      val bits = new FwdBits(d, at, d.length)
-      val (probs, al) = readNCount(bits, maxLog)
-      require(probs.length - 1 <= maxSym, "zstd: dictionary FSE symbol out of range")
-      at = bits.bytePos
-      buildFseTable(probs, al)
+    Streams.drain("zstd", MaxOutput) {
+      val in = new ZstdInputStream(new java.io.ByteArrayInputStream(p))
+      if (dict != null) in.setDict(dict.ddict)
+      in
     }
-    val of = fse(8, 31)
-    val ml = fse(9, 52)
-    val ll = fse(9, 35)
-    require(at + 12 <= d.length, "zstd: dictionary truncated before repcodes")
-    val r1 = u32le(d, at); val r2 = u32le(d, at + 4); val r3 = u32le(d, at + 8)
-    at += 12
-    val content = java.util.Arrays.copyOfRange(d, at, d.length)
-    require(r1 > 0 && r2 > 0 && r3 > 0 &&
-      r1 <= content.length && r2 <= content.length && r3 <= content.length,
-      "zstd: dictionary repcodes out of range")
-    new Dict(id, huf, of, ml, ll, r1, r2, r3, content)
   }
 
-  private final class Frame {
-    var hufTable: HufTable = null // last Huffman table (treeless reuse)
-    var llTable: FseTable = null
-    var mlTable: FseTable = null
-    var ofTable: FseTable = null
-    var rep1: Int = 1
-    var rep2: Int = 4
-    var rep3: Int = 8
-  }
-
-  private def decodeFrame(p: Array[Byte], from: Int, out: java.io.ByteArrayOutputStream,
-      dict: Dict): Int = {
-    var at = from
-    val fhd = p(at) & 0xff; at += 1
-    val fcsFlag = fhd >> 6
-    val singleSegment = (fhd & 0x20) != 0
-    require((fhd & 0x08) == 0, "zstd: reserved FHD bit set")
-    val checksum = (fhd & 0x04) != 0
-    val didSize = Array(0, 1, 2, 4)((fhd & 0x03))
-    if (!singleSegment) at += 1 // window descriptor (bounds checked via MaxOutput)
-    if (didSize > 0) {
-      var did = 0
-      var i = 0
-      while (i < didSize) { did |= (p(at + i) & 0xff) << (8 * i); i += 1 }
-      at += didSize
+  /** Dictionary id and declared content size of the frame at `at`
+    * (a frame header is at most 18 bytes). */
+  private def checkHeader(p: Array[Byte], at: Int, dict: Dict): Unit = {
+    val head = java.util.Arrays.copyOfRange(p, at, math.min(p.length, at + 18))
+    val did = LibZstd.getDictIdFromFrame(head).toInt
+    if (did != 0) {
       require(dict != null, f"zstd: frame declares dictionary 0x$did%08x — dictionary required")
       require(did == dict.id, f"zstd: dictionary id mismatch (frame 0x$did%08x, dict 0x${dict.id}%08x)")
     }
-    val fcsSize = fcsFlag match {
-      case 0 => if (singleSegment) 1 else 0
-      case 1 => 2
-      case 2 => 4
-      case 3 => 8
-    }
-    var contentSize = -1L
-    if (fcsSize > 0) {
-      var v = 0L
-      var i = 0
-      while (i < fcsSize) { v |= (p(at + i) & 0xffL) << (8 * i); i += 1 }
-      if (fcsSize == 2) v += 256
-      contentSize = v
-      require(contentSize <= MaxOutput, s"zstd: declared content $contentSize > cap")
-      at += fcsSize
-    }
-
-    val frame = new Frame
-    val window = new Buf // frame-local history for match copies
-    var emitFrom = 0
-    if (dict != null) {
-      // dictionary seeds: content as reachable history (not emitted),
-      // entropy tables for Treeless/Repeat modes, initial repcodes
-      window.write(dict.content, 0, dict.content.length)
-      emitFrom = dict.content.length
-      frame.hufTable = dict.hufTable
-      frame.ofTable = dict.ofTable
-      frame.mlTable = dict.mlTable
-      frame.llTable = dict.llTable
-      frame.rep1 = dict.rep1
-      frame.rep2 = dict.rep2
-      frame.rep3 = dict.rep3
-    }
-    var last = false
-    while (!last) {
-      require(at + 3 <= p.length, "zstd: truncated block header")
-      val bh = (p(at) & 0xff) | ((p(at + 1) & 0xff) << 8) | ((p(at + 2) & 0xff) << 16)
-      at += 3
-      last = (bh & 1) != 0
-      val btype = (bh >> 1) & 3
-      val bsize = bh >> 3
-      require(btype != 3, "zstd: reserved block type")
-      btype match {
-        case 0 => // raw
-          require(at + bsize <= p.length, "zstd: raw block truncated")
-          window.write(p, at, bsize); at += bsize
-        case 1 => // RLE: bsize = regenerated size, 1 byte payload
-          require(at < p.length, "zstd: RLE block truncated")
-          window.fill(p(at), bsize); at += 1
-        case 2 =>
-          require(at + bsize <= p.length, "zstd: compressed block truncated")
-          decodeCompressedBlock(p, at, at + bsize, frame, window)
-          at += bsize
-      }
-      require(window.len <= MaxOutput, "zstd: output cap exceeded")
-    }
-    out.write(window.arr, emitFrom, window.len - emitFrom)
-    if (contentSize >= 0)
-      require((window.len - emitFrom).toLong == contentSize,
-        s"zstd: content size mismatch (${window.len - emitFrom} != $contentSize)")
-    if (checksum) {
-      require(at + 4 <= p.length, "zstd: truncated content checksum")
-      at += 4 // xxhash64 low word — skipped, not verified
-    }
-    at
+    val size = LibZstd.getFrameContentSize(head, 0, head.length, false)
+    require(size <= MaxOutput, s"zstd: declared content $size > cap")
   }
 
-  /** Decode one compressed block into `window` (which also serves as
-    * the match-copy history for this frame). */
-  private def decodeCompressedBlock(p: Array[Byte], from: Int, until: Int,
-      frame: Frame, window: Buf): Unit = {
-    var at = from
+  /** A loaded `zstd --train` dictionary and its id. */
+  final class Dict private[sources] (val id: Int, private[sources] val ddict: ZstdDictDecompress)
 
-    // ---- literals section
-    val b0 = p(at) & 0xff
-    val litType = b0 & 3
-    val sizeFormat = (b0 >> 2) & 3
-    var literals: Array[Byte] = null
-    litType match {
-      case 0 | 1 => // raw | rle
-        val (regen, hdr) = sizeFormat match {
-          case 0 | 2 => (b0 >> 3, 1)
-          case 1 => ((b0 >> 4) | ((p(at + 1) & 0xff) << 4), 2)
-          case 3 => ((b0 >> 4) | ((p(at + 1) & 0xff) << 4) | ((p(at + 2) & 0xff) << 12), 3)
-        }
-        at += hdr
-        if (litType == 0) {
-          literals = java.util.Arrays.copyOfRange(p, at, at + regen); at += regen
-        } else {
-          literals = new Array[Byte](regen)
-          java.util.Arrays.fill(literals, p(at)); at += 1
-        }
-      case 2 | 3 => // compressed | treeless
-        val (regen, comp, hdr, fourStreams) = sizeFormat match {
-          case 0 =>
-            val h = b0 | ((p(at + 1) & 0xff) << 8) | ((p(at + 2) & 0xff) << 16)
-            ((h >> 4) & 0x3ff, (h >> 14) & 0x3ff, 3, false)
-          case 1 =>
-            val h = b0 | ((p(at + 1) & 0xff) << 8) | ((p(at + 2) & 0xff) << 16)
-            ((h >> 4) & 0x3ff, (h >> 14) & 0x3ff, 3, true)
-          case 2 =>
-            val h = b0.toLong | ((p(at + 1) & 0xffL) << 8) | ((p(at + 2) & 0xffL) << 16) |
-              ((p(at + 3) & 0xffL) << 24)
-            (((h >> 4) & 0x3fff).toInt, ((h >> 18) & 0x3fff).toInt, 4, true)
-          case 3 =>
-            val h = b0.toLong | ((p(at + 1) & 0xffL) << 8) | ((p(at + 2) & 0xffL) << 16) |
-              ((p(at + 3) & 0xffL) << 24) | ((p(at + 4) & 0xffL) << 32)
-            (((h >> 4) & 0x3ffff).toInt, ((h >> 22) & 0x3ffff).toInt, 5, true)
-        }
-        at += hdr
-        val sectionEnd = at + comp
-        var streamsAt = at
-        val table =
-          if (litType == 2) {
-            val (weights, consumed) = readHufWeights(p, at)
-            streamsAt = at + consumed
-            val t = buildHufTable(weights)
-            frame.hufTable = t
-            t
-          } else {
-            require(frame.hufTable != null, "zstd: treeless literals with no previous table")
-            frame.hufTable
-          }
-        literals = new Array[Byte](regen)
-        if (!fourStreams) decodeHuffman(p, streamsAt, sectionEnd, table, literals, 0, regen)
-        else {
-          val s1 = (p(streamsAt) & 0xff) | ((p(streamsAt + 1) & 0xff) << 8)
-          val s2 = (p(streamsAt + 2) & 0xff) | ((p(streamsAt + 3) & 0xff) << 8)
-          val s3 = (p(streamsAt + 4) & 0xff) | ((p(streamsAt + 5) & 0xff) << 8)
-          val base = streamsAt + 6
-          val perStream = (regen + 3) / 4
-          val lastLen = regen - 3 * perStream
-          require(lastLen >= 0, "zstd: bad 4-stream split")
-          decodeHuffman(p, base, base + s1, table, literals, 0, perStream)
-          decodeHuffman(p, base + s1, base + s1 + s2, table, literals, perStream, perStream)
-          decodeHuffman(p, base + s1 + s2, base + s1 + s2 + s3, table, literals, 2 * perStream, perStream)
-          decodeHuffman(p, base + s1 + s2 + s3, sectionEnd, table, literals, 3 * perStream, lastLen)
-        }
-        at = sectionEnd
-    }
-
-    // ---- sequences section
-    val s0 = p(at) & 0xff
-    val nbSeq =
-      if (s0 < 128) { at += 1; s0 }
-      else if (s0 < 255) { val v = ((s0 - 128) << 8) + (p(at + 1) & 0xff); at += 2; v }
-      else { val v = (p(at + 1) & 0xff) + ((p(at + 2) & 0xff) << 8) + 0x7f00; at += 3; v }
-
-    if (nbSeq == 0) {
-      window.write(literals, 0, literals.length)
-      return
-    }
-
-    val scm = p(at) & 0xff; at += 1
-    require((scm & 3) == 0, "zstd: reserved SCM bits")
-
-    def seqTable(mode: Int, predef: => FseTable, prev: () => FseTable,
-        set: FseTable => Unit, maxLog: Int, maxSym: Int): Unit = mode match {
-      case 0 => set(predef)
-      case 1 =>
-        val sym = p(at) & 0xff; at += 1
-        require(sym <= maxSym, "zstd: RLE symbol out of range")
-        set(rleTable(sym))
-      case 2 =>
-        val bits = new FwdBits(p, at, until)
-        val (probs, al) = readNCount(bits, maxLog)
-        require(probs.length - 1 <= maxSym, "zstd: FSE symbol out of range")
-        at = bits.bytePos
-        set(buildFseTable(probs, al))
-      case 3 =>
-        require(prev() != null, "zstd: repeat mode with no previous table")
-        set(prev())
-    }
-
-    seqTable((scm >> 6) & 3, LlPredef, () => frame.llTable, frame.llTable = _, 9, 35)
-    seqTable((scm >> 4) & 3, OfPredef, () => frame.ofTable, frame.ofTable = _, 8, 31)
-    seqTable((scm >> 2) & 3, MlPredef, () => frame.mlTable, frame.mlTable = _, 9, 52)
-
-    val ll = frame.llTable
-    val ml = frame.mlTable
-    val of = frame.ofTable
-
-    val bits = new BackBits(p, at, until)
-    var llState = bits.read(ll.accuracyLog)
-    var ofState = bits.read(of.accuracyLog)
-    var mlState = bits.read(ml.accuracyLog)
-
-    var litAt = 0
-    var seq = 0
-    while (seq < nbSeq) {
-      val ofCode = of.cells(ofState).symbol
-      val mlCode = ml.cells(mlState).symbol
-      val llCode = ll.cells(llState).symbol
-      require(ofCode <= 31 && mlCode <= 52 && llCode <= 35, "zstd: sequence code out of range")
-      val ofValue = (1L << ofCode) + bits.readLong(ofCode)
-      val matchLength = MlBase(mlCode) + bits.read(MlBits(mlCode))
-      val litLength = LlBase(llCode) + bits.read(LlBits(llCode))
-
-      // repeat-offset resolution
-      var offset = 0
-      if (ofValue > 3) {
-        offset = (ofValue - 3).toInt
-        frame.rep3 = frame.rep2; frame.rep2 = frame.rep1; frame.rep1 = offset
-      } else {
-        val idx = if (litLength == 0) ofValue + 1 else ofValue
-        idx match {
-          case 1 => offset = frame.rep1
-          case 2 =>
-            offset = frame.rep2
-            frame.rep2 = frame.rep1; frame.rep1 = offset
-          case 3 =>
-            offset = frame.rep3
-            frame.rep3 = frame.rep2; frame.rep2 = frame.rep1; frame.rep1 = offset
-          case 4 => // litLength == 0 && ofValue == 3
-            offset = frame.rep1 - 1
-            require(offset >= 1, "zstd: repeat offset underflow")
-            frame.rep3 = frame.rep2; frame.rep2 = frame.rep1; frame.rep1 = offset
-        }
-      }
-
-      require(litAt + litLength <= literals.length, "zstd: literal overrun")
-      window.write(literals, litAt, litLength)
-      litAt += litLength
-      window.matchCopy(offset, matchLength)
-
-      seq += 1
-      if (seq < nbSeq) {
-        llState = ll.cells(llState).newStateBase + bits.read(ll.cells(llState).nbBits)
-        mlState = ml.cells(mlState).newStateBase + bits.read(ml.cells(mlState).nbBits)
-        ofState = of.cells(ofState).newStateBase + bits.read(of.cells(ofState).nbBits)
-      }
-    }
-    require(bits.bitsLeft == 0, s"zstd: sequence bitstream not fully consumed (${bits.bitsLeft})")
-    window.write(literals, litAt, literals.length - litAt)
+  /** Load a `zstd --train` dictionary (magic, id, entropy tables,
+    * content); libzstd refuses corrupt entropy tables here. */
+  def parseDictionary(d: Array[Byte]): Dict = {
+    require(d.length >= 8 && u32le(d, 0) == DictMagic, "zstd: bad dictionary magic")
+    new Dict(u32le(d, 4), new ZstdDictDecompress(d))
   }
-
-  // ------------------------------------------------------------ encode
 
   /** Store-mode encoder: a valid single-segment frame of raw blocks.
     * This is the TRANSPORT shape (gates round-trip corpus-derived
-    * payloads through the real frame/block walk at runtime); the
-    * entropy paths are validated against system-libzstd fixtures,
-    * which no from-scratch encoder could make more honest. */
+    * payloads through the real frame/block walk at runtime). */
   def encodeRawFrames(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(data.length + 16)
     def w32(v: Int): Unit = {
@@ -725,28 +113,5 @@ object Zstd {
       at += len
     } while (at < n)
     out.toByteArray
-  }
-
-  /** One backward Huffman stream → `count` symbols. */
-  private def decodeHuffman(p: Array[Byte], from: Int, until: Int,
-      table: HufTable, out: Array[Byte], outAt: Int, count: Int): Unit = {
-    val last = p(until - 1) & 0xff
-    require(until > from && last != 0, "zstd: bad Huffman stream")
-    var pos: Long = (until - from - 1).toLong * 8 + (31 - Integer.numberOfLeadingZeros(last))
-    var i = 0
-    while (i < count) {
-      // peek maxBits (zero-filled past the start), consume nbBits
-      var v = 0
-      var b = table.maxBits - 1
-      while (b >= 0) {
-        val bit = pos - (table.maxBits - b)
-        if (bit >= 0 && (p(from + (bit >> 3).toInt) & (1 << (bit & 7).toInt)) != 0) v |= 1 << b
-        b -= 1
-      }
-      out(outAt + i) = table.symbol(v)
-      pos -= table.nbBits(v)
-      i += 1
-    }
-    require(pos == 0, s"zstd: Huffman stream not fully consumed ($pos bits left)")
   }
 }

@@ -5,8 +5,11 @@ package graft.tools
   * that matters at 100 TB is MB/s/core at the flatMap grain, which
   * multiplies by executor cores. Payload: the fixture word soup
   * (compresses ~5-8×, like web text). Producers are the classpath
-  * reference encoders (snappy-java, lz4 store frames are decode-only
-  * so lz4 uses the committed CLI fixtures when present, else skips). */
+  * reference encoders (JDK gzip, snappy-java, xz-java, commons-compress
+  * bzip2 and 7z), the repo's store-mode zstd writer, and the committed
+  * system-CLI fixtures for lz4 and .Z (no encoder for those on the
+  * classpath). Every case decodes through the public `graft.sources`
+  * entry points and is checked byte-equal before it is timed. */
 object DecodeBench {
 
   private def lcgWords(n: Int): Array[Byte] = {
@@ -19,68 +22,75 @@ object DecodeBench {
     }.mkString(" ").getBytes("US-ASCII")
   }
 
+  private def encode(f: java.io.OutputStream => java.io.OutputStream, data: Array[Byte]): Array[Byte] = {
+    val o = new java.io.ByteArrayOutputStream()
+    val w = f(o); w.write(data); w.close(); o.toByteArray
+  }
+
   def main(args: Array[String]): Unit = {
     val data = lcgWords(2000000) // ~11.4 MB of word soup
-    def bench(name: String, compressed: Array[Byte], decode: Array[Byte] => Array[Byte]): Unit = {
+    def bench(name: String, compressed: Array[Byte], decode: Array[Byte] => Array[Byte],
+        expect: Array[Byte] = data, reps: Int = 5): Unit = {
       var out: Array[Byte] = null
       // warmup
       (0 until 3).foreach(_ => out = decode(compressed))
-      require(java.util.Arrays.equals(out, data), s"$name: decode mismatch")
-      val reps = 5
+      require(java.util.Arrays.equals(out, expect), s"$name: decode mismatch")
       val t0 = System.nanoTime()
       (0 until reps).foreach(_ => out = decode(compressed))
       val sec = (System.nanoTime() - t0) / 1e9
-      val mbs = data.length.toDouble * reps / sec / 1e6
-      println(f"$name%-16s ${compressed.length}%9d -> ${data.length}%9d bytes  $mbs%8.1f MB/s")
+      val mbs = expect.length.toDouble * reps / sec / 1e6
+      println(f"$name%-16s ${compressed.length}%9d -> ${expect.length}%9d bytes  $mbs%8.1f MB/s")
     }
+    def fixture(path: String): Array[Byte] =
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("src/test/resources", path))
+    val fixtureText = lcgWords(60000) // the payload of the big_text CLI fixtures
 
     // gzip (JDK deflate under the strict member walk)
-    val gz = { val o = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(o); g.write(data); g.close(); o.toByteArray }
-    bench("gzip-walk", gz, graft.sources.Gzip.decompress)
+    bench("gzip-walk", encode(new java.util.zip.GZIPOutputStream(_), data), graft.sources.Gzip.decompress)
 
-    // snappy raw + hadoop block (snappy-java produced)
-    bench("snappy-raw", org.xerial.snappy.Snappy.compress(data), graft.sources.Snappy.decodeRaw(_))
-    val had = { val raw = org.xerial.snappy.Snappy.compress(data)
-      val o = new java.io.ByteArrayOutputStream()
+    // snappy raw, framed and hadoop block (snappy-java produced)
+    val raw = org.xerial.snappy.Snappy.compress(data)
+    bench("snappy-raw", raw, graft.sources.Snappy.decodeRaw(_))
+    bench("snappy-framed", encode(new org.xerial.snappy.SnappyFramedOutputStream(_), data),
+      graft.sources.Snappy.decompressFramed)
+    val had = { val o = new java.io.ByteArrayOutputStream()
       for (v <- Seq(data.length, raw.length)) {
         o.write((v >>> 24) & 0xff); o.write((v >>> 16) & 0xff); o.write((v >>> 8) & 0xff); o.write(v & 0xff) }
       o.write(raw, 0, raw.length); o.toByteArray }
     bench("snappy-hadoop", had, graft.sources.Snappy.decodeHadoop)
 
-    // lz4: committed system-CLI fixture is small; synthesize via store
-    // frames for the walk overhead, and use the big CLI fixture if present
-    val lz4Path = java.nio.file.Paths.get("src/test/resources/lz4/big_text_hc.lz4")
-    if (java.nio.file.Files.exists(lz4Path)) {
-      val f = java.nio.file.Files.readAllBytes(lz4Path)
-      val expect = lcgWords(60000)
-      var out: Array[Byte] = null
-      (0 until 3).foreach(_ => out = graft.sources.Lz4.decompress(f))
-      require(java.util.Arrays.equals(out, expect), "lz4 fixture mismatch")
-      val reps = 200
-      val t0 = System.nanoTime()
-      (0 until reps).foreach(_ => out = graft.sources.Lz4.decompress(f))
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"lz4-cli-frames   ${f.length}%9d -> ${expect.length}%9d bytes  ${expect.length.toDouble * reps / sec / 1e6}%8.1f MB/s")
-    }
+    // lz4: the system-CLI fixtures (HC, and block-dependent 64 KiB blocks)
+    bench("lz4-cli-frames", fixture("lz4/big_text_hc.lz4"), graft.sources.Lz4.decompress, fixtureText, 200)
+    bench("lz4-dependent", fixture("lz4/big_text_b4d.lz4"), graft.sources.Lz4.decompress, fixtureText, 200)
 
-    // zstd store frames (walk overhead) + xz/lzma via 7z lzma2 coder
+    // zstd store frames (frame walk overhead)
     bench("zstd-frames", graft.sources.Zstd.encodeRawFrames(data), graft.sources.Zstd.decompress(_))
 
-    // .Z LZW (python-writer parity not needed: use runs-style data via fixture)
-    val zPath = java.nio.file.Paths.get("src/test/resources/lzw_z/big_text.Z")
-    if (java.nio.file.Files.exists(zPath)) {
-      val f = java.nio.file.Files.readAllBytes(zPath)
-      val expect = lcgWords(60000)
-      var out: Array[Byte] = null
-      (0 until 3).foreach(_ => out = graft.sources.LzwZ.decompress(f))
-      require(java.util.Arrays.equals(out, expect), "lzw fixture mismatch")
-      val reps = 50
-      val t0 = System.nanoTime()
-      (0 until reps).foreach(_ => out = graft.sources.LzwZ.decompress(f))
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"lzw-dot-Z        ${f.length}%9d -> ${expect.length}%9d bytes  ${expect.length.toDouble * reps / sec / 1e6}%8.1f MB/s")
+    // xz and lzma-alone (xz-java produced, preset 6)
+    bench("xz", encode(new org.tukaani.xz.XZOutputStream(_, new org.tukaani.xz.LZMA2Options()), data),
+      graft.sources.Xz.decompress)
+    bench("lzma-alone", encode(new org.tukaani.xz.LZMAOutputStream(_, new org.tukaani.xz.LZMA2Options(),
+      data.length.toLong), data), graft.sources.Xz.decompressAlone)
+
+    // bzip2 (commons-compress produced, 900k blocks)
+    bench("bzip2", encode(new org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream(_), data),
+      graft.sources.Bzip2.decompress, reps = 2)
+
+    // 7z: one LZMA2 entry written by commons-compress
+    val sevenZ = {
+      val tmp = java.io.File.createTempFile("decodebench", ".7z")
+      try {
+        val w = new org.apache.commons.compress.archivers.sevenz.SevenZOutputFile(tmp)
+        val e = new org.apache.commons.compress.archivers.sevenz.SevenZArchiveEntry()
+        e.setName("words.txt")
+        w.putArchiveEntry(e); w.write(data); w.closeArchiveEntry(); w.close()
+        java.nio.file.Files.readAllBytes(tmp.toPath)
+      } finally tmp.delete()
     }
+    bench("7z-lzma2", sevenZ, p => graft.sources.SevenZ.extract(p).head._2)
+
+    // .Z LZW (system-compress fixture)
+    bench("lzw-dot-Z", fixture("lzw_z/big_text.Z"), graft.sources.LzwZ.decompress, fixtureText, 50)
     println("DECODEBENCH_DONE")
   }
 }

@@ -3,6 +3,8 @@ package graft.plans
 import graft.SparkTestBase
 
 import graft.operators.Sketches
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,18 +55,37 @@ class HllSketchAggSpec extends SparkTestBase {
     assert(a == rel)
   }
 
-  test("SQL surface: hll_sketch_agg registers via the extension descriptor") {
+  test("SQL surface: graft_hll_sketch_agg registers via its descriptor") {
     val (id, info, builder) = GraftExtensions.hllSketchAggDescriptor
     spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     val n = spark.range(100).selectExpr("CAST(id % 37 AS STRING) AS k")
-      .selectExpr("size(hll_sketch_agg(k, 8)) AS m")
+      .selectExpr("size(graft_hll_sketch_agg(k, 8)) AS m")
       .collect().head.getInt(0)
     assert(n == 256)
     // p must be a literal
     intercept[Exception] {
       spark.range(10).selectExpr("CAST(id AS STRING) AS k", "CAST(id AS INT) AS p")
-        .selectExpr("hll_sketch_agg(k, p)").collect()
+        .selectExpr("graft_hll_sketch_agg(k, p)").collect()
     }
+  }
+
+  test("hll_sketch_agg in an extension session resolves to Spark's built-in") {
+    // a second session on the shared context, built with the extensions
+    // (the shared one predates withExtensions); restore it afterwards
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally { SparkSession.setDefaultSession(spark); SparkSession.setActiveSession(spark) }
+    assert(ext ne spark)
+    val registry = ext.sessionState.functionRegistry
+    assert(registry.lookupFunction(FunctionIdentifier("hll_sketch_agg")).get.getClassName ==
+      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg].getName)
+    assert(registry.lookupFunction(FunctionIdentifier("graft_hll_sketch_agg")).get.getClassName ==
+      classOf[HllSketchAgg].getName)
+    val est = ext.range(1000).selectExpr("CAST(id % 37 AS STRING) AS k")
+      .selectExpr("hll_sketch_estimate(hll_sketch_agg(k)) AS n")
+      .collect().head.getLong(0)
+    assert(est == 37)
   }
 
   test("null keys are ignored; type/p validation fails analysis") {

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * through the CLASSPATH system encoders (java Deflater/gzip,
   * commons-compress bzip2, xz-java xz/lzma, lz4-java frames,
   * snappy-java raw + framed, commons-compress 7z) and must come back
-  * byte-equal through the from-scratch decoders; then seeded
+  * byte-equal through the repo's decode entry points (library-backed
+  * wrappers and from-scratch decoders alike); then seeded
   * structured mutations (byte flips, truncations) of every encoding
   * must terminate — either a clean decode or a refusal, never a hang
   * or an uncontrolled error class. Codecs with no classpath encoder

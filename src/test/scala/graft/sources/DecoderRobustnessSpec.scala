@@ -4,11 +4,13 @@ import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-/** Corruption sweeps over the three from-scratch decoders: every
+/** Corruption sweeps over every ingest decoder — the library-backed
+  * wrappers (xz/lzma, zstd, bzip2, .Z, 7z, ar, cpio) as much as the
+  * from-scratch ones (lz4, snappy, brotli, sequencefile, heif): every
   * truncation point (stride-sampled) and a battery of deterministic
   * bit flips must TERMINATE — either a clean decode (flips can land in
-  * skipped regions; zstd's checksum is unverified by design) or an
-  * exception the `keepCorrupt` tiers quarantine. The property under
+  * skipped regions) or an exception the `keepCorrupt` tiers
+  * quarantine; a native-library crash fails the suite. The property under
   * test is the absence of hangs and runaway allocation: at crawl
   * scale a decoder that loops on corrupt input is a stuck executor,
   * which is worse than a wrong answer because nothing surfaces it. */

@@ -3,11 +3,11 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.commons.compress.archivers.sevenz.{SevenZArchiveEntry, SevenZMethod, SevenZMethodConfiguration, SevenZOutputFile}
 
-/** Golden validation of the from-scratch 7z reader against REAL
-  * archives written by commons-compress's SevenZOutputFile (on the
-  * Spark classpath; LZMA/LZMA2 via xz-java) — coder matrix, multi-file
-  * splits, empty files, directories. The writer is golden-producer
-  * only; the reader under test never touches commons-compress. */
+/** Golden validation of the 7z reader (commons-compress's SevenZFile
+  * under the repo's wrapper) against REAL archives written by
+  * commons-compress's SevenZOutputFile (LZMA/LZMA2 via xz-java) —
+  * coder matrix, multi-file splits, empty files, directories, an
+  * encoded-header re-mux, and refusal by name. */
 class SevenZSpec extends AnyFunSuite {
 
   private def lcgWords(n: Int): String = {

@@ -123,6 +123,16 @@ class ZstdSpec extends AnyFunSuite {
     }
   }
 
+  test("a frame header declaring more than MaxOutput refuses from the header alone") {
+    // single-segment frame, 8-byte content size MaxOutput + 1, then one
+    // empty last raw block: a complete frame whose header alone is wrong
+    val size = Zstd.MaxOutput.toLong + 1
+    val p = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0xe0.toByte) ++
+      (0 until 8).map(i => ((size >>> (8 * i)) & 0xff).toByte) ++ Array[Byte](0x01, 0, 0)
+    val e = intercept[IllegalArgumentException](Zstd.decompress(p))
+    assert(e.getMessage.contains("cap"), e.getMessage)
+  }
+
   test("corruption is loud: bad magic, truncation, dictionary frames") {
     intercept[IllegalArgumentException](Zstd.decompress("not zstd".getBytes))
     val f = fixture("small_text")
