@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 /** Run independent Spark actions concurrently — optimization-guide
   * §2.6 ("overlap independent jobs"): Spark's scheduler happily runs
   * several jobs at once inside one application, and actions are only
@@ -43,15 +45,18 @@ object Par {
     val settled = new java.util.concurrent.LinkedBlockingQueue[Option[Throwable]]()
     thunks.zipWithIndex.foreach { case (f, i) =>
       val t = new Thread(() => {
-        val outcome =
-          try { sc.foreach(_.addJobTag(tag)); f(); None }
-          catch {
-            case e: Throwable =>
-              if (firstErr.compareAndSet(null, e))
-                sc.foreach(_.cancelJobsWithTag(tag, s"sibling Par.jobs branch failed: $e"))
-              Some(e)
-          }
-        settled.put(outcome)
+        var outcome: Option[Throwable] = None
+        // the outcome is always enqueued (`offer` on an unbounded queue
+        // cannot block or see an interrupt), whatever the thunk or the
+        // cancel leaves behind: a lost outcome would hang the caller
+        try { sc.foreach(_.addJobTag(tag)); f() }
+        catch {
+          case e: Throwable =>
+            outcome = Some(e)
+            if (firstErr.compareAndSet(null, e))
+              try sc.foreach(_.cancelJobsWithTag(tag, "a sibling Par.jobs branch failed"))
+              catch { case NonFatal(_) => () } // e.g. a stopped context: no job is left to cancel
+        } finally settled.offer(outcome)
       }, s"graft-par-$i")
       t.setDaemon(true)
       t.start()

@@ -11,13 +11,15 @@ import org.tukaani.xz.{BasicArrayCache, LZMAInputStream, XZInputStream}
   * filter chain the format defines (delta and the x86 / ARM /
   * ARM-Thumb / ARM64 / PowerPC / SPARC / IA-64 / RISC-V branch
   * converters before LZMA2). The wrapper adds what the library lacks:
-  * the [[MaxOutput]] cap on decoded bytes, a window memory limit of
-  * the same size (a dictionary larger than the output cap can never be
-  * used, so the header is refused before anything is allocated), the
-  * declared-size check of the alone header, refusals as
-  * `IllegalArgumentException`, and xz-java's array cache: without it
-  * every decode allocates the whole dictionary (64 MiB for an `xz -9`
-  * stream, even for one byte of output). `XzSpec` pins
+  * the [[MaxOutput]] cap on decoded bytes, a dictionary limit
+  * ([[MaxWindow]]: the header is refused before the dictionary is
+  * allocated), the declared-size check of the alone header, refusals
+  * as `IllegalArgumentException`, and for xz streams xz-java's array
+  * cache: without it every decode allocates the whole dictionary
+  * (64 MiB for an `xz -9` stream, even for one byte of output). Alone
+  * streams use no cache: a declared size already shrinks their
+  * dictionary to the output, and xz-java 1.10's `LZMAInputStream`
+  * misdecodes a reused dictionary array. `XzSpec` pins
   * byte-exact output against system-xz compressions
   * (`tools/gen_xz_fixtures.py`). */
 object Xz {
@@ -25,22 +27,16 @@ object Xz {
   /** Hard cap on total decompressed output — corrupt-header safety. */
   val MaxOutput: Int = 1 << 30
 
-  /** xz-java memory limit in KiB: a [[MaxOutput]]-sized window plus
-    * the coder state. */
-  private val MemoryLimitKiB = (MaxOutput >> 10) + 1024
+  /** Largest dictionary decoded. xz-java allocates the whole declared
+    * dictionary before it decodes a byte, so this bounds what a tiny
+    * crafted header can make one decode allocate. It is four times the
+    * largest preset dictionary of xz and 7-Zip (64 MiB, level 9); a
+    * stream written with a larger custom dictionary refuses. */
+  val MaxWindow: Int = 256 << 20
 
-  /** xz-java's array cache for the alone decoder. xz-java 1.10's
-    * `LZMAInputStream`, unlike its LZMA2 path, never clears the
-    * dictionary's last byte, which it reads as the first literal's
-    * context; a reused dictionary would misdecode, so it is cleared
-    * here. */
-  private object AloneArrays extends BasicArrayCache {
-    override def getByteArray(size: Int, fillWithZeros: Boolean): Array[Byte] = {
-      val b = super.getByteArray(size, fillWithZeros)
-      if (size > 0) b(size - 1) = 0
-      b
-    }
-  }
+  /** xz-java memory limit in KiB: a [[MaxWindow]] dictionary plus the
+    * coder state. */
+  private[sources] val MemoryLimitKiB = (MaxWindow >> 10) + 1024
 
   def decompress(p: Array[Byte]): Array[Byte] =
     Streams.drain("xz", MaxOutput)(
@@ -58,6 +54,6 @@ object Xz {
     require(size == -1L || (size >= 0 && size <= MaxOutput),
       s"lzma: declared size ${java.lang.Long.toUnsignedString(size)} > cap")
     Streams.drain("lzma", MaxOutput)(
-      new LZMAInputStream(new java.io.ByteArrayInputStream(p), MemoryLimitKiB, AloneArrays))
+      new LZMAInputStream(new java.io.ByteArrayInputStream(p), MemoryLimitKiB))
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import com.github.luben.zstd.{ZstdDictDecompress, ZstdException, ZstdInputStream, Zstd => LibZstd}
+import com.github.luben.zstd.{ZstdDecompressCtx, ZstdDictDecompress, ZstdException, ZstdInputStream, Zstd => LibZstd}
 
 /** Zstandard (RFC 8878) decoding — the compression format modern crawl
   * dumps actually ship in (`.warc.zst` replaced `.warc.gz` at the major
@@ -16,10 +16,12 @@ import com.github.luben.zstd.{ZstdDictDecompress, ZstdException, ZstdInputStream
   * the wrong one (libzstd reports both as one "Dictionary mismatch");
   * a declared content size over [[MaxOutput]] refuses before anything
   * is allocated; a truncated frame refuses before decoding starts; the
-  * decoded total is capped at [[MaxOutput]]. A frame whose window
-  * exceeds libzstd's default 128 MiB decoder limit (`zstd --long=28`
-  * and above) refuses. `ZstdSpec` pins byte-exact output against
-  * system-zstd compressions (`tools/gen_zstd_fixtures.py`).
+  * decoded total is capped at [[MaxOutput]], and so is the window
+  * (libzstd's own default stops at 128 MiB, below `zstd --long=28`).
+  * Small payloads whose frames declare their sizes decode through a
+  * per-thread native context, larger ones stream. `ZstdSpec` pins
+  * byte-exact output against system-zstd compressions
+  * (`tools/gen_zstd_fixtures.py`).
   * [[encodeRawFrames]] is the store-mode writer gates use to
   * synthesize inputs. */
 object Zstd {
@@ -43,30 +45,67 @@ object Zstd {
   /** Decompress with an optional dictionary. A frame that declares a
     * Dictionary_ID refuses without the right dictionary. */
   def decompress(p: Array[Byte], dict: Dict): Array[Byte] = {
+    val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)] // start, length, content size
     var at = 0
     while (at < p.length) {
       require(at + 4 <= p.length, "zstd: truncated magic")
       val magic = u32le(p, at)
-      if (magic < SkippableMin || magic > SkippableMax) {
-        require(magic == Magic, f"zstd: bad magic 0x$magic%08x")
-        checkHeader(p, at, dict)
-      }
-      at += (try LibZstd.findFrameCompressedSize(p, at).toInt
+      val skippable = magic >= SkippableMin && magic <= SkippableMax
+      val size =
+        if (skippable) 0L
+        else {
+          require(magic == Magic, f"zstd: bad magic 0x$magic%08x")
+          checkHeader(p, at, dict)
+        }
+      val len = try LibZstd.findFrameCompressedSize(p, at).toInt
       catch {
         case e: ZstdException =>
           throw new IllegalArgumentException(s"zstd: frame at $at truncated or corrupt (${e.getMessage})", e)
-      })
+      }
+      if (!skippable) frames += ((at, len, size))
+      at += len
     }
-    Streams.drain("zstd", MaxOutput) {
+    val declared = frames.map(_._3)
+    if (declared.forall(_ >= 0) && declared.sum <= OneShotMax) decodeOneShot(p, frames.toSeq, dict)
+    else Streams.drain("zstd", MaxOutput) {
       val in = new ZstdInputStream(new java.io.ByteArrayInputStream(p))
+      in.setLongMax(30) // windows up to the 1 GiB output cap (`zstd --long=30`)
       if (dict != null) in.setDict(dict.ddict)
       in
     }
   }
 
-  /** Dictionary id and declared content size of the frame at `at`
-    * (a frame header is at most 18 bytes). */
-  private def checkHeader(p: Array[Byte], at: Int, dict: Dict): Unit = {
+  /** Payloads whose frames all declare a content size totalling at most
+    * this decode into one array of that size through a per-thread
+    * context; the rest stream. The array comes from the headers, so
+    * the bound is also what a crafted header can make a call allocate
+    * up front. */
+  private val OneShotMax = 1 << 20
+
+  /** A native decoder context is costlier to create (~0.1 ms) than a
+    * WARC record body is to decode, so each thread keeps one. */
+  private val contexts = ThreadLocal.withInitial[ZstdDecompressCtx](() => new ZstdDecompressCtx())
+
+  private def decodeOneShot(p: Array[Byte], frames: Seq[(Int, Int, Long)], dict: Dict): Array[Byte] = {
+    val out = new Array[Byte](frames.map(_._3).sum.toInt)
+    val ctx = contexts.get()
+    try {
+      if (dict != null) ctx.loadDict(dict.ddict)
+      var o = 0
+      for ((start, len, size) <- frames) {
+        val n = ctx.decompressByteArray(out, o, size.toInt, p, start, len)
+        require(n == size, s"zstd: frame at $start decoded $n of its declared $size bytes")
+        o += n
+      }
+      out
+    } catch {
+      case e: ZstdException => throw new IllegalArgumentException(s"zstd: ${e.getMessage}", e)
+    } finally ctx.reset() // drops the dictionary reference with the session
+  }
+
+  /** Dictionary id and declared content size (-1 when absent) of the
+    * frame at `at`; a frame header is at most 18 bytes. */
+  private def checkHeader(p: Array[Byte], at: Int, dict: Dict): Long = {
     val head = java.util.Arrays.copyOfRange(p, at, math.min(p.length, at + 18))
     val did = LibZstd.getDictIdFromFrame(head).toInt
     if (did != 0) {
@@ -75,6 +114,7 @@ object Zstd {
     }
     val size = LibZstd.getFrameContentSize(head, 0, head.length, false)
     require(size <= MaxOutput, s"zstd: declared content $size > cap")
+    size
   }
 
   /** A loaded `zstd --train` dictionary and its id. */

@@ -47,6 +47,23 @@ class ParSpec extends SparkTestBase {
     assert(groups.contains("par-spec"), s"job groups seen: $groups")
   }
 
+  test("a branch that leaves its thread interrupted still settles") {
+    // a blocking enqueue refuses an interrupted thread; the outcome must
+    // reach the caller anyway, or Par.jobs waits forever
+    val done = new java.util.concurrent.CompletableFuture[Throwable]()
+    val caller = new Thread(() =>
+      try {
+        Par.jobs(
+          () => Thread.currentThread().interrupt(),
+          () => { Thread.currentThread().interrupt(); throw new IllegalStateException("boom") })
+        done.complete(null)
+      } catch { case t: Throwable => done.complete(t) })
+    caller.setDaemon(true)
+    caller.start()
+    val e = done.get(30, java.util.concurrent.TimeUnit.SECONDS)
+    assert(e != null && e.getMessage == "boom", s"Par.jobs ended with $e")
+  }
+
   test("a VirtualMachineError rethrows without waiting for the other branches") {
     val release = new java.util.concurrent.CountDownLatch(1)
     val t0 = System.nanoTime()

@@ -115,6 +115,58 @@ class DecoderRobustnessSpec extends AnyFunSuite with TimeLimits {
     })
   }
 
+  test("headers declaring a dictionary over Xz.MaxWindow refuse before allocating it (lzma, xz, 7z)") {
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def refusesCheaply(name: String)(decode: => Any): Unit = {
+      val before = threads.getCurrentThreadAllocatedBytes
+      val e = intercept[IllegalArgumentException](decode)
+      val allocated = threads.getCurrentThreadAllocatedBytes - before
+      assert(allocated < (16L << 20), s"$name: $allocated bytes allocated before refusing (${e.getMessage})")
+    }
+    def crc32(b: Array[Byte], from: Int, until: Int): Array[Byte] = {
+      val c = new java.util.zip.CRC32()
+      c.update(b, from, until - from)
+      val v = c.getValue
+      Array.tabulate[Byte](4)(i => ((v >>> (8 * i)) & 0xff).toByte)
+    }
+    val gib = 36.toByte // LZMA2 dictionary byte: 2^(36/2 + 12) = 1 GiB
+    val payload = ("dictionary probe " * 100).getBytes("US-ASCII")
+
+    // lzma alone: props 0x5d, a 1 GiB dictionary, unknown size, a few stream bytes
+    refusesCheaply("lzma")(Xz.decompressAlone(Array[Byte](0x5d, 0, 0, 0, 0x40) ++
+      Array.fill[Byte](8)(-1) ++ new Array[Byte](8)))
+
+    // xz: a real stream whose block header's LZMA2 dictionary byte is raised (CRC32 fixed)
+    val xz = {
+      val b = new java.io.ByteArrayOutputStream()
+      val w = new org.tukaani.xz.XZOutputStream(b, new org.tukaani.xz.LZMA2Options())
+      w.write(payload); w.close(); b.toByteArray
+    }
+    val hEnd = 12 + ((xz(12) & 0xff) + 1) * 4 - 4
+    val f = (14 until hEnd - 2).find(i => xz(i) == 0x21 && xz(i + 1) == 1).get
+    xz(f + 2) = gib
+    crc32(xz, 12, hEnd).copyToArray(xz, hEnd)
+    refusesCheaply("xz")(Xz.decompress(xz))
+
+    // 7z: a real LZMA2 archive whose coder property is raised (both header CRCs fixed)
+    val tmp = java.io.File.createTempFile("sevenzdict", ".7z")
+    val sz = try {
+      val w = new org.apache.commons.compress.archivers.sevenz.SevenZOutputFile(tmp)
+      val e = new org.apache.commons.compress.archivers.sevenz.SevenZArchiveEntry()
+      e.setName("a.txt")
+      w.putArchiveEntry(e); w.write(payload); w.closeArchiveEntry(); w.close()
+      java.nio.file.Files.readAllBytes(tmp.toPath)
+    } finally tmp.delete()
+    val le = java.nio.ByteBuffer.wrap(sz).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val (at, end) = (32 + le.getLong(12).toInt, 32 + le.getLong(12).toInt + le.getLong(20).toInt)
+    val c = (at until end - 3).find(i => sz(i) == 0x21 && sz(i + 1) == 0x21 && sz(i + 2) == 1).get
+    sz(c + 3) = gib
+    crc32(sz, at, end).copyToArray(sz, 28)
+    crc32(sz, 12, 32).copyToArray(sz, 8)
+    refusesCheaply("7z")(SevenZ.extract(sz))
+  }
+
   test("sequencefile, cpio, ar and heif terminate on all truncations and bit flips") {
     // sequencefile (block-deflate)
     val seqBytes = {

@@ -57,6 +57,26 @@ class SevenZSpec extends AnyFunSuite {
   test("BZIP2 archive") { check(SevenZMethod.BZIP2, "bzip2") }
   test("DEFLATE archive") { check(SevenZMethod.DEFLATE, "deflate") }
 
+  test("extracting LZMA and LZMA2 archives again stays byte-exact (dictionaries reused)") {
+    // a 64 KiB dictionary that the payload wraps, so the first extract
+    // leaves every byte of the reused dictionary array written
+    val data = lcgWords(30000).getBytes("US-ASCII")
+    for (m <- Seq(SevenZMethod.LZMA, SevenZMethod.LZMA2)) {
+      val o = new org.tukaani.xz.LZMA2Options()
+      o.setDictSize(1 << 16)
+      val tmp = java.io.File.createTempFile("sevenzspec", ".7z")
+      val archive = try {
+        val w = new SevenZOutputFile(tmp)
+        w.setContentMethods(java.util.Arrays.asList(new SevenZMethodConfiguration(m, o)))
+        val e = new SevenZArchiveEntry(); e.setName("words.txt")
+        w.putArchiveEntry(e); w.write(data); w.closeArchiveEntry(); w.close()
+        java.nio.file.Files.readAllBytes(tmp.toPath)
+      } finally tmp.delete()
+      for (i <- 0 until 3)
+        assert(java.util.Arrays.equals(SevenZ.extract(archive).head._2, data), s"$m: extract $i")
+    }
+  }
+
   test("BCJ x86 + LZMA2 filter chain") {
     // call-dense payload so the x86 converter has sites
     val code = Array.tabulate(4000)(i =>

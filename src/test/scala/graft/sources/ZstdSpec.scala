@@ -133,6 +133,37 @@ class ZstdSpec extends AnyFunSuite {
     assert(e.getMessage.contains("cap"), e.getMessage)
   }
 
+  test("a frame with a 256 MiB window (zstd --long=28) decodes") {
+    val data = lcgStream(200000, 10).map(i => words(i)).mkString(" ").getBytes("US-ASCII")
+    val b = new java.io.ByteArrayOutputStream()
+    val w = new com.github.luben.zstd.ZstdOutputStream(b)
+    w.setWindowLog(28)
+    w.write(data)
+    w.close()
+    val p = b.toByteArray
+    // the header must really declare the window: no single-segment
+    // flag, window descriptor exponent 28
+    assert((p(4) & 0x20) == 0 && ((p(5) & 0xff) >> 3) + 10 == 28, f"header ${p(4)}%02x ${p(5)}%02x")
+    assert(java.util.Arrays.equals(Zstd.decompress(p), data))
+  }
+
+  test("small frames decode alike across repeated calls, with and without a dictionary") {
+    // one thread's calls share a native context: a dictionary or an
+    // error must not leak into the next call
+    val dict = Zstd.parseDictionary(res("/zstd_dict/fixture.dict"))
+    val withDict = res("/zstd_dict/sample_l3.zst")
+    val plain = fixture("small_text")
+    val text = ("the quick brown fox jumps over the lazy dog. " * 20).getBytes("US-ASCII")
+    val badSum = plain.clone()
+    badSum(badSum.length - 1) = (badSum(badSum.length - 1) ^ 1).toByte
+    for (_ <- 0 until 3) {
+      assert(java.util.Arrays.equals(Zstd.decompress(withDict, dict), res("/zstd_dict/sample_l3.raw")))
+      assert(java.util.Arrays.equals(Zstd.decompress(plain), text))
+      intercept[IllegalArgumentException](Zstd.decompress(withDict))
+      intercept[IllegalArgumentException](Zstd.decompress(badSum))
+    }
+  }
+
   test("corruption is loud: bad magic, truncation, dictionary frames") {
     intercept[IllegalArgumentException](Zstd.decompress("not zstd".getBytes))
     val f = fixture("small_text")
