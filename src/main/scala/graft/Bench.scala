@@ -16,15 +16,14 @@ object Bench {
       // testdata tables are single parquet files; smaller input splits
       // let map-heavy chains use every core instead of 1-2 scan tasks
       .config("spark.sql.files.maxPartitionBytes", "8m")
-      // optimization-guide §3.1/§9: allow the planner to pick shuffled
-      // hash join when its size conditions hold (build side per
-      // partition provably small) instead of always sort-merge — the
-      // banded similarity joins key on short binary segments, where
-      // SMJ's per-row byte-array sort dominates; the planner (and AQE)
-      // still falls back to sort-merge whenever the build side might
-      // not fit, so this is not a local-mode-only setting. Measured on
-      // the band-join family: q_hamming_radius_join_pdq 4.7→2.6 s,
-      // pdq_scale_30k 4.8→3.1 s, q_triangles 3.8→2.5 s at sf0.1.
+      // optimization-guide §3.1/§9: let the planner pick shuffled hash
+      // join over sort-merge, whose per-row byte-array sort dominates the
+      // band joins: q_hamming_radius_join_pdq 4.7→2.6 s, pdq_scale_30k
+      // 4.8→3.1 s, q_triangles 3.8→2.5 s at sf0.1. Not safe in general:
+      // the setting is session-global, and the planner sizes the AVERAGE
+      // partition, so a hash join can still run out of memory building
+      // one skewed key. SHUFFLE_HASH hints on the band joins alone are
+      // the way out (ROADMAP direction 4).
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -3,54 +3,53 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.HashFunctions.hexBands
+import graft.functions.HashFunctions.canonicalHex64
 
 /** Persisted PDQ-hash index + incremental classify for media archives —
-  * the daily-ingest contract of the reference's domain
-  * (`pdq_hash.py:76-257` detects within one frame; an archive ingests
-  * batches against an ever-growing corpus): the archived corpus is
-  * decoded and hashed ONCE ([[Media.pdqHashes]]), its hash + band
-  * relations persist, and each new batch hashes only ITSELF, then
-  * classifies against the read index as exact / near / novel via the
-  * pigeonhole banding equi-join — no archived payload is ever re-read
-  * or re-hashed.
+  * the daily-ingest form of the reference's Hamming-radius join
+  * (`pdq_hash.py:76-257`): the archived corpus is decoded and hashed
+  * ONCE ([[Media.pdqHashes]]), and each new batch hashes only ITSELF and
+  * classifies against the read index as exact / near / novel.
   *
-  * Scale shape: the band join is a hash equi-join on (band_id, band)
-  * (AQE-splittable, never a product), verification touches only
-  * candidate pairs' packed word columns, and the best-match winner is
-  * a combinable `min(struct)` — the same skew-safe shapes the text
-  * tiers pin. Band rows are Hive-partitioned by `band_id` like the
-  * text [[Dedup.writeIndex]]. The manifest-last commit-marker
-  * discipline is shared too: an interrupted write leaves an index
-  * [[readIndex]] refuses, and a classify against an index built at a
-  * DIFFERENT radius fails fast (bands cut for radius r are complete
-  * only for radius ≤ r — a silent mismatch would drop near-matches).
+  * The index is ONE relation, `hashes (id, pdq_hex)` in canonical
+  * 64-char lowercase hex, plus a manifest written LAST as the commit
+  * marker (shared with [[Dedup.writeIndex]]) that pins the radius.
+  * Blocking keys are a pure function of the hash, so none persist:
+  * [[classify]] hands distinct batch and corpus hashes to
+  * [[PdqDuplicates.probeHashJoin]] — the equi-join at radius 0, else the
+  * broadcast kernel over the packed batch when it is small, else the band
+  * join with bands derived from both sides; never a product. The winner
+  * is a combinable `min(struct)`. Indexes written with a `bands/`
+  * relation read unchanged; the next write drops it.
   */
 object MediaIndex {
 
   final case class Params(radius: Int)
 
-  /** hashes = (id, pdq_hex); bands = (pdq_hex, band_id, band). */
-  final case class Index(hashes: DataFrame, bands: DataFrame, params: Params)
+  /** hashes = (id, pdq_hex). */
+  final case class Index(hashes: DataFrame, params: Params)
 
   private val ManifestFile = "_GRAFT_MEDIA_INDEX_MANIFEST"
 
-  /** Derive the index relations from a hashed corpus. `radius` is the
-    * largest Hamming distance classify will surface; bands = radius+1
-    * nibble-aligned cuts (pigeonhole-complete at that radius). */
+  /** (id, canonical hex) rows: null hashes drop, and a hash that is not
+    * 1 to 64 hex digits fails the query naming its id — the kernel and
+    * the joins compare canonical 64-char hex only. */
+  private def canonicalHashes(df: DataFrame, idCol: String, hexCol: String,
+      idName: String, hexName: String): DataFrame = {
+    val id = col(idCol).cast("long")
+    val hex = col(hexCol)
+    val wellFormed = length(hex).between(1, 64) && !hex.rlike("[^0-9a-fA-F]")
+    df.filter(hex.isNotNull).select(id.as(idName),
+      when(wellFormed, canonicalHex64(hex)).otherwise(raise_error(concat(
+        lit("media index: PDQ hash of id "), id.cast("string"),
+        lit(" is not 1 to 64 hex digits: "), hex))).as(hexName))
+  }
+
+  /** The index relation of a hashed corpus. `radius` is the largest
+    * Hamming distance classify will surface. */
   def build(hashes: DataFrame, idCol: String, hexCol: String, radius: Int): Index = {
     require(radius >= 0 && radius <= 63, s"radius must be in [0, 63], got $radius")
-    // materialized: the upstream is typically a media DECODE+PDQ pass
-    // (the expensive leg) feeding BOTH relations — without the cut the
-    // bands write re-decodes every image the hashes write just hashed
-    // (guide §1.2: don't compute things twice)
-    val h = Materialize(
-      hashes.select(col(idCol).cast("long").as("id"), lower(col(hexCol)).as("pdq_hex"))
-        .filter(col("pdq_hex").isNotNull))
-    val bands = h.select(col("pdq_hex"), explode(hexBands(col("pdq_hex"), radius + 1)).as("b"))
-      .select(col("pdq_hex"), col("b.band_id"), col("b.band"))
-      .distinct()
-    Index(h, bands, Params(radius))
+    Index(canonicalHashes(hashes, idCol, hexCol, "id", "pdq_hex"), Params(radius))
   }
 
   private def fs(df: DataFrame, path: String) = {
@@ -70,8 +69,8 @@ object MediaIndex {
       } finally in.close()
     }
 
-  /** Persist relations, manifest LAST (commit marker — an interrupted
-    * write must never serve a partial band relation, which would
+  /** Persist the hash relation, manifest LAST (commit marker — an
+    * interrupted write must never serve a partial relation, which would
     * silently classify near-duplicates as novel). Append admits a new
     * day's hashes onto a COMMITTED index with identical params only. */
   def writeIndex(index: Index, path: String,
@@ -85,11 +84,9 @@ object MediaIndex {
         s"cannot append a ${index.params} index onto one built with $prior at $path")
     }
     if (existing.isDefined) hfs.delete(mPath, false)
-    // independent relation jobs run concurrently (guide §2.6); the
-    // manifest below still commits only after BOTH land
-    Par.jobs(
-      () => index.hashes.write.mode(mode).parquet(s"$path/hashes"),
-      () => graft.sources.Formats.writePartitioned(index.bands, s"$path/bands", Seq("band_id"), mode))
+    index.hashes.write.mode(mode).parquet(s"$path/hashes")
+    // the band relation of the earlier layout; nothing reads it
+    hfs.delete(new org.apache.hadoop.fs.Path(s"$path/bands"), true)
     val out = hfs.create(mPath, true)
     try out.write(s"radius=${index.params.radius}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -100,63 +97,38 @@ object MediaIndex {
     val (hfs, mPath) = fs(spark.emptyDataFrame, s"$path/$ManifestFile")
     val params = readManifest(hfs, mPath).getOrElse(throw new IllegalStateException(
       s"no media index manifest at $path — not a graft media index, or an interrupted writeIndex left it incomplete"))
-    Index(
-      spark.read.parquet(s"$path/hashes"),
-      spark.read.parquet(s"$path/bands")
-        .select(col("pdq_hex"), col("band_id").cast("int"), col("band")),
-      params)
+    Index(spark.read.parquet(s"$path/hashes"), params)
   }
 
   /** Compact a many-append index into a fresh index at `dstPath` — the
     * small-files counterweight to the Append flow (daily ingests
-    * accrete a file batch per relation). Rows copy VERBATIM (both
-    * relations are per-hash; nothing re-derives), so [[classify]] over
-    * the compacted index is bit-identical to the source. Hashes land
-    * in `numFiles` files; band rows cluster by `band_id` so each Hive
-    * partition directory holds exactly one file. Manifest commits
-    * last, identical params; the source index stays read-only —
-    * compact-then-swap is the caller's move. */
+    * accrete a file batch each). Rows copy VERBATIM, so [[classify]]
+    * over the compacted index is bit-identical to the source. Hashes
+    * land in `numFiles` files. Manifest commits last, identical params;
+    * the source index stays read-only — compact-then-swap is the
+    * caller's move. */
   def compactIndex(spark: SparkSession, srcPath: String, dstPath: String,
       numFiles: Int = 1): Unit = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val idx = readIndex(spark, srcPath)
-    writeIndex(Index(
-      idx.hashes.repartition(numFiles),
-      idx.bands.repartition(numFiles, col("band_id")),
-      idx.params), dstPath)
+    writeIndex(Index(idx.hashes.repartition(numFiles), idx.params), dstPath)
   }
-
-  // 8 words of 32 bits (8 hex chars) — conv()'s decimal rendering stays
-  // inside signed long, the same layout PdqDuplicates uses
-  private def withWords(df: DataFrame, hexCol: String, prefix: String): DataFrame =
-    df.select(col("*") +: (0 until 8).map(i =>
-      conv(col(hexCol).substr(i * 8 + 1, 8), 16, 10).cast("long").as(s"$prefix$i")): _*)
 
   /** Classify a hashed batch against the index:
     * (id, status exact|near|novel, best_match, best_dist) — best match
     * = smallest (distance, corpus id) within the radius; novel rows
-    * carry nulls (distances beyond the radius are never computed —
-    * that is the point of the banding join). The corpus side touches
-    * ONLY the persisted hash/band relations. */
+    * carry nulls. Rows with a null hash drop. The corpus side touches
+    * ONLY the persisted hash relation. */
   def classify(index: Index, batchHashes: DataFrame, idCol: String, hexCol: String): DataFrame = {
-    val radius = index.params.radius
-    val batch = batchHashes.select(col(idCol).cast("long").as("bid"),
-      lower(col(hexCol)).as("bhex")).filter(col("bhex").isNotNull)
-    val batchBands = batch.select(col("bhex"), explode(hexBands(col("bhex"), radius + 1)).as("b"))
-      .select(col("bhex"), col("b.band_id"), col("b.band"))
-      .distinct()
-    val candidates = batchBands
-      .join(index.bands.withColumnRenamed("pdq_hex", "chex"), Seq("band_id", "band"))
-      .select("bhex", "chex")
-      .distinct()
-    val verified = withWords(withWords(candidates, "bhex", "bw"), "chex", "cw")
-      .withColumn("dist", (0 until 8).map(i =>
-        bit_count(col(s"bw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _))
-      .filter(col("dist") <= radius)
-      .select(col("bhex"), col("chex"), col("dist"))
-    val best = verified
-      .join(index.hashes.select(col("pdq_hex").as("chex"), col("id").as("cid")), Seq("chex"))
-      .groupBy("bhex")
+    val batch = canonicalHashes(batchHashes, idCol, hexCol, "bid", "bhex")
+    val corpus = canonicalHashes(index.hashes, "id", "pdq_hex", "cid", "chash")
+    val matches = PdqDuplicates.probeHashJoin(
+      batch.select(col("bhex").as("phash")).distinct(),
+      corpus.select(col("chash")).distinct(),
+      index.params.radius)
+    val best = matches
+      .join(corpus, Seq("chash"))
+      .groupBy(col("phash").as("bhex"))
       .agg(min(struct(col("dist"), col("cid"))).as("w"))
       .select(col("bhex"), col("w.cid").as("best_match"), col("w.dist").cast("long").as("best_dist"))
     batch.join(best, Seq("bhex"), "left")

@@ -335,20 +335,11 @@ object PdqDuplicates {
         // strategy. This is the most common real invocation (exact-dup
         // detection, `pdq_hash.py:45` at t=1.0); the all-pairs kernel /
         // θ-join would degenerate quadratic here for no gain.
-        probeHashes
-          .join(corpusHashes, col("phash") === col("chash"))
-          .select(col("phash"), col("chash"), lit(0).as("dist"))
+        equalHashJoin(probeHashes, corpusHashes)
       } else {
         val resolved = strategy match {
           case Strategy.Auto =>
-            // plan-statistics estimate, NOT count(): two count() actions
-            // here would scan the full input twice before planning — at
-            // 100 TB that is two extra passes per query. Catalyst's
-            // size-in-bytes estimate flows from file statistics; it
-            // ignores the distinct-hash collapse, so it overestimates
-            // rows and errs toward Banded — the scale-safe side.
-            val pairs = estimateRows(probeHashes) * estimateRows(corpusHashes)
-            if (pairs <= Strategy.AutoNaiveMaxPairs) Strategy.Naive else Strategy.Banded
+            if (autoPicksNaive(probeHashes, corpusHashes)) Strategy.Naive else Strategy.Banded
           case s => s
         }
         resolved match {
@@ -363,6 +354,19 @@ object PdqDuplicates {
 
     Some(Prep(indexed, probeIdx, hashEdges))
   }
+
+  /** Radius 0 between canonical hashes: string equality. */
+  private def equalHashJoin(probes: DataFrame, corpus: DataFrame): DataFrame =
+    probes
+      .join(corpus, col("phash") === col("chash"))
+      .select(col("phash"), col("chash"), lit(0).as("dist"))
+
+  /** Auto's cost test on |probe hashes| × |corpus hashes|, from plan
+    * statistics, NOT count() (two extra input scans per query at 100 TB).
+    * The estimate ignores the distinct collapse, so it errs toward
+    * Banded — the scale-safe side. */
+  private def autoPicksNaive(probes: DataFrame, corpus: DataFrame): Boolean =
+    estimateRows(probes) * estimateRows(corpus) <= Strategy.AutoNaiveMaxPairs
 
   /** Row-count estimate from the optimized plan's statistics — zero
     * Spark jobs. Uses Catalyst's row-count estimate when available
@@ -417,16 +421,6 @@ object PdqDuplicates {
       .orderBy("index")
   }
 
-  /** Distinct-hash frames with the packed 32-byte decoding materialized
-    * behind a lineage cut: Catalyst would otherwise inline the hex
-    * parsing past the join and re-parse PER CANDIDATE PAIR — under
-    * banding skew (shared bands, e.g. all-zero tails) that is the
-    * difference between O(pairs) integer XORs and O(pairs) string
-    * parses. The frames are distinct hashes, so the materialization is
-    * small by construction. The distance kernel is the engine's native
-    * codegen'd [[graft.plans.HammingDistance]] over BinaryType — values
-    * are identical to the `array<bigint>`-words formulation (property-
-    * tested), so the DuckDB oracles are unaffected. */
   /** Hashes decomposed into eight PRIMITIVE long columns (32 bits
     * each), materialized behind a lineage cut. In the all-pairs
     * nested-loop, array- or binary-typed payloads pay an allocation per
@@ -437,12 +431,8 @@ object PdqDuplicates {
     Materialize(df.select(col("*") +: (0 until WordsPerHash).map(i =>
       conv(col(hashCol).substr(i * 8 + 1, 8), 16, 10).cast("long").as(s"$prefix$i")): _*))
 
-  private def wordColsDist(n: Int = WordsPerHash): Column =
-    (0 until n).map(i => bit_count(col(s"pw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _)
-
-  /** Partial distance over the first `k` words — a monotone lower bound
-    * on the full distance, used as a short-circuiting first conjunct. */
-  private def wordColsPrefixDist(k: Int): Column =
+  /** Distance over the first `k` words (fewer: a lower bound). */
+  private def wordColsDist(k: Int = WordsPerHash): Column =
     (0 until k).map(i => bit_count(col(s"pw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _)
 
   /** Corpus sizes up to this many DISTINCT hashes run the broadcast
@@ -452,26 +442,33 @@ object PdqDuplicates {
   private[graft] val KernelMaxCorpusKey = "spark.graft.kernelMaxCorpus"
   private[graft] val KernelMaxCorpusDefault: Int = 1 << 20
 
+  /** The single-column frame's rows when they fit the kernel cap, else
+    * None: the bounded `limit(cap+1).collect()` is both the guard and the
+    * kernel's broadcast build. A frame whose row estimate is over 4× the
+    * cap (the estimate errs upward) is never collected. */
+  private def collectUnderKernelCap(df: DataFrame): Option[Array[String]] = {
+    val cap = df.sparkSession.conf
+      .get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
+    if (estimateRows(df) > BigInt(cap) * 4) None
+    else {
+      val collected = df.limit(cap + 1).collect()
+      if (collected.length > cap) None else Some(collected.map(_.getString(0)))
+    }
+  }
+
   /** All-pairs similarity join, naive strategy.
     *
-    * Physical dispatch: when the distinct corpus fits the driver cap,
-    * the corpus is packed into a broadcast primitive `Array[Long]`
-    * (4 words per hash) and each probe partition runs a tight
-    * xor+popcount loop over it (`mapPartitions` — the documented
-    * last-resort escape, used deliberately: a BroadcastNestedLoopJoin
-    * pays row-iterator overhead per PAIR, measured ~20 s for the 913 M
-    * pair reference benchmark, vs ~2 s for the primitive loop — and
-    * this small-corpus × huge-probe-stream regime is exactly the
-    * reference's own multiprocess design, `naive_duplicate_detector
-    * .py:67`, every worker holding the whole series). The bounded
-    * `limit(cap+1).collect()` doubles as the broadcast build, so the
-    * guard costs no extra scan when the kernel runs — and the collect
-    * itself is gated on the plan-statistics row estimate first, so a
-    * corpus the estimate already places FAR above the cap goes straight
-    * to the θ-join without materializing ~cap hashes on the driver.
-    * (The estimate errs upward — it ignores the distinct collapse — so
-    * the skip threshold carries a 4× slack; a moderate overestimate
-    * still reaches the exact bounded-collect check.)
+    * Physical dispatch: when the distinct corpus fits the driver cap
+    * ([[collectUnderKernelCap]]), the corpus is packed into a broadcast
+    * primitive `Array[Long]` (4 words per hash) and each probe partition
+    * runs a tight xor+popcount loop over it (`mapPartitions` — the
+    * documented last-resort escape, used deliberately: a
+    * BroadcastNestedLoopJoin pays row-iterator overhead per PAIR,
+    * measured ~20 s for the 913 M pair reference benchmark, vs ~2 s for
+    * the primitive loop — and this small-corpus × huge-probe-stream
+    * regime is exactly the reference's own multiprocess design,
+    * `naive_duplicate_detector.py:67`, every worker holding the whole
+    * series).
     *
     * Fallback: the θ-join with the distance test in the join condition
     * (pure primitive arithmetic per pair, output rows only for
@@ -479,43 +476,47 @@ object PdqDuplicates {
     * non-dup pairs have expected prefix distance 64, so codegen's &&
     * short-circuit skips the second half's XOR+popcount for real
     * thresholds (n ≈ 51 at sim 0.8). */
-  private def naiveHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame = {
-    val cap = probes.sparkSession.conf
-      .get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
-    def thetaJoin =
-      withWordCols(probes, "phash", "pw")
-        .join(withWordCols(corpus, "chash", "cw"),
-          wordColsPrefixDist(WordsPerHash / 2) <= n && wordColsDist() <= n)
-        .withColumn("dist", wordColsDist())
-        .select("phash", "chash", "dist")
-    if (estimateRows(corpus) > BigInt(cap) * 4) thetaJoin
+  private def naiveHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame =
+    collectUnderKernelCap(corpus) match {
+      case Some(packed) => kernelHashJoin(probes, packed, n)
+      case None =>
+        withWordCols(probes, "phash", "pw")
+          .join(withWordCols(corpus, "chash", "cw"),
+            wordColsDist(WordsPerHash / 2) <= n && wordColsDist() <= n)
+          .withColumn("dist", wordColsDist())
+          .select("phash", "chash", "dist")
+    }
+
+  /** (phash, chash, dist) within `n` between DISTINCT canonical hashes
+    * of a small probe set and a large corpus ([[MediaIndex.classify]]).
+    * Never the θ-join: n = 0 is the equi-join; probes that fit the
+    * kernel cap, with Auto's pair estimate, run [[kernelHashJoin]] with
+    * the PROBES packed and the corpus streaming past (Hamming is
+    * symmetric, so the columns swap back); otherwise [[bandedHashJoin]]. */
+  private[graft] def probeHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame = {
+    require(n >= 0 && n <= 63, s"radius must be in [0, 63], got $n")
+    if (n == 0) equalHashJoin(probes, corpus)
     else {
-      val collected = corpus.limit(cap + 1).collect()
-      if (collected.length > cap) thetaJoin
-      else kernelHashJoin(probes, collected.map(_.getString(0)), n)
+      val packed = if (autoPicksNaive(probes, corpus)) collectUnderKernelCap(probes) else None
+      packed match {
+        case Some(ps) =>
+          kernelHashJoin(corpus.select(col("chash").as("phash")), ps, n)
+            .select(col("chash").as("phash"), col("phash").as("chash"), col("dist"))
+        case None => bandedHashJoin(probes, corpus, n)
+      }
     }
   }
 
-  /** Broadcast-kernel leg of [[naiveHashJoin]]: probes stream past a
-    * packed corpus of 4 longs per canonical 64-char hex hash. Only the
-    * packed longs are broadcast (~32 B/hash); matches are rare, so the
-    * canonical hex string of a matching corpus hash is rebuilt from its
-    * words on the executor instead of shipping the full string array
-    * (which would roughly double broadcast memory). */
+  /** Broadcast kernel of [[naiveHashJoin]] and [[probeHashJoin]]: probes
+    * stream past a packed corpus of 4 longs per canonical 64-char hex
+    * hash. Only the packed longs are broadcast (~32 B/hash); matches are
+    * rare, so the canonical hex string of a matching corpus hash is
+    * rebuilt from its words on the executor instead of shipping the full
+    * string array (which would roughly double broadcast memory). */
   private def kernelHashJoin(probes: DataFrame, corpus: Array[String], n: Int): DataFrame = {
     val spark = probes.sparkSession
-    val m = corpus.length
-    val packed = new Array[Long](m * 4)
-    var i = 0
-    while (i < m) {
-      var w = 0
-      while (w < 4) {
-        packed(i * 4 + w) = java.lang.Long.parseUnsignedLong(
-          corpus(i).substring(w * 16, w * 16 + 16), 16)
-        w += 1
-      }
-      i += 1
-    }
+    val packed = Array.tabulate(corpus.length * 4)(k =>
+      java.lang.Long.parseUnsignedLong(corpus(k / 4).substring(k % 4 * 16, k % 4 * 16 + 16), 16))
     val bcPacked = spark.sparkContext.broadcast(packed)
     import spark.implicits._
     probes.select(col("phash")).as[String]

@@ -2885,12 +2885,11 @@ object Pipeline {
   )
 
   /** The daily-ingest contract for a MEDIA archive: 48 corpus images
-    * hashed once and persisted as a [[MediaIndex]] (hash + banded
-    * relations, manifest-committed), then a 48-item batch — exact
-    * copies, perturbed variants (moved bump block), and novel scenes
-    * (different seed) — hashes only itself and classifies against the
-    * READ index via the pigeonhole band join. No corpus payload is
-    * re-decoded at classify time. The oracle synthesizes corpus +
+    * hashed once and persisted as a [[MediaIndex]] (one hash relation,
+    * manifest-committed), then a 48-item batch — exact copies,
+    * perturbed variants (moved bump block), and novel scenes (different
+    * seed) — hashes only itself and classifies against the READ index.
+    * No corpus payload is re-decoded at classify time. The oracle synthesizes corpus +
     * all batch variants through the shared chain and classifies from
     * the bit relation. */
   val mediaIndexClassify: QueryDef = QueryDef(
