@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** PDQ-hash bit domain: hex codecs + Hamming distance.
   *
@@ -15,20 +14,15 @@ import org.apache.spark.sql.types.LongType
   * (`tests/unit/test_pdq_hash.py:126-146`).
   *
   * Two representations:
-  *  - fast path (every hash 1..64 hex chars, i.e. <= 256 bits): an
-  *    `array<bigint>` of eight 32-bit words; Hamming is
-  *    `sum(bit_count(a[i] ^ b[i]))` — pure built-ins, whole-stage
-  *    codegen, and DuckDB-oracle-expressible.
+  *  - fast path (every hash 1..64 hex chars, i.e. <= 256 bits): the
+  *    canonical 64-char hex of [[canonicalHex64]]; Hamming is
+  *    `HammingDistance(unhex(a), unhex(b))`, or the packed broadcast
+  *    kernel `graft.plans.HammingKernelJoin` for all-pairs joins.
   *  - parity path (arbitrary length): the reference's binary-string
   *    domain via plain-Scala functions (UDF-wrapped by the caller).
   */
 object HashFunctions {
   val PdqHashLength = 256
-
-  /** Hex chars per hash word in the fast path (8 -> 32-bit words, so the
-    * unsigned value always fits a signed long after `conv`). */
-  private val HexPerWord = 8
-  val WordsPerHash = 64 / HexPerWord // 8
 
   // ---------------------------------------------------------------------
   // driver-side scalars
@@ -82,23 +76,6 @@ object HashFunctions {
     * chars — Spark's `lpad` truncates longer inputs, callers must route
     * oversized hashes to the parity path first. */
   def canonicalHex64(hex: Column): Column = lpad(lower(hex), 64, "0")
-
-  /** 64-char hex -> `array<bigint>` of eight 32-bit words, big-endian.
-    * `conv(_, 16, 10)` emits a decimal string; 8 hex chars max out at
-    * 2^32-1 so the long cast is lossless. Statically unrolled (a
-    * transform-over-sequence would run on the interpreted
-    * higher-order-function path; these stay in whole-stage codegen). */
-  def hexToWords(hex64: Column): Column =
-    array((0 until WordsPerHash).map(i =>
-      conv(hex64.substr(i * HexPerWord + 1, HexPerWord), 16, 10).cast(LongType)): _*)
-
-  /** Hamming distance between two word arrays: statically unrolled
-    * `Σ bit_count(a[i] ^ b[i])` — pure codegen'd expressions on the
-    * similarity-join hot path, no UDF, no interpreted HOFs. */
-  def hammingWords(a: Column, b: Column): Column =
-    (0 until WordsPerHash).map(i =>
-      bit_count(element_at(a, i + 1).bitwiseXOR(element_at(b, i + 1)))
-    ).reduce(_ + _)
 
   /** Similarity normalization `1.0 - dist/256` (`pdq_hash.py:45`). */
   def similarity(dist: Column): Column =

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale corpus curation. Four tiers,
@@ -99,11 +99,12 @@ object Dedup {
     * run [[exactGroups]]/[[keepFirst]] first if ids can repeat. */
   def shingleHashes30(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     spread(df)
-      .select(col(idCol).as("id"),
-        array_distinct(transform(
-          graft.plans.ShingleHash60(words(col(textCol)), n),
-          h => h % lit(1073741824L))).as("hs"))
+      .select(col(idCol).as("id"), shingleHashes30Col(col(textCol), n).as("hs"))
       .filter(size(col("hs")) > 0)
+
+  /** The distinct 30-bit shingle hashes of one text column. */
+  private def shingleHashes30Col(text: Column, n: Int): Column =
+    array_distinct(transform(graft.plans.ShingleHash60(words(text), n), h => h % lit(1073741824L)))
 
   /** MinHash-LSH near-duplicate pairs.
     *
@@ -260,9 +261,7 @@ object Dedup {
     // that is a second full-corpus read for one cheap column.
     val base = Materialize(spread(corpus).select(
       col(idCol).as("id"), md5(col(textCol)).as("m"),
-      array_distinct(transform(
-        graft.plans.ShingleHash60(words(col(textCol)), shingleLen),
-        h => h % lit(1073741824L))).as("hs")))
+      shingleHashes30Col(col(textCol), shingleLen).as("hs")))
     val cMd = base.select(col("m"), col("id").as("cid"))
     val cHs = base.filter(size(col("hs")) > 0).select("id", "hs")
     DedupIndex(cMd, cHs, minhashBandRows(cHs, k, bands), IndexParams(shingleLen, k, bands))

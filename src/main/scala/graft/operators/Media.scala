@@ -1459,23 +1459,23 @@ object Media {
     * steps are combinable aggregates sharing the id hash partitioning
     * — the argmin is a `min(struct(avg, o))`, never a window sort. A
     * billion-clip archive aligns with one shuffle of slim (id, frame,
-    * 4-word hash) rows.
+    * 32-byte hash) rows.
     *
     * Inputs carry (id, frame_no, pdq_hex); ties on the mean prefer the
     * smaller offset. Output: (id, best_offset, avg_dist, n_frames).
     */
   def alignFrameOffset(a: DataFrame, b: DataFrame, maxShift: Int): DataFrame = {
     require(maxShift >= 0, s"maxShift must be >= 0, got $maxShift")
-    import graft.functions.HashFunctions.{canonicalHex64, hexToWords}
+    import graft.functions.HashFunctions.canonicalHex64
     val aw = a.select(col("id"), col("frame_no").as("af"),
-      hexToWords(canonicalHex64(col("pdq_hex"))).as("ah"))
+      unhex(canonicalHex64(col("pdq_hex"))).as("ah"))
     val bw = b.select(col("id"), col("frame_no").as("bf"),
-      hexToWords(canonicalHex64(col("pdq_hex"))).as("bh"))
+      unhex(canonicalHex64(col("pdq_hex"))).as("bh"))
       .withColumn("o", explode(sequence(lit(0), lit(maxShift))))
       .withColumn("af", col("bf") + col("o"))
     aw.join(bw, Seq("id", "af"))
       .select(col("id"), col("o"),
-        graft.functions.HashFunctions.hammingWords(col("ah"), col("bh")).as("d"))
+        graft.plans.HammingDistance(col("ah"), col("bh")).as("d"))
       .groupBy("id", "o")
       .agg(sum("d").as("sum_d"), count(lit(1)).as("n_frames"))
       .withColumn("avg_dist", col("sum_d").cast("double") / col("n_frames"))
@@ -1491,21 +1491,20 @@ object Media {
     * across a cut the DCT signature jumps. The keyframe-selection
     * primitive: dedup/index one representative per shot instead of
     * every frame. One window exchange on the clip id (lag over
-    * frame_no); distances ride the codegen'd word-XOR kernel.
+    * frame_no); distances ride the codegen'd `HammingDistance` over
+    * the unhexed hashes.
     *
     * @return (id, frame_no, dist_prev [null for frame 0], is_cut —
     *         frame 0 always opens a shot, shot_no running count) */
   def shotBoundaries(frames: DataFrame, threshold: Int): DataFrame = {
     require(threshold >= 1 && threshold <= 256, s"threshold must be in [1, 256], got $threshold")
-    import graft.functions.HashFunctions.{canonicalHex64, hammingWords, hexToWords}
+    import graft.functions.HashFunctions.canonicalHex64
     val w = org.apache.spark.sql.expressions.Window.partitionBy("id").orderBy("frame_no")
     frames
       .select(col("id"), col("frame_no"),
-        hexToWords(canonicalHex64(col("pdq_hex"))).as("__w"))
+        unhex(canonicalHex64(col("pdq_hex"))).as("__w"))
       .withColumn("__pw", lag("__w", 1).over(w))
-      .withColumn("dist_prev",
-        when(col("__pw").isNull, lit(null).cast("int"))
-          .otherwise(hammingWords(col("__w"), col("__pw"))))
+      .withColumn("dist_prev", graft.plans.HammingDistance(col("__w"), col("__pw")))
       .withColumn("is_cut", (col("dist_prev").isNull || col("dist_prev") > threshold).cast("int"))
       .withColumn("shot_no",
         sum("is_cut").over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)) - 1)

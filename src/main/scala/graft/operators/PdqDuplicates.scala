@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.HashFunctions._
+import graft.plans.HammingKernelJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -42,9 +43,10 @@ import org.apache.spark.sql.types._
   * metric-index equivalent here — parametrized tests prove naive ≡
   * banded on identical inputs. Here:
   *
-  *  - [[Strategy.Naive]]: distinct-hash θ-join (crossJoin + verify) —
-  *    the semantic reference, right when |probe hashes| is small (Spark
-  *    plans it as a BroadcastNestedLoopJoin).
+  *  - [[Strategy.Naive]]: all pairs of distinct hashes — the semantic
+  *    reference: the broadcast kernel ([[graft.plans.HammingKernelJoin]])
+  *    while the corpus fits `spark.graft.kernelMaxCorpus`, else a
+  *    codegen θ-join (a BroadcastNestedLoopJoin).
   *  - [[Strategy.Banded]]: the multi-index-hashing idea the reference
   *    stubbed: pigeonhole banding. Split each 64-char hex hash into
   *    n+1 nibble-aligned bands; dist <= n implies at least one band is
@@ -73,9 +75,9 @@ object PdqDuplicates {
     case object Banded extends Strategy
 
     /** Cost-based choice (the reference's README documents the same
-      * crossover, naive-vs-bktree, at sim≈0.91): the θ-join wins while
+      * crossover, naive-vs-bktree, at sim≈0.91): naive wins while
       * |probe hashes| × |corpus hashes| stays small — it is one
-      * broadcast-nested-loop stage with zero banding overhead — and the
+      * broadcast stage with zero banding overhead — and the
       * banding equi-join wins beyond that because it never materializes
       * the quadratic pair space. */
     case object Auto extends Strategy
@@ -428,11 +430,15 @@ object PdqDuplicates {
     * registers — the Hamming condition compiles to 8× (xor + popcnt +
     * add), zero allocation. */
   private def withWordCols(df: DataFrame, hashCol: String, prefix: String): DataFrame =
-    Materialize(df.select(col("*") +: (0 until WordsPerHash).map(i =>
+    Materialize(df.select(col("*") +: (0 until WordCols).map(i =>
       conv(col(hashCol).substr(i * 8 + 1, 8), 16, 10).cast("long").as(s"$prefix$i")): _*))
 
+  /** 32-bit word columns per hash: 8 hex chars each, so the unsigned
+    * value always fits a signed long after `conv`. */
+  private val WordCols = 8
+
   /** Distance over the first `k` words (fewer: a lower bound). */
-  private def wordColsDist(k: Int = WordsPerHash): Column =
+  private def wordColsDist(k: Int = WordCols): Column =
     (0 until k).map(i => bit_count(col(s"pw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _)
 
   /** Corpus sizes up to this many DISTINCT hashes run the broadcast
@@ -459,16 +465,15 @@ object PdqDuplicates {
   /** All-pairs similarity join, naive strategy.
     *
     * Physical dispatch: when the distinct corpus fits the driver cap
-    * ([[collectUnderKernelCap]]), the corpus is packed into a broadcast
-    * primitive `Array[Long]` (4 words per hash) and each probe partition
-    * runs a tight xor+popcount loop over it (`mapPartitions` — the
-    * documented last-resort escape, used deliberately: a
+    * ([[collectUnderKernelCap]]), it runs the broadcast kernel
+    * ([[graft.plans.HammingKernelJoin]]): the corpus packed to 4 longs
+    * per hash, each probe one tight xor+popcount pass over it. A
     * BroadcastNestedLoopJoin pays row-iterator overhead per PAIR,
     * measured ~20 s for the 913 M pair reference benchmark, vs ~2 s for
     * the primitive loop — and this small-corpus × huge-probe-stream
     * regime is exactly the reference's own multiprocess design,
     * `naive_duplicate_detector.py:67`, every worker holding the whole
-    * series).
+    * series.
     *
     * Fallback: the θ-join with the distance test in the join condition
     * (pure primitive arithmetic per pair, output rows only for
@@ -478,11 +483,11 @@ object PdqDuplicates {
     * thresholds (n ≈ 51 at sim 0.8). */
   private def naiveHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame =
     collectUnderKernelCap(corpus) match {
-      case Some(packed) => kernelHashJoin(probes, packed, n)
+      case Some(hashes) => HammingKernelJoin.join(probes, hashes, n)
       case None =>
         withWordCols(probes, "phash", "pw")
           .join(withWordCols(corpus, "chash", "cw"),
-            wordColsDist(WordsPerHash / 2) <= n && wordColsDist() <= n)
+            wordColsDist(WordCols / 2) <= n && wordColsDist() <= n)
           .withColumn("dist", wordColsDist())
           .select("phash", "chash", "dist")
     }
@@ -490,71 +495,21 @@ object PdqDuplicates {
   /** (phash, chash, dist) within `n` between DISTINCT canonical hashes
     * of a small probe set and a large corpus ([[MediaIndex.classify]]).
     * Never the θ-join: n = 0 is the equi-join; probes that fit the
-    * kernel cap, with Auto's pair estimate, run [[kernelHashJoin]] with
+    * kernel cap, with Auto's pair estimate, run the broadcast kernel with
     * the PROBES packed and the corpus streaming past (Hamming is
     * symmetric, so the columns swap back); otherwise [[bandedHashJoin]]. */
   private[graft] def probeHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame = {
     require(n >= 0 && n <= 63, s"radius must be in [0, 63], got $n")
     if (n == 0) equalHashJoin(probes, corpus)
     else {
-      val packed = if (autoPicksNaive(probes, corpus)) collectUnderKernelCap(probes) else None
-      packed match {
+      val kernel = if (autoPicksNaive(probes, corpus)) collectUnderKernelCap(probes) else None
+      kernel match {
         case Some(ps) =>
-          kernelHashJoin(corpus.select(col("chash").as("phash")), ps, n)
+          HammingKernelJoin.join(corpus.select(col("chash").as("phash")), ps, n)
             .select(col("chash").as("phash"), col("phash").as("chash"), col("dist"))
         case None => bandedHashJoin(probes, corpus, n)
       }
     }
-  }
-
-  /** Broadcast kernel of [[naiveHashJoin]] and [[probeHashJoin]]: probes
-    * stream past a packed corpus of 4 longs per canonical 64-char hex
-    * hash. Only the packed longs are broadcast (~32 B/hash); matches are
-    * rare, so the canonical hex string of a matching corpus hash is
-    * rebuilt from its words on the executor instead of shipping the full
-    * string array (which would roughly double broadcast memory). */
-  private def kernelHashJoin(probes: DataFrame, corpus: Array[String], n: Int): DataFrame = {
-    val spark = probes.sparkSession
-    val packed = Array.tabulate(corpus.length * 4)(k =>
-      java.lang.Long.parseUnsignedLong(corpus(k / 4).substring(k % 4 * 16, k % 4 * 16 + 16), 16))
-    val bcPacked = spark.sparkContext.broadcast(packed)
-    import spark.implicits._
-    probes.select(col("phash")).as[String]
-      .mapPartitions { it =>
-        val pk = bcPacked.value
-        val mm = pk.length / 4
-        def hex(b: Int): String = {
-          val sb = new java.lang.StringBuilder(64)
-          var w = 0
-          while (w < 4) {
-            val s = java.lang.Long.toHexString(pk(b + w))
-            var pad = 16 - s.length
-            while (pad > 0) { sb.append('0'); pad -= 1 }
-            sb.append(s)
-            w += 1
-          }
-          sb.toString
-        }
-        it.flatMap { p =>
-          val p0 = java.lang.Long.parseUnsignedLong(p.substring(0, 16), 16)
-          val p1 = java.lang.Long.parseUnsignedLong(p.substring(16, 32), 16)
-          val p2 = java.lang.Long.parseUnsignedLong(p.substring(32, 48), 16)
-          val p3 = java.lang.Long.parseUnsignedLong(p.substring(48, 64), 16)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
-          var j = 0
-          while (j < mm) {
-            val b = j * 4
-            val d = java.lang.Long.bitCount(p0 ^ pk(b)) +
-              java.lang.Long.bitCount(p1 ^ pk(b + 1)) +
-              java.lang.Long.bitCount(p2 ^ pk(b + 2)) +
-              java.lang.Long.bitCount(p3 ^ pk(b + 3))
-            if (d <= n) out += ((p, hex(b), d))
-            j += 1
-          }
-          out
-        }
-      }
-      .toDF("phash", "chash", "dist")
   }
 
   /** Pigeonhole band join with the two-level (hierarchical) refinement:
@@ -582,13 +537,13 @@ object PdqDuplicates {
     // word columns join back after dedup
     def banded(df: DataFrame, hashCol: String, p: String) = {
       val base = df
-        .select(col(hashCol) +: (0 until WordsPerHash).map(i => col(s"$p$i")): _*)
-        .select(col(hashCol), array((0 until WordsPerHash).map(i => col(s"$p$i")): _*).as("ws"),
+        .select(col(hashCol) +: (0 until WordCols).map(i => col(s"$p$i")): _*)
+        .select(col(hashCol), array((0 until WordCols).map(i => col(s"$p$i")): _*).as("ws"),
           explode(hexBands(col(hashCol), nBands)).as("b"))
       if (m == 1)
         base.select(col(hashCol), col("b.band_id").as(s"${p}_band_id"), col("b.band").as(s"${p}_band"))
       else {
-        val wpb = WordsPerHash / m
+        val wpb = WordCols / m
         val spw = nBands / m
         val wide = (col("b.band_id") / lit(spw)).cast("int")
         base.select(col(hashCol) +: col("b.band_id").as(s"${p}_band_id") +:
@@ -601,7 +556,7 @@ object PdqDuplicates {
     val keyCond = col("pw_band_id") === col("cw_band_id") && col("pw_band") === col("cw_band")
     val cond =
       if (m == 1) keyCond
-      else keyCond && (0 until WordsPerHash / m)
+      else keyCond && (0 until WordCols / m)
         .map(wj => bit_count(col(s"pw_wb$wj").bitwiseXOR(col(s"cw_wb$wj")))).reduce(_ + _) <= n / m
     val candidates = pb.join(cb, cond)
       .select("phash", "chash")

@@ -15,11 +15,10 @@ import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
   * which pads in the per-BIT string domain).
   *
   * Whole-stage-codegen'd (`doGenCode` emits a call to a tight static
-  * byte loop with `Integer.bitCount`) — the fastest inner kernel for
-  * the 32-byte PDQ case: no array-of-longs materialization, no boxing,
-  * no interpreted lambda. The `array<bigint>`-words formulation stays
-  * the default because it is DuckDB-oracle-expressible; this is the
-  * drop-in upgrade when raw throughput matters.
+  * byte loop with `Integer.bitCount`): no boxing, no interpreted
+  * lambda. Row-level PDQ distances use it over
+  * `unhex(canonicalHex64(h))`; all-pairs joins against a small corpus
+  * use the packed broadcast kernel, [[HammingKernelJoin]].
   */
 case class HammingDistance(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -341,11 +341,15 @@ object Parity {
     * rint(256·0.2) = 51. ~900M codegen'd Hamming evaluations — the
     * direct single-node throughput comparison against the reference's
     * 20-CPU figure. A planted near-dup every 997 ids keeps the result
-    * set non-empty. No DuckDB oracle (the full quadratic replay is the
-    * one thing DuckDB cannot do in gate time); [[pdqScale3k]] is the
-    * subsampled twin that CAN be oracle'd, so the driver's rows-only
-    * record here is backed by a hash-matched gate on the identical
-    * construction. */
+    * set non-empty. No DuckDB oracle: DuckDB 1.0.0 materializes the
+    * twin's whole upper-triangle pair relation (~457 M rows carrying
+    * both hex strings) before the radius filter. On a 4-core, 15 GB
+    * host it spilled until 20 GB of free disk ran out, and with a 3 GB
+    * memory limit and a 2 GB spill cap it fails after 4.7 s (10,000
+    * hashes, the sf0.01 input: 4 GB + 4 GB, fails after 7.9 s).
+    * [[pdqScale3k]] is the subsampled twin that CAN be oracle'd (1.8 s),
+    * so the rows-only record here is backed by a hash-matched
+    * gate on the identical construction. */
   val pdqScale30k: QueryDef = QueryDef(
     "pdq_scale_30k",
     (s, dir) =>

@@ -3745,12 +3745,12 @@ object Pipeline {
   val mediaClipDups: QueryDef = QueryDef(
     "media_clip_dups",
     (s, dir) => {
-      import graft.functions.HashFunctions.{canonicalHex64, hammingWords, hexToWords}
+      import graft.functions.HashFunctions.canonicalHex64
       val clips = mediaClipHash.run(s, dir)
-        .select(col("id"), hexToWords(canonicalHex64(col("clip_hex"))).as("w"))
+        .select(col("id"), unhex(canonicalHex64(col("clip_hex"))).as("w"))
       clips.as("a").join(clips.as("b"), col("a.id") < col("b.id"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          hammingWords(col("a.w"), col("b.w")).as("dist"))
+          graft.plans.HammingDistance(col("a.w"), col("b.w")).as("dist"))
         .filter(col("dist") <= 80)
         .orderBy("id_a", "id_b")
     },

@@ -516,12 +516,14 @@ object Relational {
     * kernel as its own LogicalPlan + Strategy + Exec
     * ([[graft.plans.HammingKernelJoin]]), run against a synthesized
     * hash corpus with planted exact (every 7th ≡ 1) and 4-bit-flipped
-    * (≡ 2) near-dups; the kernel side is every 40th id. The oracle
-    * brute-forces every (corpus × kernel) pair at the bit level. */
+    * (≡ 2) near-dups; the kernel side is every 40th id. The join runs
+    * at hash level — distinct corpus hashes stream past the packed
+    * distinct kernel hashes — and joins back to ids on both sides. The
+    * oracle brute-forces every (corpus × kernel) pair at the bit level. */
   val qKernelJoin: QueryDef = QueryDef(
     "q_kernel_join",
     (s, dir) => {
-      import graft.functions.HashFunctions.{canonicalHex64, hexToWords}
+      import graft.functions.HashFunctions.canonicalHex64
       val e = tbl(s, dir, "events").filter(col("event_id") < 2000)
       val hid = when(col("event_id") % 7 === 1, col("event_id") - 1)
         .when(col("event_id") % 7 === 2, col("event_id") - 2)
@@ -533,10 +535,14 @@ object Relational {
             "concat(md5(CAST(CASE WHEN event_id % 7 = 1 THEN event_id - 1 WHEN event_id % 7 = 2 THEN event_id - 2 ELSE event_id END AS STRING)), " +
             "md5(concat(CAST(CASE WHEN event_id % 7 = 1 THEN event_id - 1 WHEN event_id % 7 = 2 THEN event_id - 2 ELSE event_id END AS STRING), 'k'))), 1, 1)), 1)"),
           base.substr(lit(2), lit(63)))).otherwise(base)
-      val all = e.select(col("event_id").as("id"), hexToWords(canonicalHex64(h)).as("w"))
+      val all = e.select(col("event_id").as("id"), canonicalHex64(h).as("h"))
       val kernel = all.filter(col("id") % 40 === 0)
-      graft.plans.HammingKernelJoin.join(all, kernel, maxDist = 60)
+      val kernelHashes = kernel.select("h").distinct().collect().map(_.getString(0))
+      graft.plans.HammingKernelJoin.join(all.select(col("h").as("phash")).distinct(), kernelHashes, maxDist = 60)
+        .join(all.select(col("id").as("id_a"), col("h").as("phash")), Seq("phash"))
+        .join(kernel.select(col("id").as("id_b"), col("h").as("chash")), Seq("chash"))
         .filter(col("id_a") =!= col("id_b"))
+        .select("id_a", "id_b", "dist")
         .orderBy("id_a", "id_b")
     },
     Some {

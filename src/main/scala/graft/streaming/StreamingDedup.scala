@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.plans.HammingKernelJoin
 
 /** Streaming deduplication over unbounded inputs — the streaming twin of
   * [[graft.operators.Dedup]]. The reference engine is batch-only; this is
@@ -131,11 +132,9 @@ object StreamingDedup {
       .select(col("index"), col("ch"), explode(hexBands(col("ch"), nBands)).as("b"))
       .select(concat_ws(":", col("b.band_id"), col("b.band")).as("bkey"), col("index"), col("ch"))
 
-    def toMember(idx: String, ch: String): Member = Member(idx,
-      java.lang.Long.parseUnsignedLong(ch.substring(0, 16), 16),
-      java.lang.Long.parseUnsignedLong(ch.substring(16, 32), 16),
-      java.lang.Long.parseUnsignedLong(ch.substring(32, 48), 16),
-      java.lang.Long.parseUnsignedLong(ch.substring(48, 64), 16))
+    def toMember(idx: String, ch: String): Member =
+      Member(idx, HammingKernelJoin.word(ch, 0), HammingKernelJoin.word(ch, 1),
+        HammingKernelJoin.word(ch, 2), HammingKernelJoin.word(ch, 3))
 
     val timeoutConf =
       if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
@@ -155,8 +154,7 @@ object StreamingDedup {
               val m = toMember(idx, ch)
               members.foreach { o =>
                 if (o.index != idx) {
-                  val d = java.lang.Long.bitCount(o.w0 ^ m.w0) + java.lang.Long.bitCount(o.w1 ^ m.w1) +
-                    java.lang.Long.bitCount(o.w2 ^ m.w2) + java.lang.Long.bitCount(o.w3 ^ m.w3)
+                  val d = HammingKernelJoin.distance(o.w0, o.w1, o.w2, o.w3, m.w0, m.w1, m.w2, m.w3)
                   if (d <= n) {
                     out += PdqMatch(idx, o.index, d)
                     out += PdqMatch(o.index, idx, d)

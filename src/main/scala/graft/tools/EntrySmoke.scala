@@ -1,9 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4").config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")

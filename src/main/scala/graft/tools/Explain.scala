@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan (and optionally run) one or more
   * named SparkEntry queries: `runMain graft.tools.Explain <sfDir> <name>...`
   * Pass `--run` to also execute and time each query. */
@@ -12,18 +10,11 @@ object Explain {
     val rest = args.filterNot(a => a == "--run" || a == "--no-wscg")
     val sfDir = rest.head
     val names = if (rest.length > 1) rest.tail.toSeq else graft.SparkEntry.all.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench's engine config so captured plans are the benched
-      // plans; SPARK_GRAFT_PREFER_SMJ=true recovers the old planner
-      // preference for before/after plan diffs
+    val spark = graft.GraftSession.builder()
+      // SPARK_GRAFT_PREFER_SMJ=true recovers the old planner preference
+      // for before/after plan diffs
       .config("spark.sql.join.preferSortMergeJoin",
         sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (noWscg) spark.conf.set("spark.sql.codegen.wholeStage", "false")

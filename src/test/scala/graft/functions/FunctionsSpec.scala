@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
+import graft.plans.HammingDistance
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -90,22 +91,22 @@ class HashFunctionsSpec extends SparkTestBase {
   val hexGen: Gen[String] =
     Gen.listOfN(64, Gen.oneOf("0123456789abcdef".toSeq)).map(_.mkString)
 
-  test("hammingWords == reference binary-string hamming on 64-hex hashes") {
+  test("hamming_distance(unhex) == reference binary-string hamming") {
     import spark.implicits._
     val pairs = Gen.listOfN(200, Gen.zip(hexGen, hexGen)).sample.get
     val got = pairs.toDF("a", "b")
-      .select(hammingWords(hexToWords(col("a")), hexToWords(col("b"))))
+      .select(HammingDistance(unhex(col("a")), unhex(col("b"))))
       .collect().map(_.getInt(0)).toSeq
     val want = pairs.map { case (a, b) => hammingPadded(hexToBinaryString(a), hexToBinaryString(b)) }
     assert(got == want)
   }
 
-  test("hexToWords zero-pads short hex like zfill (canonicalHex64)") {
+  test("canonicalHex64 zero-pads like zfill for hamming_distance") {
     import spark.implicits._
     val short = "ff" // == 62 zeros + ff
     val full = "00" * 31 + "ff"
     val got = Seq((short, full)).toDF("a", "b")
-      .select(hammingWords(hexToWords(canonicalHex64(col("a"))), hexToWords(canonicalHex64(col("b")))))
+      .select(HammingDistance(unhex(canonicalHex64(col("a"))), unhex(canonicalHex64(col("b")))))
       .head().getInt(0)
     assert(got == 0)
   }

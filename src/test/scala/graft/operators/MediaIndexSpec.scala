@@ -271,12 +271,12 @@ class MediaIndexSpec extends SparkTestBase {
       val batchDf = batch.toDF("id", "pdq_hex")
       def plan = MediaIndex.classify(idx, batchDf, "id", "pdq_hex").queryExecution.executedPlan.toString
       assert(classified(idx, batchDf) == want, "kernel leg")
-      assert(plan.contains("MapPartitions") == (r > 0), plan)
+      assert(plan.contains("HammingKernelJoin") == (r > 0), plan)
       spark.conf.set(PdqDuplicates.KernelMaxCorpusKey, "0")
       try {
         assert(classified(idx, batchDf) == want, "banded leg")
         val p = plan
-        assert(!p.contains("MapPartitions"), p)
+        assert(!p.contains("HammingKernelJoin"), p)
         assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
       } finally spark.conf.unset(PdqDuplicates.KernelMaxCorpusKey)
     }

@@ -141,12 +141,12 @@ class PdqDuplicatesSpec extends SparkTestBase {
   test("threshold 1.0 (radius 0) plans a hash equi-join, not all-pairs") {
     // n == 0 dispatches to the equi-join fast path for EVERY strategy:
     // the physical plan must contain neither the broadcast kernel
-    // (MapPartitions) nor the θ-join (BroadcastNestedLoopJoin).
+    // (HammingKernelJoin) nor the θ-join (BroadcastNestedLoopJoin).
     for (s <- Strategy.Naive :: Strategy.Banded :: Strategy.Auto :: Nil) {
       val df = PdqDuplicates.edges(pdqOnly(), similarityThreshold = 1.0, strategy = s)
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$s planned a BNLJ:\n$plan")
-      assert(!plan.contains("MapPartitions"), s"$s planned the kernel:\n$plan")
+      assert(!plan.contains("HammingKernelJoin"), s"$s planned the kernel:\n$plan")
     }
     // and the fast path produces the golden fixture's exact-dup edges
     val got = rows(run(t = 1.0)(Strategy.Auto))

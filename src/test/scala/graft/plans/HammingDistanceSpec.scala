@@ -23,16 +23,20 @@ class HammingDistanceSpec extends SparkTestBase {
     got.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
   }
 
-  test("agrees with the word-array formulation on random 256-bit hashes") {
+  test("agrees with the reference and the packed kernel") {
     val rng = new scala.util.Random(42)
     val pairs = Seq.fill(50)((randHex(rng, 64), randHex(rng, 64)))
-    val rows = pairs.toDF("a", "b").select(
-      HammingDistance(unhex(col("a")), unhex(col("b"))).as("bin"),
-      HashFunctions.hammingWords(
-        HashFunctions.hexToWords(col("a")),
-        HashFunctions.hexToWords(col("b"))).as("words")
-    ).collect()
-    rows.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
+    val got = pairs.toDF("a", "b")
+      .select(HammingDistance(unhex(col("a")), unhex(col("b"))))
+      .collect().map(_.getInt(0)).toSeq
+    val reference = pairs.map { case (a, b) =>
+      HashFunctions.hammingPadded(HashFunctions.hexToBinaryString(a), HashFunctions.hexToBinaryString(b))
+    }
+    val packed = pairs.map { case (a, b) =>
+      val w = HammingKernelJoin.pack(Array(a, b))
+      HammingKernelJoin.distance(w(0), w(1), w(2), w(3), w(4), w(5), w(6), w(7))
+    }
+    assert(got == reference && got == packed)
   }
 
   test("SQL registration (same descriptor GraftExtensions injects)") {

@@ -1,64 +1,71 @@
 package graft.plans
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-class HammingKernelJoinSpec extends SparkTestBase {
+class HammingKernelJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  private def frame(rows: Seq[(Long, Seq[Long])]) = rows.toDF("id", "w")
+  private def probes(hs: Seq[String]) = hs.toDF("phash")
+
+  private def hexOf(ws: Seq[Long]): String = ws.map(w => f"$w%016x").mkString
+
+  private def dist(a: String, b: String): Int =
+    (BigInt(a, 16) ^ BigInt(b, 16)).bitCount
 
   test("kernel join ≡ brute-force popcount on random 256-bit hashes") {
     val rnd = new scala.util.Random(47)
-    def h() = Seq.fill(8)(rnd.nextLong() & 0xffffffffL)
-    val lhs = (1L to 60L).map(i => i -> h())
-    // plant near-dups of some left rows on the right (flip a few bits)
-    val rhs = (101L to 140L).map(i => i -> h()) ++ lhs.take(8).zipWithIndex.map {
-      case ((_, w), i) => (200L + i) -> w.updated(i % 8, w(i % 8) ^ (3L << (i * 2)))
+    def random() = hexOf(Seq.fill(4)(rnd.nextLong()))
+    // skewed: every bit past the first word is zero, so all such hashes
+    // crowd within 64 bits of each other
+    def zeroTail() = hexOf(rnd.nextLong() +: Seq.fill(3)(0L))
+    def flip(h: String, bits: Int) = {
+      val v = (0 until bits).foldLeft(BigInt(h, 16))((acc, _) => acc.flipBit(rnd.nextInt(256)))
+      f"$v%064x"
     }
-    def dist(a: Seq[Long], b: Seq[Long]) =
-      a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
-    for (md <- Seq(0, 8, 64, 256)) {
-      val got = HammingKernelJoin.join(frame(lhs), frame(rhs), md)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val base = Seq.fill(30)(random()) ++ Seq.fill(10)(zeroTail()) :+ ("0" * 64) :+ ("f" * 64)
+    val near = base.take(12).zipWithIndex.map { case (h, i) => flip(h, i * 5) }
+    val corpus = (base ++ near).distinct
+    // probes repeat hashes: every row comes back with its own matches
+    val probeRows = base.take(20) ++ base.take(5) ++ Seq.fill(10)(random()) ++ Seq.fill(5)(zeroTail())
+    for (md <- Seq(0, 1, 7, 51, 63, 64, 256)) {
+      val got = HammingKernelJoin.join(probes(probeRows), corpus.toArray, md)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted
       val want = (for {
-        (ia, wa) <- lhs; (ib, wb) <- rhs
-        d = dist(wa, wb) if d <= md
-      } yield (ia, ib) -> d).toMap
+        p <- probeRows; c <- corpus
+        d = dist(p, c) if d <= md
+      } yield (p, c, d)).sorted
       assert(got == want, s"maxDist=$md")
     }
   }
 
   test("plans as its own Exec node; schema and caps validated") {
-    val lhs = frame(Seq(1L -> Seq.fill(8)(0L)))
-    val df = HammingKernelJoin.join(lhs, lhs, 16)
-    // SparkPlan.nodeName strips the "Exec" suffix
-    assert(df.queryExecution.executedPlan.toString.contains("HammingKernelJoin"),
-      df.queryExecution.executedPlan.toString)
-    assert(!df.queryExecution.executedPlan.toString.contains("!HammingKernelJoin"),
-      "invalid-plan marker on the Exec node:\n" + df.queryExecution.executedPlan.toString)
+    val zero = "0" * 64
+    val df = HammingKernelJoin.join(probes(Seq(zero, zero)), Array(zero, "0" * 63 + "7"), 16)
+    val plan = df.queryExecution.executedPlan
+    // SparkPlan.nodeName strips the "Exec" suffix; EXPLAIN shows the radius
+    // and the corpus size
+    assert(plan.toString.contains("HammingKernelJoin maxDist=16, corpus=2"), plan.toString)
+    assert(!plan.toString.contains("!HammingKernelJoin"), "invalid-plan marker on the Exec node:\n" + plan)
     assert(df.schema.map(f => (f.name, f.dataType.simpleString)) ==
-      Seq(("id_a", "bigint"), ("id_b", "bigint"), ("dist", "int")))
-    // self-pair at distance 0 comes back (caller filters directions)
-    assert(df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))) ==
-      Seq((1L, 1L, 0)))
+      Seq(("phash", "string"), ("chash", "string"), ("dist", "int")))
+    assert(df.collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getInt(2))).sorted ==
+      Seq((zero, zero, 0), (zero, zero, 0), (zero, "0" * 63 + "7", 3), (zero, "0" * 63 + "7", 3)))
+    val exec = collectFirst(df.queryExecution.executedPlan) { case e: HammingKernelJoinExec => e }
+    assert(exec.exists(_.metrics("numOutputRows").value == 4), "numOutputRows not reported")
+    intercept[IllegalArgumentException](HammingKernelJoin.join(probes(Seq(zero)), Array(zero), 300))
+    intercept[IllegalArgumentException](HammingKernelJoin.join(probes(Seq(zero)), Array("abc"), 8))
     intercept[IllegalArgumentException](
-      HammingKernelJoin.join(lhs, lhs, 300))
-    intercept[IllegalArgumentException](
-      HammingKernelJoin.join(lhs.withColumnRenamed("w", "x").withColumn("w", lit("s"))
-        .select("id", "w"), lhs, 8))
-    // malformed word arrays fail loudly at execution
-    val bad = frame(Seq(1L -> Seq(0L, 0L)))
-    intercept[Exception](HammingKernelJoin.join(bad, bad, 8).collect())
+      HammingKernelJoin.join(Seq(1L).toDF("phash"), Array(zero), 8))
   }
 
   test("composes with downstream relational ops (filter/agg over the node)") {
-    val data = frame(Seq(1L -> Seq.fill(8)(0L), 2L -> (1L +: Seq.fill(7)(0L)),
-      3L -> Seq.fill(8)(0xffffffffL)))
-    val agg = HammingKernelJoin.join(data, data, 2)
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a").agg(count(lit(1)).as("n"), min("dist").as("d"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2)))).toMap
-    assert(agg == Map(1L -> ((1L, 1))))
+    val hs = Seq("0" * 64, "0" * 63 + "1", "f" * 64)
+    val agg = HammingKernelJoin.join(probes(hs), hs.toArray, 2)
+      .filter(col("phash") < col("chash"))
+      .groupBy("phash").agg(count(lit(1)).as("n"), min("dist").as("d"))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getInt(2)))).toMap
+    assert(agg == Map(("0" * 64) -> ((1L, 1))))
   }
 }

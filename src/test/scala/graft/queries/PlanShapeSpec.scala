@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.MapPartitionsExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Physical-plan regression net: the scale story rests on specific plan
   * shapes (banded equi-joins instead of nested loops, broadcasts on
@@ -11,7 +13,7 @@ import graft.SparkTestBase
   * AQE may re-plan at runtime, so assertions target the compile-time
   * executedPlan).
   */
-class PlanShapeSpec extends SparkTestBase {
+class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -57,11 +59,10 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("media_pdq_dups (threshold 1.0) is a hash equi-join, not all-pairs") {
     val p = plan("media_pdq_dups")
-    // MapPartitions appears legitimately (the frame-decode seam); the
-    // forbidden shape is the all-pairs join: BNLJ or the
-    // SerializeFromObject+mapPartitions KERNEL over phash (which only
-    // exists downstream of a `probes.select(phash)` — absent at n=0)
+    // the forbidden shape is the all-pairs join: BNLJ or the broadcast
+    // kernel (absent at n=0)
     assert(!p.contains("BroadcastNestedLoopJoin"), s"all-pairs θ-join planned:\n$p")
+    assert(!p.contains("HammingKernelJoin"), s"all-pairs kernel planned:\n$p")
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
       p.contains("ShuffledHashJoin"), s"no hash equi-join found:\n$p")
   }
@@ -105,9 +106,24 @@ class PlanShapeSpec extends SparkTestBase {
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("pdq_scale_30k runs the broadcast kernel (MapPartitions), not a BNLJ") {
+  test("pdq_scale_30k runs the HammingKernelJoin kernel, not a BNLJ") {
     val p = plan("pdq_scale_30k")
-    assert(p.contains("MapPartitions") && !p.contains("BroadcastNestedLoopJoin"))
+    assert(p.contains("HammingKernelJoin") && !p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!p.contains("MapPartitions"), s"kernel planned as an opaque lambda:\n$p")
+  }
+
+  test("kernel queries plan HammingKernelJoin, no MapPartitions lambda") {
+    for (q <- Seq("pdq_scale_3k", "media_index_classify", "q_kernel_join")) {
+      val df = graft.SparkEntry.queries(q)(spark, dir)
+      val p = df.queryExecution.executedPlan
+      assert(p.toString.contains("HammingKernelJoin"), s"$q planned no kernel node:\n$p")
+      // media decode is a legitimate MapPartitions seam; no lambda may
+      // read a hash column
+      val hashLambdas = collect(p) { case m: MapPartitionsExec => m }
+        .filter(_.child.children.exists(_.output.exists(a => a.name == "phash" || a.name == "chash")))
+      assert(hashLambdas.isEmpty, s"$q runs a MapPartitions over hashes:\n$p")
+      if (q != "media_index_classify") assert(!p.toString.contains("MapPartitions"), s"$q:\n$p")
+    }
   }
 
   test("scans prune columns: repetition reads only (doc_id, text)") {
