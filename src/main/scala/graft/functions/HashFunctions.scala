@@ -91,7 +91,10 @@ object HashFunctions {
     * `nBands - 1` BITS, at most `nBands - 1` nibbles differ, so at least
     * one band is identical (pigeonhole) — band-equality join yields a
     * complete candidate set for radius `nBands - 1`. Requires
-    * `1 <= nBands <= 64`. */
+    * `1 <= nBands <= 64`. Callers: `PdqDuplicates.bandedHashJoin`,
+    * `StreamingDedup`'s band state keys, the `bands/` relation of the
+    * old media-index layout in MediaIndexSpec's fixture, and the
+    * `index_ingest` layer probe of perfbench. */
   def hexBands(hex64: Column, nBands: Int): Column = {
     require(nBands >= 1 && nBands <= 64, s"nBands must be in [1, 64], got $nBands")
     val cuts = (0 to nBands).map(j => 64 * j / nBands)

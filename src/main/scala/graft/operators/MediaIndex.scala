@@ -16,11 +16,11 @@ import graft.functions.HashFunctions.canonicalHex64
   * marker (shared with [[Dedup.writeIndex]]) that pins the radius.
   * Blocking keys are a pure function of the hash, so none persist:
   * [[classify]] hands distinct batch and corpus hashes to
-  * [[PdqDuplicates.probeHashJoin]] — the equi-join at radius 0, else the
-  * broadcast kernel over the packed batch when it is small, else the band
-  * join with bands derived from both sides; never a product. The winner
-  * is a combinable `min(struct)`. Indexes written with a `bands/`
-  * relation read unchanged; the next write drops it.
+  * [[PdqDuplicates.hashJoin]] under Auto — the equi-join at radius 0,
+  * else the broadcast kernel over the packed batch when Auto's cost tests
+  * pass, else the band join with bands derived from both sides; never a
+  * product. The winner is a combinable `min(struct)`. Indexes written
+  * with a `bands/` relation read unchanged; the next write drops it.
   */
 object MediaIndex {
 
@@ -122,10 +122,10 @@ object MediaIndex {
   def classify(index: Index, batchHashes: DataFrame, idCol: String, hexCol: String): DataFrame = {
     val batch = canonicalHashes(batchHashes, idCol, hexCol, "bid", "bhex")
     val corpus = canonicalHashes(index.hashes, "id", "pdq_hex", "cid", "chash")
-    val matches = PdqDuplicates.probeHashJoin(
+    val matches = PdqDuplicates.hashJoin(
       batch.select(col("bhex").as("phash")).distinct(),
       corpus.select(col("chash")).distinct(),
-      index.params.radius)
+      index.params.radius, PdqDuplicates.Strategy.Auto)
     val best = matches
       .join(corpus, Seq("chash"))
       .groupBy(col("phash").as("bhex"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.HashFunctions._
-import graft.plans.HammingKernelJoin
+import graft.plans.{HammingDistance, HammingKernelJoin, HammingRadiusBandJoin}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -45,8 +45,8 @@ import org.apache.spark.sql.types._
   *
   *  - [[Strategy.Naive]]: all pairs of distinct hashes — the semantic
   *    reference: the broadcast kernel ([[graft.plans.HammingKernelJoin]])
-  *    while the corpus fits `spark.graft.kernelMaxCorpus`, else a
-  *    codegen θ-join (a BroadcastNestedLoopJoin).
+  *    while the distinct probes fit `spark.graft.kernelMaxCorpus`, else
+  *    the band join.
   *  - [[Strategy.Banded]]: the multi-index-hashing idea the reference
   *    stubbed: pigeonhole banding. Split each 64-char hex hash into
   *    n+1 nibble-aligned bands; dist <= n implies at least one band is
@@ -71,18 +71,19 @@ object PdqDuplicates {
 
   sealed trait Strategy
   object Strategy {
+
+    /** All pairs on the broadcast kernel while the distinct probes fit
+      * the kernel cap; past it the band join ([[hashJoin]]). */
     case object Naive extends Strategy
     case object Banded extends Strategy
 
-    /** Cost-based choice (the reference's README documents the same
-      * crossover, naive-vs-bktree, at sim≈0.91): naive wins while
-      * |probe hashes| × |corpus hashes| stays small — it is one
-      * broadcast stage with zero banding overhead — and the
-      * banding equi-join wins beyond that because it never materializes
-      * the quadratic pair space. */
+    /** Cost-based choice of the kernel or the band join from DISTINCT
+      * hash counts and the radius, as the reference's naive-vs-bktree
+      * crossover (sim≈0.91) moves with the radius: see [[hashJoin]]. */
     case object Auto extends Strategy
 
-    /** Naive still beats banding below this many candidate pairs. */
+    /** Auto's bound on pairs scanned by the kernel, and on band-key
+      * candidates the band join may emit before it loses to the kernel. */
     val AutoNaiveMaxPairs: Long = 64L * 1000 * 1000
 
     /** Reference method-name dispatch (`pdq_hash.py:195-222`): "naive"
@@ -330,45 +331,10 @@ object PdqDuplicates {
           .crossJoin(corpusHashes)
           .withColumn("dist", hammingUdf(col("phash"), col("chash")))
           .filter(col("dist") <= n)
-      } else if (n == 0) {
-        // threshold 1.0 ⇒ radius 0: Hamming distance 0 between canonical
-        // 64-char hex hashes IS string equality, so the "similarity join"
-        // is a plain hash equi-join — one shuffle, O(|hashes|), for every
-        // strategy. This is the most common real invocation (exact-dup
-        // detection, `pdq_hash.py:45` at t=1.0); the all-pairs kernel /
-        // θ-join would degenerate quadratic here for no gain.
-        equalHashJoin(probeHashes, corpusHashes)
-      } else {
-        val resolved = strategy match {
-          case Strategy.Auto =>
-            if (autoPicksNaive(probeHashes, corpusHashes)) Strategy.Naive else Strategy.Banded
-          case s => s
-        }
-        resolved match {
-          case _ if n >= 64 =>
-            // banding needs n+1 <= 64 nibble bands; past that the candidate
-            // set degenerates, the θ-join is the honest plan.
-            naiveHashJoin(probeHashes, corpusHashes, n)
-          case Strategy.Banded => bandedHashJoin(probeHashes, corpusHashes, n)
-          case _               => naiveHashJoin(probeHashes, corpusHashes, n)
-        }
-      }
+      } else hashJoin(probeHashes, corpusHashes, n, strategy, probeAll = checked == Checked.All)
 
     Some(Prep(indexed, probeIdx, hashEdges))
   }
-
-  /** Radius 0 between canonical hashes: string equality. */
-  private def equalHashJoin(probes: DataFrame, corpus: DataFrame): DataFrame =
-    probes
-      .join(corpus, col("phash") === col("chash"))
-      .select(col("phash"), col("chash"), lit(0).as("dist"))
-
-  /** Auto's cost test on |probe hashes| × |corpus hashes|, from plan
-    * statistics, NOT count() (two extra input scans per query at 100 TB).
-    * The estimate ignores the distinct collapse, so it errs toward
-    * Banded — the scale-safe side. */
-  private def autoPicksNaive(probes: DataFrame, corpus: DataFrame): Boolean =
-    estimateRows(probes) * estimateRows(corpus) <= Strategy.AutoNaiveMaxPairs
 
   /** Row-count estimate from the optimized plan's statistics — zero
     * Spark jobs. Uses Catalyst's row-count estimate when available
@@ -424,11 +390,8 @@ object PdqDuplicates {
   }
 
   /** Hashes decomposed into eight PRIMITIVE long columns (32 bits
-    * each), materialized behind a lineage cut. In the all-pairs
-    * nested-loop, array- or binary-typed payloads pay an allocation per
-    * pair access (UnsafeRow copies the value); eight flat longs stay in
-    * registers — the Hamming condition compiles to 8× (xor + popcnt +
-    * add), zero allocation. */
+    * each), materialized behind a lineage cut: [[bandedHashJoin]] reads
+    * each side twice, for its wide-band words and for the verify. */
   private def withWordCols(df: DataFrame, hashCol: String, prefix: String): DataFrame =
     Materialize(df.select(col("*") +: (0 until WordCols).map(i =>
       conv(col(hashCol).substr(i * 8 + 1, 8), 16, 10).cast("long").as(s"$prefix$i")): _*))
@@ -437,78 +400,108 @@ object PdqDuplicates {
     * value always fits a signed long after `conv`. */
   private val WordCols = 8
 
-  /** Distance over the first `k` words (fewer: a lower bound). */
-  private def wordColsDist(k: Int = WordCols): Column =
-    (0 until k).map(i => bit_count(col(s"pw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _)
+  /** Distance over the word columns of a joined (pw, cw) row. */
+  private def wordColsDist(): Column =
+    (0 until WordCols).map(i => bit_count(col(s"pw$i").bitwiseXOR(col(s"cw$i")))).reduce(_ + _)
 
-  /** Corpus sizes up to this many DISTINCT hashes run the broadcast
-    * kernel (~32 MB packed at the default cap); beyond it the
-    * θ-join/banding paths take over. Tunable via
+  /** Probe sets up to this many DISTINCT hashes can run the broadcast
+    * kernel (~32 MB packed at the default cap). Tunable via
     * `spark.graft.kernelMaxCorpus` (driver memory budget knob). */
   private[graft] val KernelMaxCorpusKey = "spark.graft.kernelMaxCorpus"
   private[graft] val KernelMaxCorpusDefault: Int = 1 << 20
 
-  /** The single-column frame's rows when they fit the kernel cap, else
-    * None: the bounded `limit(cap+1).collect()` is both the guard and the
-    * kernel's broadcast build. A frame whose row estimate is over 4× the
-    * cap (the estimate errs upward) is never collected. */
-  private def collectUnderKernelCap(df: DataFrame): Option[Array[String]] = {
-    val cap = df.sparkSession.conf
-      .get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
-    if (estimateRows(df) > BigInt(cap) * 4) None
+  /** The single-column frame's rows when there are at most `limit`,
+    * else None: the bounded `limit(limit+1).collect()` is both the guard
+    * and the kernel's broadcast build. A frame whose row estimate is
+    * over 4× `cap` (the estimate errs upward) is never collected. */
+  private def collectUnder(df: DataFrame, limit: Int, cap: Int): Option[Array[String]] =
+    if (limit <= 0 || estimateRows(df) > BigInt(cap) * 4) None
     else {
-      val collected = df.limit(cap + 1).collect()
-      if (collected.length > cap) None else Some(collected.map(_.getString(0)))
+      val collected = df.limit(limit + 1).collect()
+      if (collected.length > limit) None else Some(collected.map(_.getString(0)))
     }
-  }
 
-  /** All-pairs similarity join, naive strategy.
+  /** Band-key candidates per pair of random hashes at radius `n`: each
+    * of the n+1 bands of 256/(n+1) bits collides by chance with
+    * probability 2^(−256/(n+1)) (the pruning envelope in
+    * [[graft.plans.HammingRadiusBandJoin]]'s scaladoc). At PDQ radii
+    * (n = 51: ~1.7) banding prunes nothing. */
+  private def bandCandidatesPerPair(n: Int): Double = (n + 1) * math.pow(2, -256.0 / (n + 1))
+
+  /** The one Hamming dispatch: (phash, chash, dist) for every pair of a
+    * DISTINCT canonical 64-hex probe (`phash`) and corpus hash (`chash`)
+    * within `n`; `probeAll` when the probes are the corpus. Legs:
     *
-    * Physical dispatch: when the distinct corpus fits the driver cap
-    * ([[collectUnderKernelCap]]), it runs the broadcast kernel
-    * ([[graft.plans.HammingKernelJoin]]): the corpus packed to 4 longs
-    * per hash, each probe one tight xor+popcount pass over it. A
-    * BroadcastNestedLoopJoin pays row-iterator overhead per PAIR,
-    * measured ~20 s for the 913 M pair reference benchmark, vs ~2 s for
-    * the primitive loop — and this small-corpus × huge-probe-stream
-    * regime is exactly the reference's own multiprocess design,
-    * `naive_duplicate_detector.py:67`, every worker holding the whole
-    * series.
+    *  - n = 0: Hamming distance 0 between canonical hashes IS string
+    *    equality, so the equi-join — for every strategy. This is the
+    *    most common real invocation (exact-dup detection at t = 1.0).
+    *  - the kernel: the distinct probes, from a bounded collect, packed
+    *    into [[HammingKernelJoin]], with the corpus streaming past them;
+    *    Hamming is symmetric, so the columns swap back. Naive takes it
+    *    whenever the collect fits the cap, Banded only at n ≥ 64 (no
+    *    nibble banding exists there), Auto when the collect fits and
+    *    either the pairs — distinct probes × corpus, the collected count
+    *    for probe-all, else the corpus's plan estimate — stay within
+    *    [[Strategy.AutoNaiveMaxPairs]], or the band key's expected
+    *    candidates, pairs × [[bandCandidatesPerPair]], exceed it. The
+    *    collect stops one row past the largest count those tests can
+    *    accept: at radii where the candidate test cannot pass under the
+    *    cap, the largest count the pair test can (√AutoNaiveMaxPairs for
+    *    probe-all), else the cap.
+    *  - otherwise [[bandedHashJoin]] for n ≤ 63, and for n ≥ 64 the
+    *    predicate join `hamming_distance(unhex(phash), unhex(chash)) <=
+    *    n`, which [[HammingRadiusBandJoin]] bands at n = 64; n > 64 past
+    *    the cap is the one nested loop left.
     *
-    * Fallback: the θ-join with the distance test in the join condition
-    * (pure primitive arithmetic per pair, output rows only for
-    * matches). Its leading conjunct tests the first 128 bits — random
-    * non-dup pairs have expected prefix distance 64, so codegen's &&
-    * short-circuit skips the second half's XOR+popcount for real
-    * thresholds (n ≈ 51 at sim 0.8). */
-  private def naiveHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame =
-    collectUnderKernelCap(corpus) match {
-      case Some(hashes) => HammingKernelJoin.join(probes, hashes, n)
+    * Logs one INFO line naming the leg and the counts Auto's tests used. */
+  private[graft] def hashJoin(probes: DataFrame, corpus: DataFrame, n: Int, strategy: Strategy,
+      probeAll: Boolean = false): DataFrame = {
+    require(n >= 0 && n <= PdqHashLength, s"radius must be in [0, $PdqHashLength], got $n")
+    def logLeg(leg: String): Unit = log.info(s"PdqDuplicates.hashJoin $strategy r=$n: $leg")
+    if (n == 0) {
+      logLeg("equi")
+      return probes
+        .join(corpus, col("phash") === col("chash"))
+        .select(col("phash"), col("chash"), lit(0).as("dist"))
+    }
+    val spark = probes.sparkSession
+    val cap = spark.conf.get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
+    val maxPairs = Strategy.AutoNaiveMaxPairs
+    val perPair = bandCandidatesPerPair(n)
+    lazy val corpusRows = estimateRows(corpus)
+    def pairs(probeCount: Int): BigInt =
+      BigInt(probeCount) * (if (probeAll) BigInt(probeCount) else corpusRows)
+    def bandWins(pairs: BigInt): Boolean = pairs > maxPairs && BigDecimal(pairs) * perPair <= maxPairs
+    val limit = strategy match {
+      case Strategy.Banded if n < 64 => 0
+      case Strategy.Auto if bandWins(pairs(cap)) =>
+        // the candidate test fails up to the cap: only the pair test can pass
+        if (probeAll) math.min(cap, math.sqrt(maxPairs.toDouble).toInt)
+        else (BigInt(maxPairs) / corpusRows.max(1)).min(cap).toInt
+      case _ => cap
+    }
+    val hashes = collectUnder(probes, limit, cap)
+    val (fits, tests) = (strategy, hashes) match {
+      case (Strategy.Auto, Some(ps)) =>
+        val p = pairs(ps.length)
+        (!bandWins(p), f" (pairs=$p, band candidates=${p.toDouble * perPair}%.3g, max=$maxPairs)")
+      case (Strategy.Auto, None) => (false, s" (distinct probes over the collect limit of $limit)")
+      case (_, ps) => (ps.isDefined, "")
+    }
+    hashes.filter(_ => fits) match {
+      case Some(ps) =>
+        logLeg(s"kernel packed=${ps.length}$tests")
+        HammingKernelJoin.join(corpus.select(col("chash").as("phash")), ps, n)
+          .select(col("chash").as("phash"), col("phash").as("chash"), col("dist"))
+      case None if n < 64 =>
+        logLeg(s"band$tests")
+        bandedHashJoin(probes, corpus, n)
       case None =>
-        withWordCols(probes, "phash", "pw")
-          .join(withWordCols(corpus, "chash", "cw"),
-            wordColsDist(WordCols / 2) <= n && wordColsDist() <= n)
-          .withColumn("dist", wordColsDist())
-          .select("phash", "chash", "dist")
-    }
-
-  /** (phash, chash, dist) within `n` between DISTINCT canonical hashes
-    * of a small probe set and a large corpus ([[MediaIndex.classify]]).
-    * Never the θ-join: n = 0 is the equi-join; probes that fit the
-    * kernel cap, with Auto's pair estimate, run the broadcast kernel with
-    * the PROBES packed and the corpus streaming past (Hamming is
-    * symmetric, so the columns swap back); otherwise [[bandedHashJoin]]. */
-  private[graft] def probeHashJoin(probes: DataFrame, corpus: DataFrame, n: Int): DataFrame = {
-    require(n >= 0 && n <= 63, s"radius must be in [0, 63], got $n")
-    if (n == 0) equalHashJoin(probes, corpus)
-    else {
-      val kernel = if (autoPicksNaive(probes, corpus)) collectUnderKernelCap(probes) else None
-      kernel match {
-        case Some(ps) =>
-          HammingKernelJoin.join(corpus.select(col("chash").as("phash")), ps, n)
-            .select(col("chash").as("phash"), col("phash").as("chash"), col("dist"))
-        case None => bandedHashJoin(probes, corpus, n)
-      }
+        logLeg(s"theta$tests")
+        if (!spark.experimental.extraOptimizations.contains(HammingRadiusBandJoin))
+          spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ HammingRadiusBandJoin
+        val dist = HammingDistance(unhex(col("phash")), unhex(col("chash")))
+        probes.join(corpus, dist <= n).select(col("phash"), col("chash"), dist.as("dist"))
     }
   }
 

@@ -27,7 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.nfcNormalizeDescriptor)
     ext.injectFunction(GraftExtensions.hllSketchAggDescriptor)
     ext.injectFunction(GraftExtensions.cdcBoundariesDescriptor)
-    ext.injectOptimizerRule(_ => HammingZeroAsEquality)
     ext.injectOptimizerRule(_ => HammingRadiusBandJoin)
     ext.injectPlannerStrategy(_ => HammingKernelStrategy)
   }

@@ -284,7 +284,18 @@ object HierarchicalBands {
 }
 
 /** Injected optimizer rule: a bounded-radius Hamming θ-join becomes the
-  * pigeonhole band EQUI-join automatically.
+  * pigeonhole band EQUI-join automatically, and a radius-0 test becomes
+  * plain equality.
+  *
+  * k = 0 arm: `hamming_distance(a, b) = 0` IS binary equality — the
+  * kernel counts every length-difference byte as 8 bits regardless of
+  * content (`HammingDistance.distance`), so distance 0 holds exactly
+  * when lengths and bytes agree. Every such test in the plan (`= 0`,
+  * `<= 0`, `< 1`, and mirrored) is rewritten to `a = b`, so a distance-0
+  * join plans as a hash join instead of a nested loop. Null semantics
+  * are preserved three-valued: the distance of a null operand is null,
+  * so both `null = 0` and the rewrite `null = b` evaluate null and
+  * filter identically.
   *
   * `JOIN ... ON hamming_distance(a, b) <= k` (k in [1, 64]) is the
   * natural way to write a near-duplicate join, and Catalyst alone can
@@ -359,6 +370,10 @@ object HierarchicalBands {
   * Fires once per join: the rewritten plan keeps the distance conjunct
   * in a Filter ABOVE an equi-join, which this rule does not match, so
   * the injected batch reaches its fixed point after one application.
+  *
+  * Wired by [[GraftExtensions]] via `injectOptimizerRule`; sessions
+  * without the extension compute the same result on the nested-loop
+  * plan — the rule is pure plan improvement, never semantics.
   */
 object HammingRadiusBandJoin extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -387,7 +402,17 @@ object HammingRadiusBandJoin extends Rule[LogicalPlan] with PredicateHelper {
   private def alreadyRewritten(p: LogicalPlan): Boolean =
     p.children.exists(_.output.exists(_.name.startsWith("__hrb_")))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+  /** The k = 0 arm, over every expression of the plan. */
+  private def zeroAsEquality(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case EqualTo(HammingDistance(a, b), Literal(0, IntegerType)) => EqualTo(a, b)
+    case EqualTo(Literal(0, IntegerType), HammingDistance(a, b)) => EqualTo(a, b)
+    case LessThanOrEqual(HammingDistance(a, b), Literal(0, IntegerType)) => EqualTo(a, b)
+    case GreaterThanOrEqual(Literal(0, IntegerType), HammingDistance(a, b)) => EqualTo(a, b)
+    case LessThan(HammingDistance(a, b), Literal(1, IntegerType)) => EqualTo(a, b)
+    case GreaterThan(Literal(1, IntegerType), HammingDistance(a, b)) => EqualTo(a, b)
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = zeroAsEquality(plan).transform {
     case j @ Join(left, right, Inner, Some(cond), _) if !alreadyRewritten(j) =>
       val conjuncts = splitConjunctivePredicates(cond)
       val hit = conjuncts.iterator.flatMap { c =>

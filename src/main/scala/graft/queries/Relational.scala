@@ -853,8 +853,8 @@ object Relational {
     """.stripMargin.trim)
   )
 
-  /** The injected optimizer rule at work
-    * ([[graft.plans.HammingZeroAsEquality]]): an exact-duplicate
+  /** The injected optimizer rule's k = 0 arm at work
+    * ([[graft.plans.HammingRadiusBandJoin]]): an exact-duplicate
     * similarity join WRITTEN as the θ-predicate
     * `hamming_distance(ha, hb) = 0` — which Catalyst alone can only
     * nested-loop — planned as a hash equi-join because the rule

@@ -127,15 +127,93 @@ class PdqDuplicatesSpec extends SparkTestBase {
     assert(run(rs)(Strategy.Naive).count() == 0)
   }
 
-  test("theta-join fallback (corpus over kernel cap) ≡ broadcast kernel") {
-    // force the fallback by shrinking the kernel cap below the corpus
+  test("over-cap leg (kernel cap below the probe set) ≡ broadcast kernel") {
+    // shrink the kernel cap below the distinct probes: Naive takes the
+    // band join, which must give the kernel's result
     val kernel = rows(run()(Strategy.Naive))
     spark.conf.set(PdqDuplicates.KernelMaxCorpusKey, "2")
     try {
-      val theta = rows(run()(Strategy.Naive))
-      assert(theta == kernel)
-      assert(theta == Fixtures.expectedPdq)
+      val plan = run()(Strategy.Naive).queryExecution.executedPlan.toString
+      assert(!plan.contains("HammingKernelJoin"), s"over the cap, still the kernel:\n$plan")
+      val overCap = rows(run()(Strategy.Naive))
+      assert(overCap == kernel)
+      assert(overCap == Fixtures.expectedPdq)
     } finally spark.conf.unset(PdqDuplicates.KernelMaxCorpusKey)
+  }
+
+  /** One 64-hex hash per row, `flips` bits of `base` flipped, each bit
+    * at most once. */
+  private def flipped(base: String, flips: Int, rng: scala.util.Random): String = {
+    val bits = rng.shuffle((0 until 256).toList).take(flips)
+    val v = bits.foldLeft(new java.math.BigInteger(base, 16))(_ flipBit _)
+    f"${v.toString(16)}%64s".replace(' ', '0')
+  }
+
+  private def popcountDist(a: String, b: String): Int =
+    new java.math.BigInteger(a, 16).xor(new java.math.BigInteger(b, 16)).bitCount
+
+  // near-duplicate clusters at spread distances, exact duplicates under
+  // several indexes, all-zero-tail hashes (the skewed band keys of black
+  // frames) and a row carrying two hashes
+  private lazy val propertyRows: Seq[(String, Seq[String])] = {
+    val rng = new scala.util.Random(2024)
+    def randHex = Seq.fill(64)("0123456789abcdef"(rng.nextInt(16))).mkString
+    val clusters = (0 until 3).flatMap { c =>
+      val base = randHex
+      (base +: Seq(1, 4, 6, 7, 30, 50, 52, 63, 64, 65, 66).map(flipped(base, _, rng)))
+        .zipWithIndex.map { case (h, i) => (f"c$c%d-$i%02d", Seq(h)) }
+    }
+    val zeroTail = Seq("ab", "ab8", "0f", "ffff", "8").map(p => p + "0" * (64 - p.length))
+    val skewed = zeroTail.zipWithIndex.map { case (h, i) => (s"z$i", Seq(h)) } ++
+      zeroTail.take(3).zipWithIndex.map { case (h, i) => (s"zf$i", Seq(flipped(h, 2 + i * 30, rng))) }
+    val dups = Seq(("d0", Seq(clusters.head._2.head)), ("d1", Seq(clusters.head._2.head)),
+      ("d2", Seq(zeroTail.head)))
+    val multi = Seq(("m0", Seq(clusters(13)._2.head, flipped(zeroTail(1), 3, rng))))
+    clusters ++ skewed ++ dups ++ multi
+  }
+
+  /** (index, partner, similarity) by a plain-JVM popcount over every
+    * pair: min distance per pair, self excluded, edges of a probe in
+    * both directions. */
+  private def bruteForce(r: Int, probes: Set[String]): Set[(String, String, Double)] =
+    (for {
+      (a, ha) <- propertyRows; (b, hb) <- propertyRows
+      if a != b && (probes(a) || probes(b))
+      d = (for (x <- ha; y <- hb) yield popcountDist(x, y)).min
+      if d <= r
+    } yield (a, b, 1.0 - d / 256.0)).toSet
+
+  for (s <- Strategy.Naive :: Strategy.Banded :: Strategy.Auto :: Nil; cap <- Seq(None, Some("2")))
+    test(s"[$s, cap ${cap.getOrElse("default")}] edges ≡ popcount brute force at r 0..65; no BNLJ at r <= 64") {
+      import spark.implicits._
+      val df = propertyRows.toDF("index", "pdq_hash")
+      val all = propertyRows.map(_._1)
+      val subset = Seq("c0-00", "c1-05", "z0", "zf1", "d1", "m0")
+      cap.foreach(spark.conf.set(PdqDuplicates.KernelMaxCorpusKey, _))
+      try for (checked <- Seq(None, Some(subset)); r <- Seq(0, 1, 5, 7, 31, 51, 63, 64, 65)) {
+        val got = PdqDuplicates.edges(df, checked, 1.0 - r / 256.0, s)
+        val plan = got.queryExecution.executedPlan.toString
+        if (r <= 64) assert(!plan.contains("BroadcastNestedLoopJoin"), s"r=$r $checked planned a BNLJ:\n$plan")
+        val want = bruteForce(r, checked.getOrElse(all).toSet)
+        assert(want.nonEmpty || r == 0, s"r=$r: vacuous input")
+        assert(got.collect().map(x => (x.getString(0), x.getString(1), x.getDouble(2))).toSet == want,
+          s"r=$r checked=$checked")
+      } finally spark.conf.unset(PdqDuplicates.KernelMaxCorpusKey)
+    }
+
+  test("Auto costs distinct hashes: a detect_archive-shaped input plans the kernel") {
+    // 40,000 rows over 800 distinct hashes at radius 5: 640k distinct
+    // pairs, not the 1.6e9 the row estimate gives
+    import org.apache.spark.sql.functions._
+    val id = col("id")
+    val base = concat(md5(floor(id / 100).cast("string")), md5(concat(floor(id / 100).cast("string"), lit("x"))))
+    val h = when(id % 5 === 0, concat(substring(base, 1, 63),
+      when(substring(base, 64, 1) === "0", "1").otherwise("0"))).otherwise(base)
+    val frame = spark.range(40000).select(id.cast("string").as("index"), array(h).as("pdq_hash"))
+    val plan = PdqDuplicates.edges(frame, similarityThreshold = 0.98, strategy = Strategy.Auto,
+      assumeFixed256 = true).queryExecution.executedPlan.toString
+    assert(plan.contains("HammingKernelJoin maxDist=5, corpus=800"), plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
   test("threshold 1.0 (radius 0) plans a hash equi-join, not all-pairs") {
@@ -167,9 +245,8 @@ class PdqDuplicatesSpec extends SparkTestBase {
     // therefore the PLANTED pairs only, computable driver-side with
     // MessageDigest. (The Banded strategy is not run here: radius 51
     // needs 52 nibble-aligned bands of <= 8 bits, whose candidate set
-    // degenerates toward all-pairs — prepare() would route it to the
-    // θ-join anyway at n >= 64 only, and the bench declares the kernel
-    // the point of this query.)
+    // degenerates toward all-pairs — which is why Auto's candidate test
+    // sends this radius to the kernel at any size under the cap.)
     import org.apache.spark.sql.functions._
     val n = 30225L
     val e = spark.range(n).select(col("id").as("event_id"))
@@ -183,8 +260,12 @@ class PdqDuplicatesSpec extends SparkTestBase {
       array(when(col("event_id") % 997 === 1,
         concat(md5((col("event_id") - 1).cast("string")),
           md5(concat((col("event_id") - 1).cast("string"), lit("x"))))).otherwise(h)).as("pdq_hash"))
-    val got = PdqDuplicates.edges(frame, similarityThreshold = 0.8,
-        strategy = Strategy.Naive, assumeFixed256 = true)
+    def edges(s: Strategy) = PdqDuplicates.edges(frame, similarityThreshold = 0.8,
+      strategy = s, assumeFixed256 = true)
+    val auto = edges(Strategy.Auto)
+    assert(auto.queryExecution.executedPlan.toString.contains("HammingKernelJoin maxDist=51, corpus=30225"),
+      auto.queryExecution.executedPlan.toString)
+    val got = edges(Strategy.Naive)
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
 
     def md5hex(s: String): String =
@@ -200,6 +281,7 @@ class PdqDuplicatesSpec extends SparkTestBase {
     }.toSet
     assert(expected.size == 62)
     assert(got == expected)
+    assert(auto.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet == expected)
   }
 
   test("unknown method raises (pdq_hash.py:221-222)") {

@@ -12,6 +12,14 @@ class HammingRadiusBandJoinSpec extends SparkTestBase {
     try f finally spark.experimental.extraOptimizations = before
   }
 
+  // the θ-plan reference: other suites may have attached the rule to the
+  // shared session (PdqDuplicates does at radius >= 64 past the kernel cap)
+  private def withoutRule[T](f: => T): T = {
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before.filterNot(_ == HammingRadiusBandJoin)
+    try f finally spark.experimental.extraOptimizations = before
+  }
+
   private def randHex(rng: scala.util.Random, bytes: Int): String =
     Seq.fill(bytes * 2)("0123456789abcdef"(rng.nextInt(16))).mkString
 
@@ -45,7 +53,7 @@ class HammingRadiusBandJoinSpec extends SparkTestBase {
     }.toDF("rid", "hx").select($"rid", unhex($"hx").as("hb"))
     for (k <- Seq(1, 3, 7, 8, 17, 32, 51, 64)) {
       val cond = HammingDistance($"ha", $"hb") <= k
-      val want = l.join(r, cond).select("lid", "rid").as[(Long, Long)].collect()
+      val want = withoutRule(l.join(r, cond).select("lid", "rid").as[(Long, Long)].collect())
         .groupBy(identity).view.mapValues(_.length).toMap
       val got = withRule(l.join(r, cond).select("lid", "rid").as[(Long, Long)].collect())
         .groupBy(identity).view.mapValues(_.length).toMap
@@ -133,8 +141,52 @@ class HammingRadiusBandJoinSpec extends SparkTestBase {
     val r = Seq((10L, Some("ab" * 16)), (11L, None)).toDF("rid", "hx")
       .select($"rid", unhex($"hx").as("hb"))
     val cond = HammingDistance($"ha", $"hb") <= 2 && $"lid" < 2
-    val want = l.join(r, cond).select("lid", "rid").as[(Long, Long)].collect().toSet
+    val want = withoutRule(l.join(r, cond).select("lid", "rid").as[(Long, Long)].collect().toSet)
     assert(want == Set((1L, 10L)))
     assert(withRule(l.join(r, cond).select("lid", "rid").as[(Long, Long)].collect().toSet) == want)
+  }
+
+  // k = 0 arm. Trailing-zero byte vs shorter string: the length-pad
+  // semantics make these DISTANCE 8, so they must NOT join under the
+  // rewrite either
+  private lazy val zl = Seq((1L, "ab"), (2L, "ab00"), (3L, "ff"), (4L, null)).toDF("lid", "ha")
+    .select($"lid", unhex($"ha").as("ha"))
+  private lazy val zr = Seq((10L, "ab"), (11L, "ab00"), (12L, "00"), (13L, null)).toDF("rid", "hb")
+    .select($"rid", unhex($"hb").as("hb"))
+
+  private def zeroJoin(cond: org.apache.spark.sql.Column) =
+    zl.join(zr, cond).select("lid", "rid").as[(Long, Long)].collect().toSet
+
+  test("k = 0 arm preserves results exactly: pads, nulls, =0 / <=0 / <1 forms") {
+    val want = Set((1L, 10L), (2L, 11L))
+    for (cond <- Seq(
+      HammingDistance($"ha", $"hb") === 0,
+      HammingDistance($"ha", $"hb") <= 0,
+      HammingDistance($"ha", $"hb") < 1,
+      lit(0) === HammingDistance($"ha", $"hb"))) {
+      assert(withoutRule(zeroJoin(cond)) == want, s"without rule: $cond")
+      assert(withRule(zeroJoin(cond)) == want, s"with rule: $cond")
+    }
+  }
+
+  test("k = 0 arm flips the plan to a hash join; radius 2 takes the band arm") {
+    def planOf(cond: org.apache.spark.sql.Column): String =
+      zl.join(zr, cond).queryExecution.executedPlan.toString
+    withRule {
+      val p = planOf(HammingDistance($"ha", $"hb") === 0)
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"rule did not fire:\n$p")
+      assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
+        p.contains("ShuffledHashJoin"), s"no hash join:\n$p")
+      assert(!p.contains("hamming_band_segments"), s"radius 0 took the band arm:\n$p")
+      // a genuine radius predicate must not be rewritten to equality:
+      // it takes the band arm, whose verify keeps the distance test
+      val p2 = planOf(HammingDistance($"ha", $"hb") <= 2)
+      assert(p2.contains("hamming_band_segments") && p2.contains("hamming_distance"),
+        s"radius-2 was not band-rewritten:\n$p2")
+      // radius-8 result stays correct under the rule: pads (8), ff↔00
+      // (8), ab↔00 (5), ff↔ab (3) all qualify
+      assert(zeroJoin(HammingDistance($"ha", $"hb") <= 8) ==
+        Set((1L, 10L), (2L, 11L), (1L, 11L), (2L, 10L), (3L, 12L), (1L, 12L), (3L, 10L)))
+    }
   }
 }

@@ -112,6 +112,11 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(!p.contains("MapPartitions"), s"kernel planned as an opaque lambda:\n$p")
   }
 
+  test("detect_full: Auto costs the distinct hashes and plans HammingKernelJoin") {
+    val p = plan("detect_full")
+    assert(p.contains("HammingKernelJoin") && !p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
   test("kernel queries plan HammingKernelJoin, no MapPartitions lambda") {
     for (q <- Seq("pdq_scale_3k", "media_index_classify", "q_kernel_join")) {
       val df = graft.SparkEntry.queries(q)(spark, dir)
@@ -383,9 +388,9 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("q_hamming_zero_join: the injected rule flips the distance-0 θ-join to a hash join") {
     // the shared test session has no extensions — attach the rule the
     // same way a user session would pick it up at runtime
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.HammingZeroAsEquality))
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.HammingRadiusBandJoin))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.HammingZeroAsEquality
+        spark.experimental.extraOptimizations :+ graft.plans.HammingRadiusBandJoin
     val p = plan("q_hamming_zero_join")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"rule did not fire — BNLJ planned:\n$p")
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||
