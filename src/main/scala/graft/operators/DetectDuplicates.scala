@@ -73,7 +73,7 @@ object DetectDuplicates {
       assumeFixed256: Boolean = false
   ): DataFrame = {
     val checked = Checked.from(indexesToCheck)
-    val (projected, hasUrl, hasPdq, strategy) = validate(df, method, validateUniqueIndex)
+    val (projected, hasUrl, hasPdq, strategy, maxHashesPerRow) = validate(df, method, validateUniqueIndex)
     val urlE: Option[DataFrame] =
       if (hasUrl) Some(UrlDuplicates.edgesOf(projected.select("index", "url"), checked)
         .select(col("index"), lit("url").as("kind"), col("partner"),
@@ -81,7 +81,7 @@ object DetectDuplicates {
       else None
     val pdqE: Option[DataFrame] =
       if (hasPdq) Some(PdqDuplicates.edgesOf(projected.select("index", "pdq_hash"), checked,
-        similarityThreshold, strategy, assumeFixed256)
+        similarityThreshold, strategy, assumeFixed256, maxHashesPerRow)
         .select(col("index"), lit("pdq").as("kind"), col("partner"), col("similarity")))
       else None
     (urlE, pdqE) match {
@@ -93,9 +93,13 @@ object DetectDuplicates {
   }
 
   /** Shared input validation: projection, required columns, method
-    * dispatch, uniqueness assertion. */
+    * dispatch, uniqueness assertion. The uniqueness query also observes
+    * the most hashes on one row (the last value returned; None when the
+    * query did not run over a `pdq_hash` column) on the scan it makes
+    * anyway, which [[PdqDuplicates.edgesOf]] would otherwise scan for;
+    * it brings at most 20 indexes to the driver. */
   private def validate(df: DataFrame, method: String, validateUniqueIndex: Boolean)
-      : (DataFrame, Boolean, Boolean, PdqDuplicates.Strategy) = {
+      : (DataFrame, Boolean, Boolean, PdqDuplicates.Strategy, Option[Int]) = {
     val cols = df.columns.toSet
     val hasUrl = cols.contains("url")
     val hasPdq = cols.contains("pdq_hash")
@@ -114,15 +118,19 @@ object DetectDuplicates {
         (if (hasUrl) Seq(col("url")) else Nil) ++
         (if (hasPdq) Seq(col("pdq_hash")) else Nil)): _*
     )
-    if (validateUniqueIndex) {
-      val dupes = projected.groupBy("index").count().filter(col("count") > 1).limit(20)
-        .collect().map(_.getString(0))
+    val maxHashesPerRow = if (!validateUniqueIndex) None else {
+      val widest = Telemetry.name("max_hashes_per_row")
+      val input = if (hasPdq) projected.observe(widest, max(size(col("pdq_hash"))).as("n")) else projected
+      val query = input.groupBy("index").count().filter(col("count") > 1).limit(20)
+      val dupes = query.collect().map(_.getString(0))
       require(
         dupes.isEmpty,
         s"The DataFrame indexes are not unique. Non-unique indexes: ${dupes.mkString(", ")}"
       )
+      query.queryExecution.observedMetrics.get(widest)
+        .map(r => if (r.isNullAt(0)) 0 else r.getInt(0).max(0))
     }
-    (projected, hasUrl, hasPdq, strategy)
+    (projected, hasUrl, hasPdq, strategy, maxHashesPerRow)
   }
 
   private def run(
@@ -133,7 +141,7 @@ object DetectDuplicates {
       validateUniqueIndex: Boolean,
       assumeFixed256: Boolean
   ): DataFrame = {
-    val (projected, hasUrl, hasPdq, strategy) = validate(df, method, validateUniqueIndex)
+    val (projected, hasUrl, hasPdq, strategy, _) = validate(df, method, validateUniqueIndex)
     val base = projected.select("index")
 
     val urlDups: Option[DataFrame] =

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.HashFunctions._
 import graft.plans.{HammingDistance, HammingKernelJoin, HammingRadiusBandJoin}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   *
   *  1. explode `pdq_hash: array<string>` to (index, hash) rows
   *     (`pdq_hash.py:163`), dropping nulls (`:156-160`);
-  *  2. drop literal (index, hash) duplicate pairs (`utils.py:55-87`);
+  *  2. drop literal (index, hash) duplicate pairs (`utils.py:55-87`) —
+  *     not as a shuffle of its own: the per-pair dedupe of step 5 and
+  *     of [[edges]] absorbs them;
   *  3. hex -> 256-bit domain (`utils.py:32-52`);
   *  4. similarity join: pairs with Hamming distance <= n where
   *     `n = rint(256 * (1 - threshold))` (`utils.py:19-29`), probes
@@ -135,7 +137,7 @@ object PdqDuplicates {
     run(df, Checked.Frame(checked), similarityThreshold, strategy, assumeFixed256)
 
   /** Shared pipeline prefix of the array formatter and the flat edge
-    * relation: validation, explode+dedupe, canonicalization, probe
+    * relation: validation, explode, canonicalization, probe
     * restriction, and the hash-level similarity join. `None` means an
     * empty-input short-circuit fired — callers emit their own empty
     * frame in their own output schema. */
@@ -179,7 +181,16 @@ object PdqDuplicates {
     * contract). The output shape that scales: no per-row partner
     * arrays quadratic in clique size, and downstream consumers join /
     * aggregate it relationally. Value-equivalent to exploding
-    * [[apply]]'s arrays (asserted in the suite). */
+    * [[apply]]'s arrays (asserted in the suite).
+    *
+    * The index must be unique. Literal (index, hash) pairs are not
+    * deduped before the expansion joins, which stream the exploded
+    * input as it is. With a unique index, only a row listing two or
+    * more hashes (one hash twice, or two spellings of it) can repeat a
+    * pair, and such input takes the `(src, dst)` min-dist aggregate,
+    * where the dedupe happens; the single-hash path skips that
+    * aggregate and relies on the unique index. [[apply]] dedupes in its
+    * formatters. */
   def edges(
       df: DataFrame,
       indexesToCheck: Option[Seq[String]] = None,
@@ -189,12 +200,16 @@ object PdqDuplicates {
   ): DataFrame =
     edgesOf(df, Checked.from(indexesToCheck), similarityThreshold, strategy, assumeFixed256)
 
+  /** [[edges]]; `maxHashesPerRow` is the most hashes on one input row
+    * when the caller already knows it (the uniqueness query of
+    * [[DetectDuplicates.edges]]), else a probe-all call scans for it. */
   private[operators] def edgesOf(
       df: DataFrame,
       checked: Checked,
       similarityThreshold: Double,
       strategy: Strategy,
-      assumeFixed256: Boolean
+      assumeFixed256: Boolean,
+      maxHashesPerRow: Option[Int] = None
   ): DataFrame = {
     val spark = df.sparkSession
     prepare(df, checked, similarityThreshold, strategy, assumeFixed256) match {
@@ -211,23 +226,31 @@ object PdqDuplicates {
           .join(probeIdx.select(col("index").as("src"), col("chash").as("phash")), Seq("phash"))
           .join(indexed.select(col("index").as("dst"), col("chash")), Seq("chash"))
           .select("src", "dst", "dist")
-        // single-hash fast path: with probe = corpus and at most ONE
-        // hash per input row (the common PDQ contract — one hash per
-        // image), every (src, dst) pair reaches `raw` through exactly
-        // one (phash, chash) edge (hashEdges is distinct by
+        // single-hash fast path: with probe = corpus, a unique index and
+        // at most ONE hash per input row (the common PDQ contract — one
+        // hash per image), every (src, dst) pair reaches `raw` through
+        // exactly one (phash, chash) edge (hashEdges is distinct by
         // construction), so the pair-level min-dist dedupe is the
         // identity — and it is the ONLY place the O(Σ clique²) pair
-        // relation crosses an exchange. The probe is one narrow
-        // map-side pass over the input column; the aggregate it
-        // removes shuffles the full pair expansion. At detect_full
-        // scale that is a 100k-row scan traded against a 6M-row
-        // shuffle + hash aggregate; the ratio only grows with clique
-        // size. Multi-hash inputs and checked-subset probes (whose
+        // relation crosses an exchange. The fact costs nothing under
+        // DetectDuplicates, whose uniqueness query observes it on the
+        // scan it already makes; a direct call scans the input column
+        // once for it, a narrow pass traded against a shuffle + hash
+        // aggregate of the full pair expansion (6M rows at detect_full
+        // scale). Multi-hash inputs and checked-subset probes (whose
         // mirror union CAN duplicate pairs) keep the aggregate.
-        val singleHash = checked == Checked.All && {
-          val r = df.agg(max(size(col("pdq_hash")))).head()
-          r.isNullAt(0) || r.getInt(0) <= 1
-        }
+        val (singleHash, why) =
+          if (checked != Checked.All) (false, "checked probes")
+          else {
+            val (widest, source) = maxHashesPerRow match {
+              case Some(w) => (w, "the uniqueness query")
+              case None =>
+                val r = df.agg(max(size(col("pdq_hash")))).head()
+                (if (r.isNullAt(0)) 0 else r.getInt(0).max(0), "its own probe")
+            }
+            (widest <= 1, s"max hashes per row $widest, from $source")
+          }
+        log.info(s"PdqDuplicates.edges: ${if (singleHash) "single-hash" else "pair aggregate"} ($why)")
         val sym = if (checked == Checked.All) raw
           else raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("dist")))
         val deduped =
@@ -269,9 +292,13 @@ object PdqDuplicates {
       case _ => ()
     }
 
-    // steps 1+2: explode + literal-pair dedupe. Spark's explode already
-    // drops nulls and empty arrays (pandas explode emits a NaN row that
-    // the reference later ignores — same effective relation).
+    // step 1: explode. Spark's explode already drops nulls and empty
+    // arrays (pandas explode emits a NaN row that the reference later
+    // ignores — same effective relation). Step 2 has no shuffle of its
+    // own (see [[edges]]): `indexed` stays a narrow map of the input, so
+    // the expansion joins stream on the input's own partitions. A
+    // dedupe shuffle here is small enough for AQE to coalesce into one
+    // partition, which ran the whole expansion in a single task.
     // A4 telemetry twin (`pdq_hash.py:156-160` null-drop count,
     // `:237-255` result count): `observe` rides the existing jobs —
     // metrics surface via QueryExecutionListener, zero extra scans.
@@ -281,7 +308,6 @@ object PdqDuplicates {
       .filter(col("pdq_hash").isNotNull)
       .select(col("index"), explode(col("pdq_hash")).as("hash"))
       .filter(col("hash").isNotNull)
-      .dropDuplicates("index", "hash")
 
     // detection scan: fast path requires 1..64 hex chars AND a clean hex
     // charset — `conv(hex, 16, 10)` silently parses malformed input as 0,
@@ -310,10 +336,9 @@ object PdqDuplicates {
     // parity path = the reference's binary string (distinct hex
     // spellings of the same value collapse in both).
     val toBinUdf = udf(hexToBinaryString _)
-    val indexed = (
+    val indexed =
       if (fixedWidth) exploded.select(col("index"), canonicalHex64(col("hash")).as("chash"))
       else exploded.select(col("index"), toBinUdf(col("hash")).as("chash"))
-    ).dropDuplicates("index", "chash")
 
     val corpusHashes = indexed.select("chash").distinct()
     val probeIdx = checked match {
@@ -436,8 +461,9 @@ object PdqDuplicates {
     *    equality, so the equi-join — for every strategy. This is the
     *    most common real invocation (exact-dup detection at t = 1.0).
     *  - the kernel: the distinct probes, from a bounded collect, packed
-    *    into [[HammingKernelJoin]], with the corpus streaming past them;
-    *    Hamming is symmetric, so the columns swap back. Naive takes it
+    *    into [[HammingKernelJoin]], with the corpus (for probe-all, the
+    *    collected probes themselves) streaming past them; Hamming is
+    *    symmetric, so the columns swap back. Naive takes it
     *    whenever the collect fits the cap, Banded only at n ≥ 64 (no
     *    nibble banding exists there), Auto when the collect fits and
     *    either the pairs — distinct probes × corpus, the collected count
@@ -491,7 +517,12 @@ object PdqDuplicates {
     hashes.filter(_ => fits) match {
       case Some(ps) =>
         logLeg(s"kernel packed=${ps.length}$tests")
-        HammingKernelJoin.join(corpus.select(col("chash").as("phash")), ps, n)
+        // probe-all: the collected probes ARE the distinct corpus, so
+        // they stream themselves, with no second pass over the input
+        val stream =
+          if (probeAll) spark.createDataset(ps.toSeq)(Encoders.STRING).toDF("phash")
+          else corpus.select(col("chash").as("phash"))
+        HammingKernelJoin.join(stream, ps, n)
           .select(col("chash").as("phash"), col("phash").as("chash"), col("dist"))
       case None if n < 64 =>
         logLeg(s"band$tests")

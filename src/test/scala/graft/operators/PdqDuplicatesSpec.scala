@@ -154,7 +154,8 @@ class PdqDuplicatesSpec extends SparkTestBase {
 
   // near-duplicate clusters at spread distances, exact duplicates under
   // several indexes, all-zero-tail hashes (the skewed band keys of black
-  // frames) and a row carrying two hashes
+  // frames), a row carrying two hashes, a row carrying one hash twice and
+  // a row carrying two spellings of one hash (upper case, and unpadded)
   private lazy val propertyRows: Seq[(String, Seq[String])] = {
     val rng = new scala.util.Random(2024)
     def randHex = Seq.fill(64)("0123456789abcdef"(rng.nextInt(16))).mkString
@@ -169,7 +170,10 @@ class PdqDuplicatesSpec extends SparkTestBase {
     val dups = Seq(("d0", Seq(clusters.head._2.head)), ("d1", Seq(clusters.head._2.head)),
       ("d2", Seq(zeroTail.head)))
     val multi = Seq(("m0", Seq(clusters(13)._2.head, flipped(zeroTail(1), 3, rng))))
-    clusters ++ skewed ++ dups ++ multi
+    val leadingZero = "00" + clusters(24)._2.head.drop(2)
+    val repeats = Seq(("r0", Seq(clusters(12)._2.head, clusters(12)._2.head)),
+      ("s0", Seq(leadingZero.toUpperCase, leadingZero.dropWhile(_ == '0'))))
+    clusters ++ skewed ++ dups ++ multi ++ repeats
   }
 
   /** (index, partner, similarity) by a plain-JVM popcount over every
@@ -188,16 +192,23 @@ class PdqDuplicatesSpec extends SparkTestBase {
       import spark.implicits._
       val df = propertyRows.toDF("index", "pdq_hash")
       val all = propertyRows.map(_._1)
-      val subset = Seq("c0-00", "c1-05", "z0", "zf1", "d1", "m0")
+      val subset = Seq("c0-00", "c1-05", "z0", "zf1", "d1", "m0", "r0", "s0")
       cap.foreach(spark.conf.set(PdqDuplicates.KernelMaxCorpusKey, _))
       try for (checked <- Seq(None, Some(subset)); r <- Seq(0, 1, 5, 7, 31, 51, 63, 64, 65)) {
-        val got = PdqDuplicates.edges(df, checked, 1.0 - r / 256.0, s)
-        val plan = got.queryExecution.executedPlan.toString
-        if (r <= 64) assert(!plan.contains("BroadcastNestedLoopJoin"), s"r=$r $checked planned a BNLJ:\n$plan")
+        val t = 1.0 - r / 256.0
+        val edges = PdqDuplicates.edges(df, checked, t, s)
+        val arrays = PdqDuplicates(df, checked, t, s)
+        for (got <- Seq(edges, arrays)) {
+          val plan = got.queryExecution.executedPlan.toString
+          if (r <= 64) assert(!plan.contains("BroadcastNestedLoopJoin"), s"r=$r $checked planned a BNLJ:\n$plan")
+        }
         val want = bruteForce(r, checked.getOrElse(all).toSet)
         assert(want.nonEmpty || r == 0, s"r=$r: vacuous input")
-        assert(got.collect().map(x => (x.getString(0), x.getString(1), x.getDouble(2))).toSet == want,
-          s"r=$r checked=$checked")
+        val edgeRows = edges.collect().toSeq.map(x => (x.getString(0), x.getString(1), x.getDouble(2)))
+        assert(edgeRows.size == edgeRows.toSet.size && edgeRows.toSet == want, s"edges r=$r checked=$checked")
+        val fromArrays = arrays.collect().toSeq.flatMap(x =>
+          x.getSeq[String](1).zip(x.getSeq[Double](2)).map { case (p, sim) => (x.getString(0), p, sim) })
+        assert(fromArrays.size == fromArrays.toSet.size && fromArrays.toSet == want, s"apply r=$r checked=$checked")
       } finally spark.conf.unset(PdqDuplicates.KernelMaxCorpusKey)
     }
 

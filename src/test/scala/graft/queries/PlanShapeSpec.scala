@@ -1,8 +1,13 @@
 package graft.queries
 
 import graft.SparkTestBase
-import org.apache.spark.sql.execution.MapPartitionsExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{MapPartitionsExec, RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, QueryStageExec,
+  ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.HashJoin
 
 /** Physical-plan regression net: the scale story rests on specific plan
   * shapes (banded equi-joins instead of nested loops, broadcasts on
@@ -115,6 +120,52 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("detect_full: Auto costs the distinct hashes and plans HammingKernelJoin") {
     val p = plan("detect_full")
     assert(p.contains("HammingKernelJoin") && !p.contains("BroadcastNestedLoopJoin"), p)
+  }
+
+  test("PDQ edge expansion streams the input's own partitions: no (index, chash) dedupe shuffle") {
+    import org.apache.spark.sql.functions._
+    // single-hash rows over 4 input partitions, 80 distinct hashes at
+    // radius 5 (the kernel leg)
+    val id = col("id")
+    val base = concat(md5(floor(id / 50).cast("string")), md5(concat(floor(id / 50).cast("string"), lit("x"))))
+    val h = when(id % 5 === 0, concat(substring(base, 1, 63),
+      when(substring(base, 64, 1) === "0", "1").otherwise("0"))).otherwise(base)
+    val input = spark.range(0, 4000, 1, 4).select(id.cast("string").as("index"), array(h).as("pdq_hash"))
+    val frames = Seq(
+      "PdqDuplicates.edges" -> graft.operators.PdqDuplicates.edges(input, similarityThreshold = 0.98,
+        strategy = graft.operators.PdqDuplicates.Strategy.Auto, assumeFixed256 = true),
+      "DetectDuplicates.edges" -> graft.operators.DetectDuplicates.edges(input, similarityThreshold = 0.98,
+        method = "auto", assumeFixed256 = true))
+    for ((name, df) <- frames) {
+      assert(df.count() == 4000L * 49, name)
+      val p = df.queryExecution.executedPlan
+      val pairDedupes = collect(p) { case a: HashAggregateExec => a }
+        .filter(_.groupingExpressions.flatMap(_.references.map(_.name)).toSet == Set("index", "chash"))
+      assert(pairDedupes.isEmpty, s"$name: (index, chash) aggregate in the final plan:\n$p")
+      // the two expansion joins are the ones keyed on a hash column; each
+      // streams the input with no exchange on the way down to the scan
+      val expansions = collect(p) { case j: HashJoin if (j.leftKeys ++ j.rightKeys)
+          .exists(_.references.exists(a => a.name == "phash" || a.name == "chash")) => j }
+      assert(expansions.size == 2, s"$name:\n$p")
+      for (j <- expansions) {
+        val path = streamPath(j.asInstanceOf[SparkPlan])
+        assert(path.last.isInstanceOf[RangeExec] && !path.exists(n =>
+          n.isInstanceOf[Exchange] || n.isInstanceOf[ShuffleQueryStageExec] || n.isInstanceOf[AQEShuffleReadExec]),
+          s"$name: the stream side of ${j.nodeName} is not the input's own partitions: " +
+            s"${path.map(_.nodeName).mkString(" <- ")}\n$p")
+      }
+    }
+  }
+
+  /** Nodes from `p` down its stream side to a leaf: the streamed child
+    * of each hash join, the only child of any other node. */
+  private def streamPath(p: SparkPlan): List[SparkPlan] = p match {
+    case j: HashJoin => p :: streamPath(if (j.buildSide == BuildLeft) j.right else j.left)
+    case s: QueryStageExec => p :: streamPath(s.plan)
+    case _ if p.children.isEmpty => p :: Nil
+    case _ =>
+      assert(p.children.size == 1, s"${p.nodeName} has ${p.children.size} children on the stream path")
+      p :: streamPath(p.children.head)
   }
 
   test("kernel queries plan HammingKernelJoin, no MapPartitions lambda") {
