@@ -1,6 +1,9 @@
 package graft.operators
 
+import graft.functions.HashFunctions.{absoluteThreshold, canonicalHex64, validateThreshold, PdqHashLength}
+import graft.functions.UrlFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,9 +20,21 @@ import org.apache.spark.sql.types._
   * itself supports at `__init__.py:62-71` is the only one here), plus
   * `url` and/or `pdq_hash` columns; the index must be unique.
   *
+  * The input is read once. Its projection `(index, base_url, pdq_hash)`
+  * (each url normalized once) sits behind a lazy checkpoint
+  * ([[Materialize]] with `eager = false`, so `spark.graft.materialize`
+  * governs it), and one fact query fills it: a single `groupBy(kind,
+  * key)` over the index keys and the canonical hashes returns the
+  * non-unique indexes, the distinct hashes the kernel packs, and, as
+  * metrics observed on its scan, the widest row and the fixed-width
+  * facts ([[PdqDuplicates.Facts]]). The URL self-join and the PDQ
+  * expansion then read the checkpoint's blocks. The returned frame pins
+  * those blocks until it is unreachable. A literal input (a
+  * `LocalRelation`) is not cut.
+  *
   * @param validateUniqueIndex runs the uniqueness assertion
-  *        (`__init__.py:76-79`) — one extra aggregation over the input;
-  *        disable at scale when uniqueness is guaranteed upstream.
+  *        (`__init__.py:76-79`) on the fact query's shuffle; disable at
+  *        scale when uniqueness is guaranteed upstream.
   */
 object DetectDuplicates {
 
@@ -73,15 +88,15 @@ object DetectDuplicates {
       assumeFixed256: Boolean = false
   ): DataFrame = {
     val checked = Checked.from(indexesToCheck)
-    val (projected, hasUrl, hasPdq, strategy, maxHashesPerRow) = validate(df, method, validateUniqueIndex)
+    val in = validate(df, checked, similarityThreshold, method, validateUniqueIndex, assumeFixed256)
     val urlE: Option[DataFrame] =
-      if (hasUrl) Some(UrlDuplicates.edgesOf(projected.select("index", "url"), checked)
+      if (in.hasUrl) Some(UrlDuplicates.edgesOf(in.cut.select("index", "base_url"), checked)
         .select(col("index"), lit("url").as("kind"), col("partner"),
           lit(null).cast("double").as("similarity")))
       else None
     val pdqE: Option[DataFrame] =
-      if (hasPdq) Some(PdqDuplicates.edgesOf(projected.select("index", "pdq_hash"), checked,
-        similarityThreshold, strategy, assumeFixed256, maxHashesPerRow)
+      if (in.hasPdq) Some(PdqDuplicates.edgesOf(in.cut.select("index", "pdq_hash"), checked,
+        similarityThreshold, in.strategy, assumeFixed256, in.facts)
         .select(col("index"), lit("pdq").as("kind"), col("partner"), col("similarity")))
       else None
     (urlE, pdqE) match {
@@ -92,14 +107,26 @@ object DetectDuplicates {
     }
   }
 
-  /** Shared input validation: projection, required columns, method
-    * dispatch, uniqueness assertion. The uniqueness query also observes
-    * the most hashes on one row (the last value returned; None when the
-    * query did not run over a `pdq_hash` column) on the scan it makes
-    * anyway, which [[PdqDuplicates.edgesOf]] would otherwise scan for;
-    * it brings at most 20 indexes to the driver. */
-  private def validate(df: DataFrame, method: String, validateUniqueIndex: Boolean)
-      : (DataFrame, Boolean, Boolean, PdqDuplicates.Strategy, Option[Int]) = {
+  /** The cut input, its branches, and what the fact query found. */
+  private final case class Input(cut: DataFrame, hasUrl: Boolean, hasPdq: Boolean,
+      strategy: PdqDuplicates.Strategy, facts: Option[PdqDuplicates.Facts])
+
+  /** Non-unique indexes the error names, at most. */
+  private val MaxNamedDupes = 20
+
+  /** Shared input validation: required columns, method dispatch, the
+    * projection and its cut, and the one fact query. The query keys
+    * each index (kind 0, kept when repeated) and, for a probe-all call
+    * the kernel may take, each canonical hash (kind 1, the distinct
+    * ones the kernel packs), and sorts the repeated indexes first, so
+    * hash rows cannot crowd them out of its bound: at most 20 indexes
+    * plus one hash past [[PdqDuplicates.collectLimit]]. The widest row
+    * and the fixed-width facts are metrics observed on its generator's
+    * rows. With no index to validate and no hash to collect it does not
+    * run, and a PDQ branch that needs facts reads them with a plain
+    * aggregate. */
+  private def validate(df: DataFrame, checked: Checked, similarityThreshold: Double, method: String,
+      validateUniqueIndex: Boolean, assumeFixed256: Boolean): Input = {
     val cols = df.columns.toSet
     val hasUrl = cols.contains("url")
     val hasPdq = cols.contains("pdq_hash")
@@ -113,24 +140,57 @@ object DetectDuplicates {
     )
     // fail fast on a bad method name even when pdq_hash is absent
     val strategy = PdqDuplicates.Strategy.fromMethod(method)
+    if (hasPdq) validateThreshold(similarityThreshold)
     val projected = df.select(
       (Seq(col("index")) ++
-        (if (hasUrl) Seq(col("url")) else Nil) ++
+        (if (hasUrl) Seq(UrlFunctions.normalizeUrl(col("url")).as("base_url")) else Nil) ++
         (if (hasPdq) Seq(col("pdq_hash")) else Nil)): _*
     )
-    val maxHashesPerRow = if (!validateUniqueIndex) None else {
-      val widest = Telemetry.name("max_hashes_per_row")
-      val input = if (hasPdq) projected.observe(widest, max(size(col("pdq_hash"))).as("n")) else projected
-      val query = input.groupBy("index").count().filter(col("count") > 1).limit(20)
-      val dupes = query.collect().map(_.getString(0))
-      require(
-        dupes.isEmpty,
-        s"The DataFrame indexes are not unique. Non-unique indexes: ${dupes.mkString(", ")}"
-      )
-      query.queryExecution.observedMetrics.get(widest)
-        .map(r => if (r.isNullAt(0)) 0 else r.getInt(0).max(0))
+    // a literal input stays visible as one (UrlDuplicates.run's empty check)
+    val cut = projected.queryExecution.optimizedPlan match {
+      case _: LocalRelation => projected
+      case _                => Materialize(projected, eager = false)
     }
-    (projected, hasUrl, hasPdq, strategy, maxHashesPerRow)
+    val probeAll = checked == Checked.All
+    val hashBound =
+      if (!hasPdq || !probeAll) 0
+      else PdqDuplicates.collectLimit(df.sparkSession, absoluteThreshold(PdqHashLength, similarityThreshold),
+        strategy, probeAll = true)
+    val observe = hasPdq && (probeAll || !assumeFixed256)
+    val factsName = Telemetry.name("input_facts")
+    val (dupes, observed, distinct) =
+      if (!validateUniqueIndex && hashBound == 0) (Array.empty[String], None, None)
+      else {
+        val entries =
+          if (hasPdq) PdqDuplicates.Facts.entries(cut)
+          else cut.select(lit(0).as("pos"), col("index").cast("string").as("v"))
+        val wanted = (if (validateUniqueIndex) Seq(col("kind") === 0) else Nil) ++
+          (if (hashBound > 0) Seq(col("kind") === 1 && col("key").isNotNull) else Nil)
+        val cols = PdqDuplicates.Facts.columns
+        val query = (if (observe) entries.observe(factsName, cols.head, cols.tail: _*) else entries)
+          .select(when(col("pos") === 0, 0).otherwise(1).as("kind"),
+            when(col("pos") === 0, col("v")).otherwise(canonicalHex64(col("v"))).as("key"))
+          .filter(wanted.reduce(_ || _))
+          .groupBy("kind", "key").count()
+          .filter(col("kind") === 1 || col("count") > 1)
+          .orderBy("kind")
+          .limit((if (validateUniqueIndex) MaxNamedDupes else 0) + (if (hashBound > 0) hashBound + 1 else 0))
+          .select("kind", "key")
+        val rows = query.collect()
+        (rows.takeWhile(_.getInt(0) == 0).take(MaxNamedDupes).map(_.getString(1)),
+          query.queryExecution.observedMetrics.get(factsName),
+          if (hashBound > 0) Some(rows.map(_.getString(1))) else None)
+      }
+    require(
+      dupes.isEmpty,
+      s"The DataFrame indexes are not unique. Non-unique indexes: ${dupes.mkString(", ")}"
+    )
+    // AQE drops the observing node from a plan whose input stage came out
+    // empty, so an empty input reads its facts with a plain aggregate
+    val facts =
+      if (observe) Some(PdqDuplicates.Facts(observed.getOrElse(PdqDuplicates.Facts.aggregate(cut)), distinct))
+      else None
+    Input(cut, hasUrl, hasPdq, strategy, facts)
   }
 
   private def run(
@@ -141,16 +201,16 @@ object DetectDuplicates {
       validateUniqueIndex: Boolean,
       assumeFixed256: Boolean
   ): DataFrame = {
-    val (projected, hasUrl, hasPdq, strategy, _) = validate(df, method, validateUniqueIndex)
-    val base = projected.select("index")
+    val in = validate(df, checked, similarityThreshold, method, validateUniqueIndex, assumeFixed256)
+    val base = in.cut.select("index")
 
     val urlDups: Option[DataFrame] =
-      if (hasUrl) Some(UrlDuplicates.run(projected.select("index", "url"), checked)) else None
+      if (in.hasUrl) Some(UrlDuplicates.run(in.cut.select("index", "base_url"), checked)) else None
 
     val pdqDups: Option[DataFrame] =
-      if (hasPdq)
-        Some(PdqDuplicates.run(projected.select("index", "pdq_hash"), checked, similarityThreshold,
-          strategy, assumeFixed256))
+      if (in.hasPdq)
+        Some(PdqDuplicates.run(in.cut.select("index", "pdq_hash"), checked, similarityThreshold,
+          in.strategy, assumeFixed256, in.facts))
       else None
 
     val nullArr = lit(null).cast(ArrayType(StringType))

@@ -25,10 +25,12 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
   val ModeKey = "spark.graft.materialize"
 
-  def apply(df: DataFrame): DataFrame =
+  /** With `eager = false` no job of its own cuts the lineage: the first
+    * job that reads the frame fills the blocks every later job reads. */
+  def apply(df: DataFrame, eager: Boolean = true): DataFrame =
     df.sparkSession.conf.get(ModeKey, "local") match {
-      case "local"    => df.localCheckpoint()
-      case "reliable" => df.checkpoint()
+      case "local"    => df.localCheckpoint(eager)
+      case "reliable" => df.checkpoint(eager)
       case "none"     => df
       case other => throw new IllegalArgumentException(
         s"$ModeKey must be one of local|reliable|none, got $other")

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.HashFunctions._
 import graft.plans.{HammingDistance, HammingKernelJoin, HammingRadiusBandJoin}
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -65,7 +65,9 @@ import org.apache.spark.sql.types._
   * reference with pad-semantics Hamming, `tests/unit/test_pdq_hash.py:
   * 126-146`) are auto-detected and routed to a binary-string parity
   * path; the fixed-width fast path covers real PDQ data. Pass
-  * `assumeFixed256 = true` to skip the detection scan at scale.
+  * `assumeFixed256 = true` to skip the detection scan at scale;
+  * [[DetectDuplicates]] hands down the [[Facts]] its one pass over the
+  * input observed, so it scans for none of them here.
   */
 object PdqDuplicates {
 
@@ -143,15 +145,18 @@ object PdqDuplicates {
     * frame in their own output schema. */
   private final case class Prep(indexed: DataFrame, probeIdx: DataFrame, hashEdges: DataFrame)
 
+  /** [[apply]]; `facts` are the input's [[Facts]] when the caller
+    * already knows them, else a call that needs them scans for them. */
   private[operators] def run(
       df: DataFrame,
       checked: Checked,
       similarityThreshold: Double,
       strategy: Strategy,
-      assumeFixed256: Boolean
+      assumeFixed256: Boolean,
+      facts: Option[Facts] = None
   ): DataFrame = {
     val spark = df.sparkSession
-    prepare(df, checked, similarityThreshold, strategy, assumeFixed256) match {
+    prepare(df, checked, similarityThreshold, strategy, assumeFixed256, facts) match {
       case None => emptyResult(spark)
       case Some(Prep(indexed, probeIdx, hashEdges)) =>
         val result = if (checked == Checked.All) {
@@ -200,19 +205,17 @@ object PdqDuplicates {
   ): DataFrame =
     edgesOf(df, Checked.from(indexesToCheck), similarityThreshold, strategy, assumeFixed256)
 
-  /** [[edges]]; `maxHashesPerRow` is the most hashes on one input row
-    * when the caller already knows it (the uniqueness query of
-    * [[DetectDuplicates.edges]]), else a probe-all call scans for it. */
+  /** [[edges]]; `facts` as for [[run]]. */
   private[operators] def edgesOf(
       df: DataFrame,
       checked: Checked,
       similarityThreshold: Double,
       strategy: Strategy,
       assumeFixed256: Boolean,
-      maxHashesPerRow: Option[Int] = None
+      facts: Option[Facts] = None
   ): DataFrame = {
     val spark = df.sparkSession
-    prepare(df, checked, similarityThreshold, strategy, assumeFixed256) match {
+    prepare(df, checked, similarityThreshold, strategy, assumeFixed256, facts) match {
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(StructField("index", StringType),
@@ -233,8 +236,8 @@ object PdqDuplicates {
         // construction), so the pair-level min-dist dedupe is the
         // identity — and it is the ONLY place the O(Σ clique²) pair
         // relation crosses an exchange. The fact costs nothing under
-        // DetectDuplicates, whose uniqueness query observes it on the
-        // scan it already makes; a direct call scans the input column
+        // DetectDuplicates, whose fact query observes it on the scan it
+        // already makes; a direct call scans the input column
         // once for it, a narrow pass traded against a shuffle + hash
         // aggregate of the full pair expansion (6M rows at detect_full
         // scale). Multi-hash inputs and checked-subset probes (whose
@@ -242,8 +245,8 @@ object PdqDuplicates {
         val (singleHash, why) =
           if (checked != Checked.All) (false, "checked probes")
           else {
-            val (widest, source) = maxHashesPerRow match {
-              case Some(w) => (w, "the uniqueness query")
+            val (widest, source) = facts match {
+              case Some(f) => (f.widest, "the caller's facts")
               case None =>
                 val r = df.agg(max(size(col("pdq_hash")))).head()
                 (if (r.isNullAt(0)) 0 else r.getInt(0).max(0), "its own probe")
@@ -270,7 +273,8 @@ object PdqDuplicates {
       checked: Checked,
       similarityThreshold: Double,
       strategy: Strategy,
-      assumeFixed256: Boolean
+      assumeFixed256: Boolean,
+      facts: Option[Facts]
   ): Option[Prep] = {
     validateThreshold(similarityThreshold)
 
@@ -309,25 +313,26 @@ object PdqDuplicates {
       .select(col("index"), explode(col("pdq_hash")).as("hash"))
       .filter(col("hash").isNotNull)
 
-    // detection scan: fast path requires 1..64 hex chars AND a clean hex
+    // detection: fast path requires 1..64 hex chars AND a clean hex
     // charset — `conv(hex, 16, 10)` silently parses malformed input as 0,
     // which would fabricate distance-0 duplicates; malformed hashes are
     // routed to the parity UDF path, whose BigInteger parse throws like
-    // the reference (`int(hex, 16)` ValueError). `assumeFixed256 = true`
-    // skips this scan: malformed hex is then undefined behavior, the
-    // caller vouches for canonical 64-char input.
+    // the reference (`int(hex, 16)` ValueError). The facts come from the
+    // caller or from a scan of their own. `assumeFixed256 = true` skips
+    // both: malformed hex is then undefined behavior, the caller vouches
+    // for canonical 64-char input.
     val fixedWidth = assumeFixed256 || {
-      val row = exploded.agg(min(length(col("hash"))), max(length(col("hash"))),
-        max(col("hash").rlike("[^0-9a-fA-F]"))).head()
-      if (row.isNullAt(1)) {
-        // no hashes at all — `pdq_hash.py:134-138` UserWarning twin (the
-        // warn rides the detection scan; with assumeFixed256 the caller
-        // opted out of any pre-scan, so the empty case stays silent and
-        // simply yields the typed empty result)
-        Warnings.warn(log, "The pdq hash series is empty, no duplicates will be found.")
-        return None
+      val f = facts.getOrElse(Facts(Facts.aggregate(df), None))
+      f.lengths match {
+        case None =>
+          // no hashes at all — `pdq_hash.py:134-138` UserWarning twin (the
+          // warn rides the detection; with assumeFixed256 the caller
+          // opted out of any pre-scan, so the empty case stays silent and
+          // simply yields the typed empty result)
+          Warnings.warn(log, "The pdq hash series is empty, no duplicates will be found.")
+          return None
+        case Some((shortest, longest)) => shortest >= 1 && longest <= 64 && !f.nonHex
       }
-      row.getInt(0) >= 1 && row.getInt(1) <= 64 && !row.getBoolean(2)
     }
 
     val n = absoluteThreshold(PdqHashLength, similarityThreshold)
@@ -356,9 +361,56 @@ object PdqDuplicates {
           .crossJoin(corpusHashes)
           .withColumn("dist", hammingUdf(col("phash"), col("chash")))
           .filter(col("dist") <= n)
-      } else hashJoin(probeHashes, corpusHashes, n, strategy, probeAll = checked == Checked.All)
+      } else if (checked == Checked.All)
+        hashJoin(probeHashes, corpusHashes, n, strategy, probeAll = true, facts.flatMap(_.distinct))
+      else hashJoin(probeHashes, corpusHashes, n, strategy)
 
     Some(Prep(indexed, probeIdx, hashEdges))
+  }
+
+  /** What one pass over an input's `pdq_hash` column tells the driver.
+    *
+    * @param widest   the most hashes on one row
+    * @param lengths  the shortest and the longest hash; None when there
+    *                 is no hash
+    * @param nonHex   whether some hash has a character outside [0-9a-fA-F]
+    * @param distinct for a probe-all call, the distinct canonical hashes
+    *                 as [[hashJoin]]'s bounded collect returns them: all
+    *                 of them when there are at most [[collectLimit]],
+    *                 else more than that many. None when not collected. */
+  private[operators] final case class Facts(
+      widest: Int, lengths: Option[(Int, Int)], nonHex: Boolean, distinct: Option[Array[String]])
+
+  private[operators] object Facts {
+
+    /** `(pos, v)` over `(index, pdq_hash)` rows: each row's index at
+      * position 0, then its hashes (nulls included) at 1, 2, …. One
+      * generator yields both the keys of [[DetectDuplicates]]' fact query
+      * and the rows [[columns]] aggregate. */
+    def entries(df: DataFrame): DataFrame =
+      df.select(posexplode(concat(array(col("index").cast("string")),
+        coalesce(col("pdq_hash"), typedLit(Seq.empty[String])))).as(Seq("pos", "v")))
+
+    /** The aggregates behind [[Facts]] over [[entries]]: the widest row
+      * is the largest position, and a hash with a character left after
+      * deleting the hex digits is not hex. Cheap enough to observe on a
+      * pass made anyway: a lambda or a regex costs ~14 µs per row as an
+      * observed metric (an `rlike` tripled the fact query's CPU). */
+    val columns: Seq[Column] = {
+      val hash = when(col("pos") > 0, col("v"))
+      Seq(max(col("pos")), min(length(hash)), max(length(hash)),
+        max(length(translate(hash, "0123456789abcdefABCDEF", "")) > 0))
+    }
+
+    /** The row of [[columns]] over `(index, pdq_hash)` rows, in a job of
+      * its own. */
+    def aggregate(df: DataFrame): Row = entries(df).agg(columns.head, columns.tail: _*).head()
+
+    /** [[Facts]] from a row of [[columns]]. */
+    def apply(row: Row, distinct: Option[Array[String]]): Facts =
+      Facts(if (row.isNullAt(0)) 0 else row.getInt(0).max(0),
+        if (row.isNullAt(2)) None else Some((row.getInt(1), row.getInt(2))),
+        !row.isNullAt(3) && row.getBoolean(3), distinct)
   }
 
   /** Row-count estimate from the optimized plan's statistics — zero
@@ -435,16 +487,21 @@ object PdqDuplicates {
   private[graft] val KernelMaxCorpusKey = "spark.graft.kernelMaxCorpus"
   private[graft] val KernelMaxCorpusDefault: Int = 1 << 20
 
+  private def kernelCap(spark: SparkSession): Int =
+    spark.conf.get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
+
   /** The single-column frame's rows when there are at most `limit`,
     * else None: the bounded `limit(limit+1).collect()` is both the guard
-    * and the kernel's broadcast build. A frame whose row estimate is
-    * over 4× `cap` (the estimate errs upward) is never collected. */
-  private def collectUnder(df: DataFrame, limit: Int, cap: Int): Option[Array[String]] =
-    if (limit <= 0 || estimateRows(df) > BigInt(cap) * 4) None
-    else {
-      val collected = df.limit(limit + 1).collect()
-      if (collected.length > limit) None else Some(collected.map(_.getString(0)))
-    }
+    * and the kernel's broadcast build. `collected` is that collect when
+    * the caller made it already. Without it, a frame whose row estimate
+    * is over 4× `cap` (the estimate errs upward) is never collected. */
+  private def collectUnder(df: DataFrame, limit: Int, cap: Int,
+      collected: Option[Array[String]]): Option[Array[String]] =
+    if (limit <= 0) None
+    else collected
+      .orElse(if (estimateRows(df) > BigInt(cap) * 4) None
+        else Some(df.limit(limit + 1).collect().map(_.getString(0))))
+      .filter(_.length <= limit)
 
   /** Band-key candidates per pair of random hashes at radius `n`: each
     * of the n+1 bands of 256/(n+1) bits collides by chance with
@@ -453,6 +510,36 @@ object PdqDuplicates {
     * (n = 51: ~1.7) banding prunes nothing. */
   private def bandCandidatesPerPair(n: Int): Double = (n + 1) * math.pow(2, -256.0 / (n + 1))
 
+  /** Distinct pairs the kernel scans for `probeCount` distinct probes:
+    * the probes squared for probe-all, else × the corpus's estimate. */
+  private def kernelPairs(probeCount: Int, probeAll: Boolean, corpusRows: => BigInt): BigInt =
+    BigInt(probeCount) * (if (probeAll) BigInt(probeCount) else corpusRows)
+
+  /** Auto's band test: past the pair bound, and the band key's expected
+    * candidates within it. */
+  private def bandWins(pairs: BigInt, n: Int): Boolean =
+    pairs > Strategy.AutoNaiveMaxPairs && BigDecimal(pairs) * bandCandidatesPerPair(n) <= Strategy.AutoNaiveMaxPairs
+
+  /** The most distinct probes [[hashJoin]] packs into the kernel; 0 when
+    * it takes no kernel whatever the count (n = 0, or Banded below 64).
+    * Its bounded collect stops one row past this, and so does a caller
+    * that collects for it ([[Facts.distinct]]). `corpusRows` is read only
+    * when not `probeAll`. */
+  private[operators] def collectLimit(spark: SparkSession, n: Int, strategy: Strategy, probeAll: Boolean,
+      corpusRows: => BigInt = 0): Int = {
+    val cap = kernelCap(spark)
+    val maxPairs = Strategy.AutoNaiveMaxPairs
+    strategy match {
+      case _ if n == 0 => 0
+      case Strategy.Banded if n < 64 => 0
+      case Strategy.Auto if bandWins(kernelPairs(cap, probeAll, corpusRows), n) =>
+        // the candidate test fails up to the cap: only the pair test can pass
+        if (probeAll) math.min(cap, math.sqrt(maxPairs.toDouble).toInt)
+        else (BigInt(maxPairs) / corpusRows.max(1)).min(cap).toInt
+      case _ => cap
+    }
+  }
+
   /** The one Hamming dispatch: (phash, chash, dist) for every pair of a
     * DISTINCT canonical 64-hex probe (`phash`) and corpus hash (`chash`)
     * within `n`; `probeAll` when the probes are the corpus. Legs:
@@ -460,7 +547,8 @@ object PdqDuplicates {
     *  - n = 0: Hamming distance 0 between canonical hashes IS string
     *    equality, so the equi-join — for every strategy. This is the
     *    most common real invocation (exact-dup detection at t = 1.0).
-    *  - the kernel: the distinct probes, from a bounded collect, packed
+    *  - the kernel: the distinct probes, from a bounded collect (or
+    *    `collected`, that collect made by the caller), packed
     *    into [[HammingKernelJoin]], with the corpus (for probe-all, the
     *    collected probes themselves) streaming past them; Hamming is
     *    symmetric, so the columns swap back. Naive takes it
@@ -470,10 +558,10 @@ object PdqDuplicates {
     *    for probe-all, else the corpus's plan estimate — stay within
     *    [[Strategy.AutoNaiveMaxPairs]], or the band key's expected
     *    candidates, pairs × [[bandCandidatesPerPair]], exceed it. The
-    *    collect stops one row past the largest count those tests can
-    *    accept: at radii where the candidate test cannot pass under the
-    *    cap, the largest count the pair test can (√AutoNaiveMaxPairs for
-    *    probe-all), else the cap.
+    *    collect stops one row past [[collectLimit]], the largest count
+    *    those tests can accept: at radii where the candidate test cannot
+    *    pass under the cap, the largest count the pair test can
+    *    (√AutoNaiveMaxPairs for probe-all), else the cap.
     *  - otherwise [[bandedHashJoin]] for n ≤ 63, and for n ≥ 64 the
     *    predicate join `hamming_distance(unhex(phash), unhex(chash)) <=
     *    n`, which [[HammingRadiusBandJoin]] bands at n = 64; n > 64 past
@@ -481,7 +569,7 @@ object PdqDuplicates {
     *
     * Logs one INFO line naming the leg and the counts Auto's tests used. */
   private[graft] def hashJoin(probes: DataFrame, corpus: DataFrame, n: Int, strategy: Strategy,
-      probeAll: Boolean = false): DataFrame = {
+      probeAll: Boolean = false, collected: Option[Array[String]] = None): DataFrame = {
     require(n >= 0 && n <= PdqHashLength, s"radius must be in [0, $PdqHashLength], got $n")
     def logLeg(leg: String): Unit = log.info(s"PdqDuplicates.hashJoin $strategy r=$n: $leg")
     if (n == 0) {
@@ -491,26 +579,14 @@ object PdqDuplicates {
         .select(col("phash"), col("chash"), lit(0).as("dist"))
     }
     val spark = probes.sparkSession
-    val cap = spark.conf.get(KernelMaxCorpusKey, KernelMaxCorpusDefault.toString).toInt
-    val maxPairs = Strategy.AutoNaiveMaxPairs
-    val perPair = bandCandidatesPerPair(n)
     lazy val corpusRows = estimateRows(corpus)
-    def pairs(probeCount: Int): BigInt =
-      BigInt(probeCount) * (if (probeAll) BigInt(probeCount) else corpusRows)
-    def bandWins(pairs: BigInt): Boolean = pairs > maxPairs && BigDecimal(pairs) * perPair <= maxPairs
-    val limit = strategy match {
-      case Strategy.Banded if n < 64 => 0
-      case Strategy.Auto if bandWins(pairs(cap)) =>
-        // the candidate test fails up to the cap: only the pair test can pass
-        if (probeAll) math.min(cap, math.sqrt(maxPairs.toDouble).toInt)
-        else (BigInt(maxPairs) / corpusRows.max(1)).min(cap).toInt
-      case _ => cap
-    }
-    val hashes = collectUnder(probes, limit, cap)
+    val limit = collectLimit(spark, n, strategy, probeAll, corpusRows)
+    val hashes = collectUnder(probes, limit, kernelCap(spark), collected)
     val (fits, tests) = (strategy, hashes) match {
       case (Strategy.Auto, Some(ps)) =>
-        val p = pairs(ps.length)
-        (!bandWins(p), f" (pairs=$p, band candidates=${p.toDouble * perPair}%.3g, max=$maxPairs)")
+        val p = kernelPairs(ps.length, probeAll, corpusRows)
+        (!bandWins(p, n), f" (pairs=$p, band candidates=${p.toDouble * bandCandidatesPerPair(n)}%.3g, " +
+          s"max=${Strategy.AutoNaiveMaxPairs})")
       case (Strategy.Auto, None) => (false, s" (distinct probes over the collect limit of $limit)")
       case (_, ps) => (ps.isDefined, "")
     }

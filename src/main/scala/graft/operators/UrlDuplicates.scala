@@ -36,7 +36,7 @@ object UrlDuplicates {
     *         that have at least one duplicate.
     */
   def apply(df: DataFrame, indexesToCheck: Option[Seq[String]] = None): DataFrame =
-    run(df, Checked.from(indexesToCheck))
+    run(baseUrls(df), Checked.from(indexesToCheck))
 
   /** [[apply]] with the checked set as a DataFrame carrying an `index`
     * column — the checked flag arrives via a join (broadcast when
@@ -44,7 +44,13 @@ object UrlDuplicates {
     * sets keep a sane plan. Bi-directional membership semantics are
     * identical: one checked member qualifies the whole group. */
   def checkedBy(df: DataFrame, checked: DataFrame): DataFrame =
-    run(df, Checked.Frame(checked))
+    run(baseUrls(df), Checked.Frame(checked))
+
+  /** `(index, base_url)`: the url normalized, a null url kept as a null
+    * base url. [[run]] and [[edgesOf]] take this shape, so a caller that
+    * normalized its input already (DetectDuplicates) passes it as is. */
+  private[operators] def baseUrls(df: DataFrame): DataFrame =
+    df.select(col("index"), UrlFunctions.normalizeUrl(col("url")).as("base_url"))
 
   /** Flat duplicate-edge relation `(index, partner)` — one row per
     * ordered pair sharing a base url, both directions present. The
@@ -55,12 +61,11 @@ object UrlDuplicates {
     * whole group). Value-equivalent to exploding [[apply]]'s arrays
     * (asserted in the suite). */
   def edges(df: DataFrame, indexesToCheck: Option[Seq[String]] = None): DataFrame =
-    edgesOf(df, Checked.from(indexesToCheck))
+    edgesOf(baseUrls(df), Checked.from(indexesToCheck))
 
+  /** [[edges]] over [[baseUrls]]' shape. */
   private[operators] def edgesOf(df: DataFrame, checked: Checked): DataFrame = {
-    val norm = df
-      .filter(col("url").isNotNull)
-      .select(col("index"), UrlFunctions.normalizeUrl(col("url")).as("base_url"))
+    val norm = df.filter(col("base_url").isNotNull)
     val qualified = checked match {
       case Checked.All => norm
       case Checked.Literals(seq) =>
@@ -80,6 +85,7 @@ object UrlDuplicates {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** [[apply]] over [[baseUrls]]' shape. */
   private[operators] def run(df: DataFrame, checked: Checked): DataFrame = {
     // `url.py:56-59` empty-series UserWarning twin, fired when emptiness
     // is knowable WITHOUT a scan: the optimized plan folds to an empty
@@ -100,9 +106,8 @@ object UrlDuplicates {
     // the existing jobs, metrics surface via QueryExecutionListener
     val norm = df
       .observe(Telemetry.name("url_input"), count(lit(1)).as("n_rows"),
-        sum(when(col("url").isNull, 1).otherwise(0)).as("n_null_urls"))
-      .filter(col("url").isNotNull)
-      .select(col("index"), UrlFunctions.normalizeUrl(col("url")).as("base_url"))
+        sum(when(col("base_url").isNull, 1).otherwise(0)).as("n_null_urls"))
+      .filter(col("base_url").isNotNull)
 
     // the Frame variant marks checked rows BEFORE the window, so the
     // group flag rides the same single shuffle as the member list

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.SparkTestBase
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-import org.apache.spark.sql.execution.{MapPartitionsExec, RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.{MapPartitionsExec, RDDScanExec, RangeExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, QueryStageExec,
   ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
@@ -123,6 +123,8 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("PDQ edge expansion streams the input's own partitions: no (index, chash) dedupe shuffle") {
+    // PdqDuplicates.edges streams the Range itself; DetectDuplicates.edges
+    // streams its checkpoint of the input, and no Range is left in its plan
     import org.apache.spark.sql.functions._
     // single-hash rows over 4 input partitions, 80 distinct hashes at
     // radius 5 (the kernel leg)
@@ -137,8 +139,12 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "DetectDuplicates.edges" -> graft.operators.DetectDuplicates.edges(input, similarityThreshold = 0.98,
         method = "auto", assumeFixed256 = true))
     for ((name, df) <- frames) {
-      assert(df.count() == 4000L * 49, name)
+      assert(df.collect().length == 4000L * 49, name)
       val p = df.queryExecution.executedPlan
+      val leaf: SparkPlan => Boolean =
+        if (name == "DetectDuplicates.edges") _.isInstanceOf[RDDScanExec] else _.isInstanceOf[RangeExec]
+      if (name == "DetectDuplicates.edges")
+        assert(collect(p) { case r: RangeExec => r }.isEmpty, s"$name: a Range leaf in the final plan:\n$p")
       val pairDedupes = collect(p) { case a: HashAggregateExec => a }
         .filter(_.groupingExpressions.flatMap(_.references.map(_.name)).toSet == Set("index", "chash"))
       assert(pairDedupes.isEmpty, s"$name: (index, chash) aggregate in the final plan:\n$p")
@@ -149,7 +155,7 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(expansions.size == 2, s"$name:\n$p")
       for (j <- expansions) {
         val path = streamPath(j.asInstanceOf[SparkPlan])
-        assert(path.last.isInstanceOf[RangeExec] && !path.exists(n =>
+        assert(leaf(path.last) && !path.exists(n =>
           n.isInstanceOf[Exchange] || n.isInstanceOf[ShuffleQueryStageExec] || n.isInstanceOf[AQEShuffleReadExec]),
           s"$name: the stream side of ${j.nodeName} is not the input's own partitions: " +
             s"${path.map(_.nodeName).mkString(" <- ")}\n$p")
