@@ -118,12 +118,16 @@ object DetectDuplicates {
     * projection and its cut, and the one fact query. The query keys
     * each index (kind 0, kept when repeated) and, for a probe-all call
     * the kernel may take, each canonical hash (kind 1, the distinct
-    * ones the kernel packs), and sorts the repeated indexes first, so
-    * hash rows cannot crowd them out of its bound: at most 20 indexes
-    * plus one hash past [[PdqDuplicates.collectLimit]]. The widest row
-    * and the fixed-width facts are metrics observed on its generator's
-    * rows. With no index to validate and no hash to collect it does not
-    * run, and a PDQ branch that needs facts reads them with a plain
+    * ones the kernel packs), and collects at most 20 indexes plus one
+    * hash past [[PdqDuplicates.collectLimit]] with a plain limit, which
+    * stops reading partitions once it has that many rows. A collect cut
+    * short with fewer than 20 indexes has met more hashes than that
+    * bound, and may have missed a repeated index: a second query over
+    * the filled checkpoint then takes the first 20 repeated indexes in
+    * order, at most 20 from each partition. The widest row and the
+    * fixed-width facts are metrics observed on its generator's rows.
+    * With no index to validate and no hash to collect it does not run,
+    * and a PDQ branch that needs facts reads them with a plain
     * aggregate. */
   private def validate(df: DataFrame, checked: Checked, similarityThreshold: Double, method: String,
       validateUniqueIndex: Boolean, assumeFixed256: Boolean): Input = {
@@ -140,7 +144,10 @@ object DetectDuplicates {
     )
     // fail fast on a bad method name even when pdq_hash is absent
     val strategy = PdqDuplicates.Strategy.fromMethod(method)
-    if (hasPdq) validateThreshold(similarityThreshold)
+    if (hasPdq) {
+      validateThreshold(similarityThreshold)
+      PdqDuplicates.requireStringHashes(df)
+    }
     val projected = df.select(
       (Seq(col("index")) ++
         (if (hasUrl) Seq(UrlFunctions.normalizeUrl(col("url")).as("base_url")) else Nil) ++
@@ -167,19 +174,23 @@ object DetectDuplicates {
         val wanted = (if (validateUniqueIndex) Seq(col("kind") === 0) else Nil) ++
           (if (hashBound > 0) Seq(col("kind") === 1 && col("key").isNotNull) else Nil)
         val cols = PdqDuplicates.Facts.columns
-        val query = (if (observe) entries.observe(factsName, cols.head, cols.tail: _*) else entries)
+        val keys = (if (observe) entries.observe(factsName, cols.head, cols.tail: _*) else entries)
           .select(when(col("pos") === 0, 0).otherwise(1).as("kind"),
             when(col("pos") === 0, col("v")).otherwise(canonicalHex64(col("v"))).as("key"))
           .filter(wanted.reduce(_ || _))
           .groupBy("kind", "key").count()
           .filter(col("kind") === 1 || col("count") > 1)
-          .orderBy("kind")
-          .limit((if (validateUniqueIndex) MaxNamedDupes else 0) + (if (hashBound > 0) hashBound + 1 else 0))
           .select("kind", "key")
+        val named = if (validateUniqueIndex) MaxNamedDupes else 0
+        val limit = named + (if (hashBound > 0) hashBound + 1 else 0)
+        val query = keys.limit(limit)
         val rows = query.collect()
-        (rows.takeWhile(_.getInt(0) == 0).take(MaxNamedDupes).map(_.getString(1)),
-          query.queryExecution.observedMetrics.get(factsName),
-          if (hashBound > 0) Some(rows.map(_.getString(1))) else None)
+        val (indexRows, hashRows) = rows.partition(_.getInt(0) == 0)
+        val indexes =
+          if (rows.length < limit || indexRows.length >= named) indexRows
+          else keys.filter(col("kind") === 0).orderBy("key").limit(named).collect()
+        (indexes.take(named).map(_.getString(1)), query.queryExecution.observedMetrics.get(factsName),
+          if (hashBound > 0) Some(hashRows.map(_.getString(1))) else None)
       }
     require(
       dupes.isEmpty,

@@ -146,7 +146,8 @@ object PdqDuplicates {
   private final case class Prep(indexed: DataFrame, probeIdx: DataFrame, hashEdges: DataFrame)
 
   /** [[apply]]; `facts` are the input's [[Facts]] when the caller
-    * already knows them, else a call that needs them scans for them. */
+    * already knows them, else a call that needs them scans for them
+    * once. */
   private[operators] def run(
       df: DataFrame,
       checked: Checked,
@@ -156,7 +157,8 @@ object PdqDuplicates {
       facts: Option[Facts] = None
   ): DataFrame = {
     val spark = df.sparkSession
-    prepare(df, checked, similarityThreshold, strategy, assumeFixed256, facts) match {
+    lazy val known = facts.getOrElse(Facts(Facts.aggregate(df), None))
+    prepare(df, checked, similarityThreshold, strategy, assumeFixed256, known, facts.flatMap(_.distinct)) match {
       case None => emptyResult(spark)
       case Some(Prep(indexed, probeIdx, hashEdges)) =>
         val result = if (checked == Checked.All) {
@@ -215,7 +217,8 @@ object PdqDuplicates {
       facts: Option[Facts] = None
   ): DataFrame = {
     val spark = df.sparkSession
-    prepare(df, checked, similarityThreshold, strategy, assumeFixed256, facts) match {
+    lazy val known = facts.getOrElse(Facts(Facts.aggregate(df), None))
+    prepare(df, checked, similarityThreshold, strategy, assumeFixed256, known, facts.flatMap(_.distinct)) match {
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(StructField("index", StringType),
@@ -237,22 +240,15 @@ object PdqDuplicates {
         // identity — and it is the ONLY place the O(Σ clique²) pair
         // relation crosses an exchange. The fact costs nothing under
         // DetectDuplicates, whose fact query observes it on the scan it
-        // already makes; a direct call scans the input column
-        // once for it, a narrow pass traded against a shuffle + hash
-        // aggregate of the full pair expansion (6M rows at detect_full
-        // scale). Multi-hash inputs and checked-subset probes (whose
-        // mirror union CAN duplicate pairs) keep the aggregate.
+        // already makes; a direct call reads it from the one [[Facts]]
+        // scan that also serves the fixed-width detection, a narrow pass
+        // traded against a shuffle + hash aggregate of the full pair
+        // expansion (6M rows at detect_full scale). Multi-hash inputs and
+        // checked-subset probes (whose mirror union CAN duplicate pairs)
+        // keep the aggregate.
         val (singleHash, why) =
           if (checked != Checked.All) (false, "checked probes")
-          else {
-            val (widest, source) = facts match {
-              case Some(f) => (f.widest, "the caller's facts")
-              case None =>
-                val r = df.agg(max(size(col("pdq_hash")))).head()
-                (if (r.isNullAt(0)) 0 else r.getInt(0).max(0), "its own probe")
-            }
-            (widest <= 1, s"max hashes per row $widest, from $source")
-          }
+          else (known.widest <= 1, s"max hashes per row ${known.widest}")
         log.info(s"PdqDuplicates.edges: ${if (singleHash) "single-hash" else "pair aggregate"} ($why)")
         val sym = if (checked == Checked.All) raw
           else raw.union(raw.select(col("dst").as("src"), col("src").as("dst"), col("dist")))
@@ -274,19 +270,11 @@ object PdqDuplicates {
       similarityThreshold: Double,
       strategy: Strategy,
       assumeFixed256: Boolean,
-      facts: Option[Facts]
+      facts: => Facts,
+      collected: Option[Array[String]]
   ): Option[Prep] = {
     validateThreshold(similarityThreshold)
-
-    // P5 runtime twin of the reference's element-type validation
-    // (`pdq_hash.py:165-173` raises ValueError on non-string hash
-    // elements): Spark carries the element type in the schema, so the
-    // check is a driver-side schema assertion, not a data scan.
-    df.schema("pdq_hash").dataType match {
-      case ArrayType(StringType, _) => ()
-      case other => throw new IllegalArgumentException(
-        s"pdq_hash must be array<string> (every PDQ hash must be a string), got $other")
-    }
+    requireStringHashes(df)
 
     checked match {
       case Checked.Literals(seq) if seq.isEmpty =>
@@ -322,7 +310,7 @@ object PdqDuplicates {
     // both: malformed hex is then undefined behavior, the caller vouches
     // for canonical 64-char input.
     val fixedWidth = assumeFixed256 || {
-      val f = facts.getOrElse(Facts(Facts.aggregate(df), None))
+      val f = facts
       f.lengths match {
         case None =>
           // no hashes at all — `pdq_hash.py:134-138` UserWarning twin (the
@@ -362,11 +350,22 @@ object PdqDuplicates {
           .withColumn("dist", hammingUdf(col("phash"), col("chash")))
           .filter(col("dist") <= n)
       } else if (checked == Checked.All)
-        hashJoin(probeHashes, corpusHashes, n, strategy, probeAll = true, facts.flatMap(_.distinct))
+        hashJoin(probeHashes, corpusHashes, n, strategy, probeAll = true, collected)
       else hashJoin(probeHashes, corpusHashes, n, strategy)
 
     Some(Prep(indexed, probeIdx, hashEdges))
   }
+
+  /** P5 runtime twin of the reference's element-type validation
+    * (`pdq_hash.py:165-173` raises ValueError on non-string hash
+    * elements): Spark carries the element type in the schema, so the
+    * check is a driver-side schema assertion, not a data scan. */
+  private[operators] def requireStringHashes(df: DataFrame): Unit =
+    df.schema("pdq_hash").dataType match {
+      case ArrayType(StringType, _) => ()
+      case other => throw new IllegalArgumentException(
+        s"pdq_hash must be array<string> (every PDQ hash must be a string), got $other")
+    }
 
   /** What one pass over an input's `pdq_hash` column tells the driver.
     *

@@ -70,6 +70,10 @@ class CheckedFrameSpec extends SparkTestBase {
     val bad = Seq(("A", Seq(1, 2))).toDF("index", "pdq_hash")
     val e = intercept[IllegalArgumentException](PdqDuplicates(bad))
     assert(e.getMessage.contains("must be array<string>"))
+    for (detect <- Seq[DataFrame => DataFrame](DetectDuplicates(_), DetectDuplicates.edges(_))) {
+      val d = intercept[IllegalArgumentException](detect(bad))
+      assert(d.getMessage.contains("must be array<string>"), d.getMessage)
+    }
   }
 
   test("A4 telemetry: observe metrics surface null-drop and result counts") {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Fixtures, SparkTestBase}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -84,29 +84,43 @@ class DetectDuplicatesSpec extends SparkTestBase {
     assert(rows(got) == Fixtures.expectedDetect)
   }
 
-  /** The frame `build` returns and the Spark jobs it started while
-    * building it, counted by a listener on a job group of their own. */
-  private def constructJobs(build: => DataFrame): (DataFrame, Int) = {
+  /** The frame `build` returns, the Spark jobs it started while building
+    * it, and the bytes their result tasks sent to the driver, counted by
+    * a listener on a job group of their own. */
+  private def construct(build: => DataFrame): (DataFrame, Int, Long) = {
     val sc = spark.sparkContext
     val group = s"construct-${java.util.UUID.randomUUID()}"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach(p => seen.add(String.valueOf(p.getProperty("spark.jobGroup.id"))))
+        Option(e.properties).map(p => String.valueOf(p.getProperty("spark.jobGroup.id"))).foreach { g =>
+          if (g == group) e.stageIds.foreach(stages.add(_))
+          seen.add(g)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "construct")
       val df = try build finally sc.clearJobGroup()
       // the bus delivers events in order: once this marker job is seen,
-      // so is every job the build started
+      // so is every job and task the build started
       sc.setJobGroup(s"$group-end", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 10_000_000_000L
       while (!seen.contains(s"$group-end") && System.nanoTime() < deadline) Thread.sleep(20)
       assert(seen.contains(s"$group-end"), "listener events did not arrive")
-      (df, seen.toArray.count(_ == group))
+      (df, seen.toArray.count(_ == group), bytes.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  private def constructJobs(build: => DataFrame): (DataFrame, Int) = {
+    val (df, jobs, _) = construct(build)
+    (df, jobs)
   }
 
   private def withHash(index: String)(f: String => String): Seq[Row] = Fixtures.sampleRows.map {
@@ -158,6 +172,33 @@ class DetectDuplicatesSpec extends SparkTestBase {
       assert(e.getMessage.contains("The DataFrame indexes are not unique") && e.getMessage.contains("R042"),
         e.getMessage)
     } finally spark.conf.unset(PdqDuplicates.KernelMaxCorpusKey)
+  }
+
+  test("bounded fact query: over 50 partitions, the driver gets about its bound of hashes, not every distinct one") {
+    // 200,000 distinct hashes, 4,000 per shuffle partition: under a
+    // kernel cap of 5,000 each partition holds fewer than the fact
+    // query's bound. Past the cap, radius 64 takes the predicate join,
+    // which starts no job of its own while the frame is built
+    val input = spark.range(0, 200000, 1, 8)
+      .select(col("id").cast("string").as("index"), array(sha2(col("id").cast("string"), 256)).as("pdq_hash"))
+    val confs = Seq(PdqDuplicates.KernelMaxCorpusKey -> "5000", "spark.sql.shuffle.partitions" -> "50",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val (got, _, bytes) = construct(DetectDuplicates.edges(input, similarityThreshold = 0.75))
+      // every distinct hash is 64 chars: shipping them all is over 12 MB.
+      // Each result task also sends ~12 KB of metrics
+      assert(bytes < 200000L * 64 / 4, s"$bytes result bytes reached the driver")
+      assert(!got.queryExecution.executedPlan.toString.contains("HammingKernelJoin"))
+      val e = intercept[IllegalArgumentException](DetectDuplicates.edges(
+        input.union(input.filter(col("index") === "123456")), similarityThreshold = 0.75))
+      assert(e.getMessage.contains("The DataFrame indexes are not unique") && e.getMessage.contains("123456"),
+        e.getMessage)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   test("the kernel sees distinct hashes, not rows: 1,000 rows over 100 hashes fit a kernel cap of 100") {
